@@ -153,12 +153,9 @@ object MogQueries {
       // each row fans into ≥ 64-80 decimal dots per corpus pass, so
       // tasks stay well above scheduling cost — capped at the session's
       // parallelism (which the target reaches by ~4 MB of input; the
-      // sf1 single-split case still spreads to every core). The divisor
-      // is a conf so a deployment with pathological single-split inputs
-      // can retune it; the TARGET is always derived from input bytes.
+      // sf1 single-split case still spreads to every core).
       val p = s.sparkContext.defaultParallelism
-      val bytesPerTask = s.conf.getOption("spark.graft.mog.spreadBytesPerTask")
-        .flatMap(_.toLongOption).getOrElse(128L << 10)
+      val bytesPerTask = 128L << 10
       val srcBytes = try {
         val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
         path.getFileSystem(s.sessionState.newHadoopConf()).getContentSummary(path).getLength

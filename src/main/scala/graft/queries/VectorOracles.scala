@@ -24,20 +24,17 @@ private[graft] object VectorOracles {
     * float log2 on either side), builds the full NBitsMax-bit code, and
     * masks it to the low nbits — bit-identical to the Spark side's
     * nbits-plane sum for any corpus size, so the gate holds at every
-    * scale with no env var set. */
+    * scale. */
   def sgnSql(j: Int): String =
     s"""CAST(list_sum(list_transform(list_zip(embedding, [${planes(j).mkString(",")}]),
        |  z -> CAST(CAST(z[1] AS DOUBLE) * z[2] AS DECIMAL(38,12)))) AS DOUBLE) > 0""".stripMargin
   val codeFullSql: String =
     (0 until NBitsMax).map(j => s"CAST(CASE WHEN (${sgnSql(j)}) THEN ${1L << j} ELSE 0 END AS BIGINT)").mkString(" + ")
-  val nbSql: String = envNBits match {
-    case Some(nb) => s"SELECT $nb AS nb"
-    case None =>
-      s"""SELECT COALESCE(MIN(b), $NBitsMax) AS nb
-         |  FROM (SELECT unnest(range($NBitsFloor, ${NBitsMax + 1})) AS b) bs,
-         |       (SELECT count(*) AS n FROM embeddings) c
-         |  WHERE c.n <= $TargetOccupancy * (CAST(1 AS BIGINT) << b)""".stripMargin
-  }
+  val nbSql: String =
+    s"""SELECT COALESCE(MIN(b), $NBitsMax) AS nb
+       |  FROM (SELECT unnest(range($NBitsFloor, ${NBitsMax + 1})) AS b) bs,
+       |       (SELECT count(*) AS n FROM embeddings) c
+       |  WHERE c.n <= $TargetOccupancy * (CAST(1 AS BIGINT) << b)""".stripMargin
   val codesSql: String =
     s"""SELECT vec_id, embedding,
        |(($codeFullSql) & ((CAST(1 AS BIGINT) << nbt.nb) - 1)) AS code,

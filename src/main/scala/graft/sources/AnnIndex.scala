@@ -49,8 +49,6 @@ object AnnIndex {
     * next to the ANN index ([[nbitsOf]]), so probes read the stored
     * quantizer setting rather than re-deriving — the quantizer is index
     * metadata, exactly like the partition layout it determines.
-    * GRAFT_SRP_NBITS remains as an explicit override for A/B runs (it
-    * bypasses the store and keys the stored index by its value).
     * TargetOccupancy=64 keeps expected occupancy ~30× under the d12
     * bucket cap, so verification runs uncapped by default at every
     * shipped scale. Worked examples from the ACTUAL embeddings counts per
@@ -61,9 +59,6 @@ object AnnIndex {
   private[graft] val NBitsFloor = 6
   private[graft] val NBitsMax = 16
   private[graft] val TargetOccupancy = 64L
-  private[graft] val envNBits: Option[Int] = sys.env.get("GRAFT_SRP_NBITS").map(_.toInt)
-  envNBits.foreach(n => require(n >= 1 && n <= NBitsMax,
-    s"GRAFT_SRP_NBITS must be in [1, $NBitsMax] (planes and the oracle's full-width code stop there)"))
 
   /** Smallest bit count keeping expected occupancy ≤ TargetOccupancy —
     * integer-exact, identical to the oracle's SQL derivation. */
@@ -78,7 +73,7 @@ object AnnIndex {
     * and probe can never disagree (a regenerated corpus changes the
     * digest, invalidating setting AND index together). */
   private val nbitsCache = new graft.util.SessionCache[Int]
-  private[graft] def nbitsOf(s: SparkSession, dir: String): Int = envNBits.getOrElse(
+  private[graft] def nbitsOf(s: SparkSession, dir: String): Int =
     nbitsCache.getOrElseUpdate(s, dir) {
       import org.apache.hadoop.fs.Path
       val digest = ArtifactStore.sourceDigest(
@@ -92,7 +87,7 @@ object AnnIndex {
           .coalesce(1).write.mode("overwrite").parquet(path)
       }
       meta.head().getAs[Int]("nbits")
-    })
+    }
 
   private def mdLong(seed: String): Long = graft.functions.MinHashDefaults.mdLong(seed)
 
@@ -224,10 +219,10 @@ object AnnIndex {
       // an object store.
       val digest = ArtifactStore.sourceDigest(
         s, new Path(new Path(dir), "embeddings.parquet"), "ivfidx2")
-      // the quantizer setting is part of the index identity: an env
-      // override must never be served a stored index built at a
-      // different width (the auto-derived value is digest-stable, so
-      // it normally never varies for one digest)
+      // the quantizer setting is part of the index identity: a change
+      // to the width derivation must never be served a stored index
+      // built at a different width (for one derivation the value is
+      // digest-stable)
       val nb = nbitsOf(s, dir)
       // the nb-suffixed family name replaced the bare-digest one when the
       // quantizer width became part of the index identity — age out

@@ -327,8 +327,7 @@ object ArtifactStore {
       }
     }
 
-    val staleMs = s.conf.get("spark.graft.artifact.staleMs",
-      s.conf.get("spark.graft.ann.staleIndexMs", "600000")).toLong
+    val staleMs = s.conf.get("spark.graft.artifact.staleMs", "600000").toLong
 
     val target = resolveLive().getOrElse {
       // stage to a fresh immutable version dir (the expensive part, safe

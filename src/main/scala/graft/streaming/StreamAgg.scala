@@ -18,6 +18,37 @@ import org.apache.spark.sql.streaming.Trigger
  */
 object StreamAgg {
 
+  /** Scratch root for a replay's TEMP checkpoint + sink output. These
+    * live exactly as long as the replay call (deleted in its finally), so
+    * checkpoint durability buys nothing — yet the WAL/commit/state-delta
+    * writes behind it are a measured ~90-270 ms per micro-batch plus
+    * 0.3-0.9 s per no-data finalization batch of pure filesystem traffic
+    * (r16 per-batch accounting). On a local master, default to
+    * memory-backed /dev/shm when writable; any other master keeps the
+    * JVM temp dir, since a cluster's executors write the sink and /dev/shm
+    * is RAM on a shared node. `spark.graft.stream.scratchRoot` overrides
+    * both (a deployment replaying bigger-than-RAM results points it at
+    * fast local disk — and a RESTARTABLE production stream uses a real
+    * durable checkpointLocation, which this path never touches; restart
+    * semantics stay covered by StreamRestartSpec against a real dir).
+    * `None` means the JVM temp dir. */
+  private[graft] def scratchRoot(master: String, configured: Option[String],
+      shmWritable: Boolean): Option[java.nio.file.Path] =
+    configured.map(java.nio.file.Paths.get(_)).orElse(
+      if (master.startsWith("local") && shmWritable) Some(java.nio.file.Paths.get("/dev/shm"))
+      else None)
+
+  private def scratchBase(spark: SparkSession, prefix: String): java.nio.file.Path = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val root = scratchRoot(spark.sparkContext.master,
+      spark.conf.getOption("spark.graft.stream.scratchRoot"),
+      java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
+    root match {
+      case Some(r) => java.nio.file.Files.createTempDirectory(r, "graft_replay_" + prefix)
+      case None => java.nio.file.Files.createTempDirectory("graft_replay_" + prefix)
+    }
+  }
+
   /** The shared replay harness: run `df` to completion with
     * Trigger.AvailableNow (8 state partitions), then return the result
     * through `order`. ONE definition of the sink boilerplate — a harness
@@ -35,59 +66,23 @@ object StreamAgg {
     * localCheckpoint()ed so the scratch files can be deleted eagerly;
     * the temp view/dir cleanup runs in a finally so a failed replay
     * leaks nothing into the shared session. */
-  /** GRAFT_STREAM_PROF=1: print replay-harness section timings (stream
-    * start-to-termination, read-back+checkpoint, scratch cleanup) so the
-    * per-query cost OUTSIDE the micro-batch phases is attributed, not
-    * guessed (the StreamProf main covers the in-trigger phases). */
-  private val profEnabled = sys.env.get("GRAFT_STREAM_PROF").contains("1")
-  private def profMs[T](label: String, prefix: String)(body: => T): T =
-    if (!profEnabled) body
-    else {
-      val t0 = System.nanoTime()
-      try body finally
-        println(f"[sprof-harness] $prefix$label ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-    }
-
-  /** Scratch root for a replay's TEMP checkpoint + sink output. These
-    * live exactly as long as the replay call (deleted in its finally), so
-    * checkpoint durability buys nothing — yet the WAL/commit/state-delta
-    * writes behind it are a measured ~90-270 ms per micro-batch plus
-    * 0.3-0.9 s per no-data finalization batch of pure filesystem traffic
-    * (StreamProf r16 accounting). Default to memory-backed /dev/shm when
-    * writable; `spark.graft.stream.scratchRoot` overrides (a deployment
-    * replaying bigger-than-RAM results points it at fast local disk —
-    * and a RESTARTABLE production stream uses a real durable
-    * checkpointLocation, which this path never touches; restart
-    * semantics stay covered by StreamRestartSpec against a real dir). */
-  private def scratchBase(spark: SparkSession, prefix: String): java.nio.file.Path = {
-    val root = spark.conf.getOption("spark.graft.stream.scratchRoot")
-      .map(java.nio.file.Paths.get(_))
-      .orElse(Some(java.nio.file.Paths.get("/dev/shm"))
-        .filter(p => java.nio.file.Files.isDirectory(p) && java.nio.file.Files.isWritable(p)))
-    root match {
-      case Some(r) => java.nio.file.Files.createTempDirectory(r, "graft_replay_" + prefix)
-      case None => java.nio.file.Files.createTempDirectory("graft_replay_" + prefix)
-    }
-  }
-
   private[graft] def replayToMemory(spark: SparkSession, df: DataFrame, prefix: String,
       outputMode: String)(order: DataFrame => DataFrame): DataFrame =
     if (outputMode == "append") {
       val base = scratchBase(spark, prefix)
       try {
         withStatePartitions(spark, 8) {
-          val q = profMs("start", prefix)(df.writeStream
+          val q = df.writeStream
             .format("parquet")
             .option("path", s"$base/out")
             .option("checkpointLocation", s"$base/ckpt")
             .outputMode("append")
             .trigger(Trigger.AvailableNow())
-            .start())
-          profMs("await", prefix)(q.awaitTermination())
+            .start()
+          q.awaitTermination()
         }
-        profMs("readback", prefix)(
-          order(spark.read.schema(df.schema).parquet(s"$base/out")).localCheckpoint())
-      } finally profMs("cleanup", prefix) {
+        order(spark.read.schema(df.schema).parquet(s"$base/out")).localCheckpoint()
+      } finally {
         val st = java.nio.file.Files.walk(base)
         try st.sorted(java.util.Comparator.reverseOrder())
           .forEach(p => java.nio.file.Files.deleteIfExists(p))
@@ -124,14 +119,11 @@ object StreamAgg {
     * per-batch commit files, so 32 partitions of near-empty state are
     * pure filesystem overhead for these bounded replays. The session
     * conf is restored afterwards (batch queries keep their own setting);
-    * a live deployment sizes this to its key cardinality instead.
-    * `spark.graft.stream.statePartitions` overrides the default for A/B
-    * probes of state-heavy replays (e.g. s06's stream-stream join keeps
-    * both 600k-row sides in state at sf0.1). */
+    * a live deployment sizes this to its key cardinality instead. */
   private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
-    spark.conf.set(key, spark.conf.get("spark.graft.stream.statePartitions", n.toString))
+    spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, old)
   }
 

@@ -10,23 +10,6 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Mark a provably-non-null column as such (`KnownNotNull`). Join keys
-    * and pushed filters get `isnotnull(k)` guards from the optimizer;
-    * when k is an EXPENSIVE projected expression (a literal-argmin encode,
-    * a map-side centroid assignment) the pushed guard re-evaluates the
-    * whole expression below the projection — guide §4.4's duplicated-
-    * evaluation problem on the JVM side. Wrapping the expression
-    * KnownNotNull folds those guards away at analysis time. ONLY for
-    * expressions that cannot return null (argmins over non-empty literal
-    * arrays of non-null structs over non-null inputs) — declaring a
-    * nullable expression not-null produces undefined behavior.
-    * (r16: the argmin sites that motivated this now use the native
-    * [[graft.functions.CodebookArgmin]], whose own nullable=false gives
-    * the same fold; the helper stays for future provably-non-null
-    * composed expressions.) */
-  def knownNotNull(c: Column): Column =
-    column(catalyst.expressions.KnownNotNull(expression(c)))
-
   /** Register a SQL function on a live session (the per-session analog of
     * the GraftExtensions injection used at cluster deploy time). */
   def registerFunction(spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit =

@@ -87,13 +87,13 @@ class IndexRaceSpec extends SparkSpec {
       withScratchDir("graft_idx_stale") { root =>
         val s = spark.newSession()
         s.conf.set("spark.graft.ann.indexDir", "file:" + root)
-        s.conf.set("spark.graft.ann.staleIndexMs", "0") // everything is stale
+        s.conf.set("spark.graft.artifact.staleMs", "0") // everything is stale
         graft.sources.AnnIndex.partitionedIndex(s, sfDir) // builds clean
         val first = liveTarget(root)
         new java.io.File(first, "_SUCCESS").delete() // poison: live → crash leftover
         val s3 = spark.newSession()
         s3.conf.set("spark.graft.ann.indexDir", "file:" + root)
-        s3.conf.set("spark.graft.ann.staleIndexMs", "0")
+        s3.conf.set("spark.graft.artifact.staleMs", "0")
         val rebuilt = graft.sources.AnnIndex.partitionedIndex(s3, sfDir)
         assert(rebuilt.count() == spark.read.parquet(s"$sfDir/embeddings.parquet").count())
         val live = liveTarget(root)

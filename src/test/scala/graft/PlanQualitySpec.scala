@@ -208,23 +208,12 @@ class PlanQualitySpec extends SparkSpec {
     // unwrap to reach the executed file scans and their numFiles metrics
     def executedScans(df: org.apache.spark.sql.DataFrame)
         : Seq[org.apache.spark.sql.execution.FileSourceScanExec] = {
-      def leaves(p: org.apache.spark.sql.execution.SparkPlan)
-          : Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          leaves(a.executedPlan)
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          leaves(q.plan)
-        case other => other.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            leaves(a.executedPlan)
-          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-            leaves(q.plan)
-          case l => Seq(l)
-        }
+      val scans = collection.mutable.Buffer.empty[org.apache.spark.sql.execution.FileSourceScanExec]
+      foreachNode(df.queryExecution.executedPlan) {
+        case (f: org.apache.spark.sql.execution.FileSourceScanExec, _) => scans += f
+        case _ => ()
       }
-      leaves(df.queryExecution.executedPlan).collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }
+      scans.toSeq
     }
 
     // the stored posting tables are partitioned by token-hash bucket; a
@@ -536,8 +525,8 @@ class PlanQualitySpec extends SparkSpec {
       // isnotnull(k) guards and pushes them below the projection — which
       // re-evaluates the full 8-64-dot argmin per row (guide §4.4's
       // duplicated-evaluation problem, JVM side; the r15 before-plans
-      // show it). GraftBridge.knownNotNull marks the keys non-null so
-      // those guards FOLD at analysis time; this pins the folded shape on
+      // show it). CodebookArgmin is declared non-nullable, so those
+      // guards FOLD at analysis time; this pins the folded shape on
       // the FINAL executed (AQE) plans so a Catalyst upgrade can't
       // silently resurrect the double evaluation.
       for (name <- Seq("e05_ivf_coarse_ann", "e06_ivf_lloyd_ann",
@@ -547,7 +536,7 @@ class PlanQualitySpec extends SparkSpec {
                      // spawn a new one and leave this AQE plan un-finalized)
         val offenders = collection.mutable.Buffer.empty[String]
         foreachNode(df.queryExecution.executedPlan) {
-          case f: org.apache.spark.sql.execution.FilterExec
+          case (f: org.apache.spark.sql.execution.FilterExec, _)
               if f.condition.exists(e =>
                 e.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ArrayMin] ||
                 e.isInstanceOf[graft.functions.CodebookArgmin] ||
@@ -571,24 +560,13 @@ class PlanQualitySpec extends SparkSpec {
         df.collect() // drives THIS queryExecution so AQE finalizes stages
         var bare = List.empty[String]
         var spans = List.empty[org.apache.spark.sql.execution.WholeStageCodegenExec]
-        def walk(p: org.apache.spark.sql.execution.SparkPlan, cg: Boolean): Unit = {
-          val (nextCg, kids): (Boolean, Seq[org.apache.spark.sql.execution.SparkPlan]) = p match {
-            case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => (false, Seq(a.executedPlan))
-            case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => (false, Seq(q.plan))
-            case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => (false, Seq(r.child))
-            case w: org.apache.spark.sql.execution.WholeStageCodegenExec => spans = w :: spans; (true, w.children)
-            case i: org.apache.spark.sql.execution.InputAdapter => (false, i.children)
-            case other => (cg, other.children)
-          }
-          p match {
-            case pr: org.apache.spark.sql.execution.ProjectExec
-                if !cg && pr.projectList.exists(_.exists(_.isInstanceOf[graft.functions.CodebookArgmin])) =>
-              bare = s"$name: argmin Project OUTSIDE whole-stage codegen" :: bare
-            case _ => ()
-          }
-          kids.foreach(walk(_, nextCg))
+        foreachNode(df.queryExecution.executedPlan) {
+          case (w: org.apache.spark.sql.execution.WholeStageCodegenExec, _) => spans = w :: spans
+          case (pr: org.apache.spark.sql.execution.ProjectExec, inCodegen)
+              if !inCodegen && pr.projectList.exists(_.exists(_.isInstanceOf[graft.functions.CodebookArgmin])) =>
+            bare = s"$name: argmin Project OUTSIDE whole-stage codegen" :: bare
+          case _ => ()
         }
-        walk(df.queryExecution.executedPlan, cg = false)
         assert(bare.isEmpty, bare.mkString("\n"))
         val argminSpans = spans.filter(_.collect {
           case pr: org.apache.spark.sql.execution.ProjectExec
@@ -618,7 +596,7 @@ class PlanQualitySpec extends SparkSpec {
     }
 
     it("no whole-stage-codegen span compiles past the JVM's 8000-byte JIT cap (representative registry queries)") {
-      // r16 full-registry sweep (SpanSizeDiag) found two spans past the
+      // r16 full-registry codegen sweep found two spans past the
       // cap — the mog encode+LUT fusion (15.9 KB) and d27's inlined
       // band-key chain (9.1 KB) — both of which ran INTERPRETER-SIDE
       // while the plan looked fine. Both are fixed by native expressions
@@ -636,7 +614,7 @@ class PlanQualitySpec extends SparkSpec {
         df.collect()
         var spans = List.empty[org.apache.spark.sql.execution.WholeStageCodegenExec]
         foreachNode(df.queryExecution.executedPlan) {
-          case w: org.apache.spark.sql.execution.WholeStageCodegenExec => spans = w :: spans
+          case (w: org.apache.spark.sql.execution.WholeStageCodegenExec, _) => spans = w :: spans
           case _ => ()
         }
         if (name != "q54_match_pattern")
@@ -653,19 +631,23 @@ class PlanQualitySpec extends SparkSpec {
 
   /** Walk EVERY physical node, descending through the leaf-like wrappers
     * TreeNode.collect stops at: AdaptiveSparkPlanExec (final plan),
-    * query stages, reused exchanges/subqueries, and whole-stage-codegen
-    * spans. Without this, a collect over an executed AQE plan silently
-    * sees only the root wrapper. */
-  private def foreachNode(p: org.apache.spark.sql.execution.SparkPlan)(
-      f: org.apache.spark.sql.execution.SparkPlan => Unit): Unit = {
-    f(p)
-    val kids: Seq[org.apache.spark.sql.execution.SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => Seq(q.plan)
-      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => Seq(r.child)
-      case other => other.children
+    * query stages, reused exchanges, and whole-stage-codegen spans.
+    * Without this, a collect over an executed AQE plan silently sees only
+    * the root wrapper. `f` also gets whether the node runs inside a
+    * codegen span: below a WholeStageCodegenExec and above its
+    * InputAdapters, with no stage boundary in between. */
+  private def foreachNode(p: org.apache.spark.sql.execution.SparkPlan, inCodegen: Boolean = false)(
+      f: (org.apache.spark.sql.execution.SparkPlan, Boolean) => Unit): Unit = {
+    f(p, inCodegen)
+    val (cg, kids): (Boolean, Seq[org.apache.spark.sql.execution.SparkPlan]) = p match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => (false, Seq(a.executedPlan))
+      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => (false, Seq(q.plan))
+      case r: org.apache.spark.sql.execution.exchange.ReusedExchangeExec => (false, Seq(r.child))
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => (true, w.children)
+      case i: org.apache.spark.sql.execution.InputAdapter => (false, i.children)
+      case other => (inCodegen, other.children)
     }
-    kids.foreach(foreachNode(_)(f))
+    kids.foreach(foreachNode(_, cg)(f))
   }
 
   /** Run `body` with AQE forced on (including skew-join and partition

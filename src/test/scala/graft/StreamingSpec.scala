@@ -10,6 +10,20 @@ class StreamingSpec extends SparkSpec {
 
   import spark.implicits._
 
+  it("replay scratch defaults to /dev/shm only under a local master") {
+    val shm = Some(java.nio.file.Paths.get("/dev/shm"))
+    assert(StreamAgg.scratchRoot("local[4]", None, shmWritable = true) == shm)
+    assert(StreamAgg.scratchRoot("local[4]", None, shmWritable = false).isEmpty)
+    // a cluster master falls back to the JVM temp dir even when the
+    // driver's /dev/shm is writable
+    for (m <- Seq("yarn", "spark://host:7077", "k8s://https://host:6443"); w <- Seq(true, false))
+      assert(StreamAgg.scratchRoot(m, None, w).isEmpty, m)
+    // an explicit scratchRoot wins under any master
+    for (m <- Seq("local[*]", "yarn"); w <- Seq(true, false))
+      assert(StreamAgg.scratchRoot(m, Some("/data/scratch"), w) ==
+        Some(java.nio.file.Paths.get("/data/scratch")), m)
+  }
+
   it("hourlyAppend emits closed windows under watermark") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[(java.sql.Timestamp, Double)]

@@ -24,6 +24,7 @@ if not skip_verify:
             print(line)
 
 import duckdb, pyarrow.parquet as pq
+from sysmem import duckdb_memory_limit
 
 # One FRESH connection per compared query (made in the loop below):
 # DuckDB 1.0 accumulates buffer-pool state across heavy queries on one
@@ -36,7 +37,7 @@ os.makedirs("/tmp/duck_spill", exist_ok=True)
 def make_con():
     c = duckdb.connect()
     c.execute("SET temp_directory='/tmp/duck_spill'")
-    c.execute("SET memory_limit='80GB'")
+    c.execute(f"SET memory_limit='{duckdb_memory_limit()}'")
     # window-operator memory scales with threads; 8 is plenty for an
     # oracle run and keeps peak allocation well under the limit on the
     # heavy window oracles (d30/d33's per-doc windowed string_agg at

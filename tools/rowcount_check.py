@@ -36,15 +36,17 @@ else:
     if "[success]" not in out:
         print(out[-4000:]); print(r.stderr[-2000:]); sys.exit(1)
 
-spark_counts = {}
+# [rowcount] <name> <rows> <seconds>, or [rowcount] <name> ERROR <message>
+spark_fields = {}
 for line in out.splitlines():
     if line.startswith("[rowcount] "):
-        _, name, val = line.split(" ", 2)
-        spark_counts[name] = val.strip()
+        _, name, rest = line.split(" ", 2)
+        spark_fields[name] = rest.split()
 
 import duckdb
+from sysmem import duckdb_memory_limit
 con = duckdb.connect()
-con.execute("SET memory_limit='80GB'")
+con.execute(f"SET memory_limit='{duckdb_memory_limit()}'")
 con.execute("SET temp_directory='/tmp/duck_spill'")
 for t in glob.glob(f"{sf}/*.parquet"):
     name = os.path.basename(t)[: -len(".parquet")]
@@ -79,9 +81,10 @@ def count_sql(sql):
 
 fails = []
 for name in names:
-    s = spark_counts.get(name)
-    if s is None or not s.isdigit():
-        fails.append(name); print(f"{name}: SPARK {s or 'missing'}"); continue
+    fields = spark_fields.get(name, [])
+    s = fields[0] if fields else ""
+    if not s.isdigit():
+        fails.append(name); print(f"{name}: SPARK {' '.join(fields) or 'missing'}"); continue
     try:
         (o,) = con.execute(count_sql(oracle[name])).fetchone()
     except Exception as e:
@@ -89,6 +92,7 @@ for name in names:
     ok = int(s) == int(o)
     if not ok:
         fails.append(name)
-    print(f"{name}: {'ok' if ok else 'FAIL'} spark={s} oracle={o}")
+    secs = f" ({fields[1]} s)" if len(fields) > 1 else ""
+    print(f"{name}: {'ok' if ok else 'FAIL'} spark={s} oracle={o}{secs}")
 print(f"\n{len(names) - len(fails)}/{len(names)} ok; fails: {fails}")
 sys.exit(1 if fails else 0)
