@@ -1,31 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection utility: prints the formatted physical plan of selected
   * registry queries (all of them with no names given). Usage:
   * `runMain graft.Explain <sfDir> [queryName ...] [k=v ...]` — `k=v`
-  * args (containing '=') become extra SQL confs, same as [[Probe]], for
-  * A/B-ing optimizer flags against the plan shape. */
+  * args (containing '=') become extra SQL confs, same as [[RowCount]],
+  * for A/B-ing optimizer flags against the plan shape. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val (confArgs, nameArgs) = args.drop(1).partition(_.contains("="))
     val names = nameArgs.toSet
-    val confs = confArgs.toSeq.map { kv =>
-      val Array(k, v) = kv.split("=", 2); (k, v)
-    }
-    val builder = SparkSession.builder()
-      // GraftExtensions injects the optimizer rules into the MAIN
-      // operator-optimization batch (the post-hoc extraOptimizations
-      // fallback runs too late for nested pruning to cascade to scans)
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
+    val spark = RowCount.localSession(confArgs.toSeq)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries
       .filter { case (n, _) => names.isEmpty || names.contains(n) }

@@ -25,22 +25,32 @@ import org.apache.spark.sql.SparkSession
   *     spark.sql.adaptive.coalescePartitions.initialPartitionNum=256
   */
 object RowCount {
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: RowCount <sfDir> <q1,q2,...> [k=v ...]")
-    val sfDir = args(0)
-    val names = args(1).split(',').toSeq
-    val confs = args.drop(2).toSeq.map { kv =>
-      val Array(k, v) = kv.split("=", 2); (k, v)
-    }
+  /** The local session the diagnostic mains (RowCount, [[Explain]]) run
+    * in: `local[n]` with n from `SPARK_GRAFT_CPUS`, else every available
+    * core, and as many shuffle partitions; `confs` are `k=v` SQL confs
+    * applied on top. */
+  private[graft] def localSession(confs: Seq[String]): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val b = SparkSession.builder()
+      // GraftExtensions injects the optimizer rules into the MAIN
+      // operator-optimization batch (the post-hoc extraOptimizations
+      // fallback runs too late for nested pruning to cascade to scans)
       .withExtensions(new graft.functions.GraftExtensions)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    val spark = confs.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
+    confs.foldLeft(b) { (bb, kv) =>
+      val Array(k, v) = kv.split("=", 2); bb.config(k, v)
+    }.getOrCreate()
+  }
+
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: RowCount <sfDir> <q1,q2,...> [k=v ...]")
+    val sfDir = args(0)
+    val names = args(1).split(',').toSeq
+    val spark = localSession(args.drop(2).toSeq)
     spark.sparkContext.setLogLevel("WARN")
     // same warm-up as the bench so first-query numbers are comparable:
     // load the catalog, then batch-resolve live stored artifacts so the

@@ -394,13 +394,6 @@ object SearchQueries {
     * (driver CRC32 mod the same constant). */
   private final val InvBuckets = 64
 
-  /** d31's stored posting table: (tok, doc_id, tf) rows, written once per
-    * corpus digest via [[graft.sources.ArtifactStore]] and PARTITIONED by
-    * the token-hash bucket so probes directory-prune to their terms'
-    * buckets. Rows-not-arrays on purpose: a hot token's posting list
-    * stays splittable across tasks instead of materializing as one giant
-    * array value. Cached per session as a plain parquet reader — nothing
-    * pinned, so [[releaseCaches]] only drops the handle. */
   /** Driver-side bucket of a probe term — ONE definition of the
     * "CRC32 over UTF-8 bytes mod [[InvBuckets]]" contract that must stay
     * bit-identical to the write-side `pmod(crc32(cast binary))` column
@@ -411,25 +404,18 @@ object SearchQueries {
     (c.getValue % InvBuckets).toInt
   }
 
-  private val invCache = new graft.util.SessionCache[DataFrame]
-
   /** Shared posting-artifact builder: digest-keyed ArtifactStore publish
     * of `postings(docs)` rows (must carry a `tok` column), written
     * PARTITIONED by the token-hash bucket [[termBucket]] mirrors. */
   private def buildPostingArtifact(s: SparkSession, dir: String, tag: String, prefix: String)(
       postings: DataFrame => DataFrame): DataFrame =
-    invCache.getOrElseUpdate(s, s"$dir#$prefix") {
-      import org.apache.hadoop.fs.Path
-      val digest = graft.sources.ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "documents.parquet"), tag)
-      graft.sources.ArtifactStore.getOrBuild(
-        s, "spark.graft.artifactDir", s"${prefix}_$digest") { path =>
-        postings(docs(s, dir))
-          .withColumn("bucket",
-            pmod(crc32(col("tok").cast("binary")), lit(InvBuckets.toLong)).cast("int"))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(path)
-      }
+    graft.sources.ArtifactStore.reader(s, "spark.graft.artifactDir",
+        s"${prefix}_${graft.sources.TextIndex.srcDigest(s, dir, tag)}") { path =>
+      postings(docs(s, dir))
+        .withColumn("bucket",
+          pmod(crc32(col("tok").cast("binary")), lit(InvBuckets.toLong)).cast("int"))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(path)
     }
 
   /** d31's posting table: (tok, doc_id, tf) rows. Rows-not-arrays on
@@ -465,21 +451,16 @@ object SearchQueries {
     * only text processed; the merge is a narrow posting-row copy —
     * file-level append/compact at 100 TB, never a re-tokenization). */
   private def rolledPostingIndex(s: SparkSession, dir: String): DataFrame =
-    invCache.getOrElseUpdate(s, s"$dir#invroll") {
-      import org.apache.hadoop.fs.Path
-      val dg = graft.sources.ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "documents.parquet"), "invroll")
-      graft.sources.ArtifactStore.getOrBuild(
-        s, "spark.graft.artifactDir", s"graft_invroll_$dg") { path =>
-        oldPostingIndex(s, dir).select("tok", "doc_id", "tf", "bucket")
-          .unionByName(docs(s, dir).where(pmod(col("doc_id"), lit(10)) === 0)
-            .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-            .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
-            .withColumn("bucket",
-              pmod(crc32(col("tok").cast("binary")), lit(InvBuckets.toLong)).cast("int")))
-          .repartition(col("bucket"))
-          .write.mode("overwrite").partitionBy("bucket").parquet(path)
-      }
+    graft.sources.ArtifactStore.reader(s, "spark.graft.artifactDir",
+        s"graft_invroll_${graft.sources.TextIndex.srcDigest(s, dir, "invroll")}") { path =>
+      oldPostingIndex(s, dir).select("tok", "doc_id", "tf", "bucket")
+        .unionByName(docs(s, dir).where(pmod(col("doc_id"), lit(10)) === 0)
+          .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
+          .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf"))
+          .withColumn("bucket",
+            pmod(crc32(col("tok").cast("binary")), lit(InvBuckets.toLong)).cast("int")))
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(path)
     }
 
   /** d35's stored NORMS table: (doc_id, dl) — token count per document,
@@ -489,17 +470,12 @@ object SearchQueries {
     * so its access pattern is a narrow columnar scan, never a directory
     * probe. Same digest/pointer lifecycle as the posting artifacts. */
   private def docLengths(s: SparkSession, dir: String): DataFrame =
-    invCache.getOrElseUpdate(s, s"$dir#norms") {
-      import org.apache.hadoop.fs.Path
-      val digest = graft.sources.ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "documents.parquet"), "norms")
-      graft.sources.ArtifactStore.getOrBuild(
-        s, "spark.graft.artifactDir", s"graft_norms_$digest") { path =>
-        docs(s, dir)
-          .select(col("doc_id"),
-            size(split(col("text"), " ")).cast("bigint").as("dl"))
-          .write.mode("overwrite").parquet(path)
-      }
+    graft.sources.ArtifactStore.reader(s, "spark.graft.artifactDir",
+        s"graft_norms_${graft.sources.TextIndex.srcDigest(s, dir, "norms")}") { path =>
+      docs(s, dir)
+        .select(col("doc_id"),
+          size(split(col("text"), " ")).cast("bigint").as("dl"))
+        .write.mode("overwrite").parquet(path)
     }
 
   /** Session-start warm hook (resolve-only — see [[graft.services.Warm]]):
@@ -507,8 +483,7 @@ object SearchQueries {
     * [[graft.sources.TextIndex.warmResolve]]: absent families are skipped, never
     * built. */
   private[graft] def warmResolve(s: SparkSession, dir: String): Seq[(String, () => Unit)] = {
-    def dg(tag: String) = graft.sources.ArtifactStore.sourceDigest(
-      s, new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir), "documents.parquet"), tag)
+    def dg(tag: String) = graft.sources.TextIndex.srcDigest(s, dir, tag)
     def live(name: String) = graft.sources.ArtifactStore.isLive(
       s, "spark.graft.artifactDir", name)
     Seq(
@@ -523,13 +498,9 @@ object SearchQueries {
         live(s"graft_invroll_${dg("invroll")}")) { rolledPostingIndex(s, dir); () }))
   }
 
-  /** Drop this session's cached handles (bench inter-family release):
-    * the window-hash table is a localCheckpoint — unpersist its blocks;
-    * posting/norms entries are parquet-artifact readers — dropping the
-    * reference suffices (the on-disk artifact is reused via its
-    * pointer). */
+  /** Drop this session's window-hash checkpoint and free its blocks
+    * (bench inter-family release; rebuilds lazily). The posting/norms
+    * readers ([[graft.sources.ArtifactStore.reader]]) are kept. */
   def releaseCaches(s: SparkSession): Unit =
-    // invCache (posting-artifact readers) is KEPT — bare parquet plans;
-    // see TextQueries.releaseCaches for the measured re-resolve cost
     winCache.removeAll(s).foreach(GraftBridge.unpersistLocalCheckpoint)
 }

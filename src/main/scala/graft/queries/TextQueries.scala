@@ -164,12 +164,8 @@ object TextQueries {
     * pairs, verified pairs, d27 batch-side blocks) and free their
     * blocks. The bench harness calls this between query families so one
     * family's retained blocks don't tax the next family's timings; the
-    * caches rebuild lazily on next use. The STORED-artifact readers
-    * ([[TextIndex]]'s sig/chunk/corpus-index caches) are deliberately
-    * KEPT: they are bare parquet plans pinning zero executor memory, and
-    * re-resolving one costs ~0.14 s of pointer/footer/GC-sweep I/O per
-    * family re-entry (measured on d27's re-run slot, r13) — a serving
-    * session keeps its index readers open for its lifetime. */
+    * caches rebuild lazily on next use. The stored-artifact readers
+    * ([[graft.sources.ArtifactStore.reader]]) are kept. */
   def releaseCaches(s: SparkSession): Unit =
     Seq(candCache, verCache, d27Cache).foreach(
       _.removeAll(s).foreach(GraftBridge.unpersistLocalCheckpoint))

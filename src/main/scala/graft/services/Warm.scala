@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /**
  * Session-start artifact warm-up: batch-resolve every stored index family
  * that is ALREADY LIVE under the configured artifact roots, in parallel,
- * into the session's caches.
+ * into the session's readers ([[graft.sources.ArtifactStore.reader]]).
  *
  * Why: each stored family (MinHash signatures, LSH bands, posting/
  * positional/norms tables, CDC chunks, the d27 corpus index, the SRP
@@ -20,14 +20,14 @@ import org.apache.spark.sql.SparkSession
  * Strictly resolve-only: a family whose artifact does not exist is
  * skipped (never built — a cold root warms in milliseconds and the first
  * real query pays the build exactly as before), so warming never moves
- * index-BUILD cost out of measured queries. Thread-safety: the session
- * caches deduplicate builds per (session, key) behind lazy holders
- * ([[graft.util.SessionCache]]), so a real query racing the warm-up
- * simply shares the same resolve.
+ * index-BUILD cost out of measured queries. Thread-safety: the reader
+ * memo and the checkpoint caches deduplicate resolves per (session, key)
+ * behind lazy holders ([[graft.util.SessionCache]]), so a real query
+ * racing the warm-up simply shares the same resolve.
  */
 object Warm {
 
-  /** Resolve all live stored families for `dir` into `s`'s caches.
+  /** Resolve all live stored families for `dir` into `s`'s readers.
     * Failures are swallowed per-family (warm-up must never fail a
     * session); returns the hooks that completed without error (a hook
     * whose artifact is absent completes as a no-op). */

@@ -38,6 +38,12 @@ object AnnIndex {
 
   private[graft] val Dim = 64
 
+  /** Source digest of the corpus' embeddings table under `tag` — the
+    * identity every vector-side artifact name carries. */
+  private def embDigest(s: SparkSession, dir: String, tag: String): String =
+    ArtifactStore.sourceDigest(s,
+      new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir), "embeddings.parquet"), tag)
+
   // -------------------------------------------------- SRP coarse quantizer
   /** Hyperplane count — THE corpus-scale knob (buckets = 2^nbits, expected
     * occupancy = N/2^nbits) — is DERIVED FROM THE CORPUS at index-build
@@ -75,11 +81,8 @@ object AnnIndex {
   private val nbitsCache = new graft.util.SessionCache[Int]
   private[graft] def nbitsOf(s: SparkSession, dir: String): Int =
     nbitsCache.getOrElseUpdate(s, dir) {
-      import org.apache.hadoop.fs.Path
-      val digest = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "srpmeta")
-      val meta = ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_srp_meta_$digest") { path =>
+      val meta = ArtifactStore.reader(
+        s, "spark.graft.ann.indexDir", s"graft_srp_meta_${embDigest(s, dir, "srpmeta")}") { path =>
         import s.implicits._
         val n = emb(s, dir).count()
         Seq((deriveNBits(n), n, NBitsMax, TargetOccupancy))
@@ -179,12 +182,9 @@ object AnnIndex {
     // partition column round-trips as a directory key (inferred int) —
     // restore the canonical column order and long type.
     codedCache.getOrElseUpdate(s, dir) {
-      import org.apache.hadoop.fs.Path
       val nb = nbitsOf(s, dir)
-      val digest = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "ivfidx2")
       if (ArtifactStore.isLive(
-            s, "spark.graft.ann.indexDir", s"graft_ivf_idx_${nb}_$digest"))
+            s, "spark.graft.ann.indexDir", s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}"))
         // COALESCE before checkpointing: the stored layout is one small
         // file per code directory (2^nbits of them — 4096 at sf10), and
         // localCheckpoint freezes the scan's partitioning, so without
@@ -206,24 +206,19 @@ object AnnIndex {
     * a scratch dir keyed by a strong digest of the data dir, once per
     * (session, dir); a 100 TB deployment keeps exactly this table (plus
     * the norm column) as its ANN index. */
-  private val idxCache = new graft.util.SessionCache[DataFrame]
-  private[graft] def partitionedIndex(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, dir) {
-      import org.apache.hadoop.fs.Path
-      // Concurrency-safe resolve-or-build via the shared stored-artifact
-      // protocol (ArtifactStore: versioned dirs + atomic raw-FS pointer;
-      // stress-covered by IndexRaceSpec). The digest covers the SOURCE
-      // FILE's size+mtime, so regenerated data at the same path
-      // invalidates the index; the root is configurable
-      // (spark.graft.ann.indexDir, default local tmp) and may be HDFS or
-      // an object store.
-      val digest = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "ivfidx2")
-      // the quantizer setting is part of the index identity: a change
-      // to the width derivation must never be served a stored index
-      // built at a different width (for one derivation the value is
-      // digest-stable)
-      val nb = nbitsOf(s, dir)
+  private[graft] def partitionedIndex(s: SparkSession, dir: String): DataFrame = {
+    // Concurrency-safe resolve-or-build via the shared stored-artifact
+    // protocol (ArtifactStore: versioned dirs + atomic raw-FS pointer;
+    // stress-covered by IndexRaceSpec). The digest covers the SOURCE
+    // FILE's size+mtime, so regenerated data at the same path
+    // invalidates the index; the root is configurable
+    // (spark.graft.ann.indexDir, default local tmp) and may be HDFS or
+    // an object store. The quantizer setting is part of the index
+    // identity: a change to the width derivation must never be served a
+    // stored index built at a different width (for one derivation the
+    // value is digest-stable).
+    val nb = nbitsOf(s, dir)
+    val sweeps = () => {
       // the nb-suffixed family name replaced the bare-digest one when the
       // quantizer width became part of the index identity — age out
       // artifacts stranded under the old names (digest-only: 16 hex
@@ -237,22 +232,22 @@ object AnnIndex {
       // letting a full-size index double the root's disk for the 7-day
       // orphan horizon
       ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
-        s"graft_ivf_idx_${nb}_" + ArtifactStore.sourceDigest(
-          s, new Path(new Path(dir), "embeddings.parquet"), "ivfidx"))
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_ivf_idx_${nb}_$digest") { path =>
-        // repartition BY the partition column before the partitioned
-        // write: without it every write task emits one file into every
-        // code directory it holds rows for — tasks × 2^nbits tiny files
-        // (measured at sf10: 55k files across 4096 dirs; a radius-2
-        // probe opened ~1k files and cost ~6 s instead of ~0.7). With
-        // it each code's rows land in exactly one task → ONE file per
-        // directory, and the probe opens exactly its ball's files.
-        // (SearchQueries' posting artifacts established this pattern.)
-        codedVectors(s, dir).repartition(col("code"))
-          .write.mode("overwrite").partitionBy("code").parquet(path)
-      }
+        s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx")}")
     }
+    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
+        s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}", sweeps) { path =>
+      // repartition BY the partition column before the partitioned
+      // write: without it every write task emits one file into every
+      // code directory it holds rows for — tasks × 2^nbits tiny files
+      // (measured at sf10: 55k files across 4096 dirs; a radius-2
+      // probe opened ~1k files and cost ~6 s instead of ~0.7). With
+      // it each code's rows land in exactly one task → ONE file per
+      // directory, and the probe opens exactly its ball's files.
+      // (SearchQueries' posting artifacts established this pattern.)
+      codedVectors(s, dir).repartition(col("code"))
+        .write.mode("overwrite").partitionBy("code").parquet(path)
+    }
+  }
 
   // ------------------------------------------------------------ JL sketch
   /** e12's JL sketch width and its ±1 sign matrix (Achlioptas-style
@@ -273,16 +268,10 @@ object AnnIndex {
     * coordinate is a decimal-exact ±sum of float elements cast float32
     * (IEEE round-to-nearest, identical in both engines), so the stored
     * sketch is bit-stable across partitionings and rebuilds. */
-  private val jlCache = new graft.util.SessionCache[DataFrame]
   private[graft] def jlSketch(s: SparkSession, dir: String): DataFrame =
-    jlCache.getOrElseUpdate(s, dir) {
-      import org.apache.hadoop.fs.Path
-      val digest = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "jlsketch")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_jl_$digest") { path =>
-        jlProjection(emb(s, dir)).write.mode("overwrite").parquet(path)
-      }
+    ArtifactStore.reader(
+      s, "spark.graft.ann.indexDir", s"graft_jl_${embDigest(s, dir, "jlsketch")}") { path =>
+      jlProjection(emb(s, dir)).write.mode("overwrite").parquet(path)
     }
 
   /** The per-row (vec_id, pvec) projection [[jlSketch]] stores — factored
@@ -408,18 +397,13 @@ object AnnIndex {
     * hash-matches. e06b keeps training live on purpose — it IS the
     * training-loop diagnostic. */
   private[graft] def trainedCentroids(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#cents1") {
-      import org.apache.hadoop.fs.Path
-      val digest = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "cents1")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_cents1_$digest") { path =>
-        // derived from the STORED iteration-1 sums (one K-row reduce, no
-        // corpus pass when the sums artifact is live) — centsFromSums of
-        // lloydSums1 IS lloydIterate(coded, seeds), by definition
-        centsFromSums(lloydSums1(s, dir))
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      }
+    ArtifactStore.reader(
+      s, "spark.graft.ann.indexDir", s"graft_cents1_${embDigest(s, dir, "cents1")}") { path =>
+      // derived from the STORED iteration-1 sums (one K-row reduce, no
+      // corpus pass when the sums artifact is live) — centsFromSums of
+      // lloydSums1 IS lloydIterate(coded, seeds), by definition
+      centsFromSums(lloydSums1(s, dir))
+        .coalesce(1).write.mode("overwrite").parquet(path)
     }
 
   /** The iteration-1 Lloyd component-sum table (cid, pos, sv — K×Dim
@@ -434,16 +418,11 @@ object AnnIndex {
     * pass and the oracle — which retrains both iterations from raw
     * embeddings — still hash-matches. */
   private[graft] def lloydSums1(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#lsums1") {
-      import org.apache.hadoop.fs.Path
-      val digest = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "lsums1")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_lsums1_$digest") { path =>
-        val coded = codedVectors(s, dir)
-        lloydSums(coded, seedCentroids(coded))
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      }
+    ArtifactStore.reader(
+      s, "spark.graft.ann.indexDir", s"graft_lsums1_${embDigest(s, dir, "lsums1")}") { path =>
+      val coded = codedVectors(s, dir)
+      lloydSums(coded, seedCentroids(coded))
+        .coalesce(1).write.mode("overwrite").parquet(path)
     }
 
   // --------------------------------------- frozen-quantizer roll (e13)
@@ -456,45 +435,35 @@ object AnnIndex {
   /** e13's stored OLD-corpus coded index (see the e13 entry for the
     * lifecycle story): coded at the frozen width, partitioned by code. */
   private[graft] def annOldIndex(s: SparkSession, dir: String, nbOld: Int): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#annold") {
-      import org.apache.hadoop.fs.Path
-      val src = new Path(new Path(dir), "embeddings.parquet")
-      val dg = ArtifactStore.sourceDigest(s, src, "annold2")
-      // annold→annold2 tag bump: see partitionedIndex — reclaim the
-      // computable old-tag family without waiting the orphan horizon
-      ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
-        s"graft_annold_${nbOld}_" + ArtifactStore.sourceDigest(s, src, "annold"))
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_annold_${nbOld}_$dg") { path =>
-        codeVectors(emb(s, dir).where(pmod(col("vec_id"), lit(10)) =!= 0), nbOld)
-          .repartition(col("code")) // one file per code dir, see partitionedIndex
-          .write.mode("overwrite").partitionBy("code").parquet(path)
-      }
+    // annold→annold2 tag bump: see partitionedIndex — reclaim the
+    // computable old-tag family without waiting the orphan horizon
+    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
+        s"graft_annold_${nbOld}_${embDigest(s, dir, "annold2")}",
+        () => ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
+          s"graft_annold_${nbOld}_${embDigest(s, dir, "annold")}")) { path =>
+      codeVectors(emb(s, dir).where(pmod(col("vec_id"), lit(10)) =!= 0), nbOld)
+        .repartition(col("code")) // one file per code dir, see partitionedIndex
+        .write.mode("overwrite").partitionBy("code").parquet(path)
     }
 
   /** e13's ROLLED index: stored old-corpus artifact unioned with codes
     * computed from the delta vectors only (the frozen-quantizer
     * add()-path; delta-proportional build cost). */
   private[graft] def annRolledIndex(s: SparkSession, dir: String, nbOld: Int): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#annroll") {
-      import org.apache.hadoop.fs.Path
-      val src = new Path(new Path(dir), "embeddings.parquet")
-      val dg = ArtifactStore.sourceDigest(s, src, "annroll2")
-      // annroll→annroll2 tag bump: see partitionedIndex
-      ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
-        s"graft_annroll_${nbOld}_" + ArtifactStore.sourceDigest(s, src, "annroll"))
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_annroll_${nbOld}_$dg") { path =>
-        // the artifact's partition column reads back as the narrowest
-        // inferred type — normalize to the coder's LONG before union
-        annOldIndex(s, dir, nbOld)
-          .select(col("vec_id"), col("embedding"), col("norm"),
-            col("code").cast("long").as("code"))
-          .unionByName(codeVectors(emb(s, dir).where(pmod(col("vec_id"), lit(10)) === 0), nbOld)
-            .select("vec_id", "embedding", "norm", "code"))
-          .repartition(col("code")) // one file per code dir, see partitionedIndex
-          .write.mode("overwrite").partitionBy("code").parquet(path)
-      }
+    // annroll→annroll2 tag bump: see partitionedIndex
+    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
+        s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll2")}",
+        () => ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
+          s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll")}")) { path =>
+      // the artifact's partition column reads back as the narrowest
+      // inferred type — normalize to the coder's LONG before union
+      annOldIndex(s, dir, nbOld)
+        .select(col("vec_id"), col("embedding"), col("norm"),
+          col("code").cast("long").as("code"))
+        .unionByName(codeVectors(emb(s, dir).where(pmod(col("vec_id"), lit(10)) === 0), nbOld)
+          .select("vec_id", "embedding", "norm", "code"))
+        .repartition(col("code")) // one file per code dir, see partitionedIndex
+        .write.mode("overwrite").partitionBy("code").parquet(path)
     }
 
   // --------------------------------------------- product quantization (e08)
@@ -537,15 +506,10 @@ object AnnIndex {
     * [[seedSubCodebooks]] over the raw embeddings, built once per corpus
     * digest. */
   private[graft] def pqCodebooks(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#pqcb") {
-      import org.apache.hadoop.fs.Path
-      val dg = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "pqcb")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_pq_cb_$dg") { path =>
-        seedSubCodebooks(emb(s, dir), "embedding", "pq")
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      }
+    ArtifactStore.reader(
+      s, "spark.graft.ann.indexDir", s"graft_pq_cb_${embDigest(s, dir, "pqcb")}") { path =>
+      seedSubCodebooks(emb(s, dir), "embedding", "pq")
+        .coalesce(1).write.mode("overwrite").parquet(path)
     }
 
   /** The codebooks as driver-side values (M×KSub entries, a bounded
@@ -613,16 +577,11 @@ object AnnIndex {
     * corpus scan); e08 probes are LUT joins against this table and never
     * re-encode (the last ANN family to get the train()/add() split). */
   private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#pqcodes") {
-      import org.apache.hadoop.fs.Path
-      val dg = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "pqcodes")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_pq_codes_$dg") { path =>
-        val cb = collectedCodebooks(s, dir)
-        emb(s, dir).select(col("vec_id") +: pqEncodeColumns(cb): _*)
-          .write.mode("overwrite").parquet(path)
-      }
+    ArtifactStore.reader(
+      s, "spark.graft.ann.indexDir", s"graft_pq_codes_${embDigest(s, dir, "pqcodes")}") { path =>
+      val cb = collectedCodebooks(s, dir)
+      emb(s, dir).select(col("vec_id") +: pqEncodeColumns(cb): _*)
+        .write.mode("overwrite").parquet(path)
     }
 
   // ----------------------------- residual PQ (e16 — IVFPQ with residuals)
@@ -654,15 +613,10 @@ object AnnIndex {
     * quantizer's resolution inside the coarse bucket, which is exactly
     * why production IVFPQ encodes residuals, not raw vectors. */
   private[graft] def rpqCodebooks(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#rpqcb") {
-      import org.apache.hadoop.fs.Path
-      val dg = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "rpqcb")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_rpq_cb_$dg") { path =>
-        seedSubCodebooks(residualVectors(s, dir), "rvec", "rpq")
-          .coalesce(1).write.mode("overwrite").parquet(path)
-      }
+    ArtifactStore.reader(
+      s, "spark.graft.ann.indexDir", s"graft_rpq_cb_${embDigest(s, dir, "rpqcb")}") { path =>
+      seedSubCodebooks(residualVectors(s, dir), "rvec", "rpq")
+        .coalesce(1).write.mode("overwrite").parquet(path)
     }
 
   /** The residual codebooks as driver-side values (bounded M×KSub-row
@@ -676,18 +630,13 @@ object AnnIndex {
     * buckets and what it scans is M small ints per row. Encoded once per
     * corpus digest with [[pqEncodeColumnsOn]] over the residuals. */
   private[graft] def rpqCodes(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#rpqcodes") {
-      import org.apache.hadoop.fs.Path
-      val dg = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "rpqcodes")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_rpq_codes_$dg") { path =>
-        val cb = collectedRpqCodebooks(s, dir)
-        residualVectors(s, dir)
-          .select(Seq(col("vec_id"), col("cid")) ++ pqEncodeColumnsOn(cb, "rvec"): _*)
-          .repartition(col("cid")) // one file per cid dir, see partitionedIndex
-          .write.mode("overwrite").partitionBy("cid").parquet(path)
-      }
+    ArtifactStore.reader(
+      s, "spark.graft.ann.indexDir", s"graft_rpq_codes_${embDigest(s, dir, "rpqcodes")}") { path =>
+      val cb = collectedRpqCodebooks(s, dir)
+      residualVectors(s, dir)
+        .select(Seq(col("vec_id"), col("cid")) ++ pqEncodeColumnsOn(cb, "rvec"): _*)
+        .repartition(col("cid")) // one file per cid dir, see partitionedIndex
+        .write.mode("overwrite").partitionBy("cid").parquet(path)
     }
 
   /** The COMBINED IVF-PQ index (e14 — the FAISS IVFPQ layout): every
@@ -699,18 +648,12 @@ object AnnIndex {
     * build-time join of the two stored artifacts (codes ⋈ coded on
     * vec_id); keyed by the quantizer width like the IVF index. */
   private[graft] def ivfPqIndex(s: SparkSession, dir: String): DataFrame =
-    idxCache.getOrElseUpdate(s, s"$dir#ivfpq") {
-      import org.apache.hadoop.fs.Path
-      val nb = nbitsOf(s, dir)
-      val dg = ArtifactStore.sourceDigest(
-        s, new Path(new Path(dir), "embeddings.parquet"), "ivfpq2")
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.ann.indexDir", s"graft_ivfpq_${nb}_$dg") { path =>
-        pqCodes(s, dir)
-          .join(codedVectors(s, dir).select(col("vec_id"), col("code")), "vec_id")
-          .repartition(col("code")) // one file per code dir, see partitionedIndex
-          .write.mode("overwrite").partitionBy("code").parquet(path)
-      }
+    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
+        s"graft_ivfpq_${nbitsOf(s, dir)}_${embDigest(s, dir, "ivfpq2")}") { path =>
+      pqCodes(s, dir)
+        .join(codedVectors(s, dir).select(col("vec_id"), col("code")), "vec_id")
+        .repartition(col("code")) // one file per code dir, see partitionedIndex
+        .write.mode("overwrite").partitionBy("code").parquet(path)
     }
 
   // ------------------------------------------------------------- lifecycle
@@ -724,9 +667,7 @@ object AnnIndex {
     * before. The IVF thunk also pre-populates the coded-vector cache:
     * with the stored index live, [[codedVectors]] is a parquet read. */
   private[graft] def warmResolve(s: SparkSession, dir: String): Seq[(String, () => Unit)] = {
-    import org.apache.hadoop.fs.Path
-    def dg(tag: String) = ArtifactStore.sourceDigest(
-      s, new Path(new Path(dir), "embeddings.parquet"), tag)
+    def dg(tag: String) = embDigest(s, dir, tag)
     def live(name: String) = ArtifactStore.isLive(
       s, "spark.graft.ann.indexDir", name)
     Seq(
@@ -780,12 +721,10 @@ object AnnIndex {
         live(s"graft_rpq_codes_${dg("rpqcodes")}")) { rpqCodes(s, dir); () }))
   }
 
-  /** Drop this session's cached coded-vector table and free its
-    * checkpoint blocks (bench inter-family release; rebuilds lazily).
-    * The partitioned-index / JL-sketch / codebook entries are KEPT:
-    * parquet-backed readers and a 64-row driver-side Seq pin no executor
-    * memory, and re-resolving costs pointer/footer I/O per re-entry
-    * (see TextQueries.releaseCaches — same measurement, r13). */
+  /** Drop this session's cached coded-vector and residual tables and
+    * free their checkpoint blocks (bench inter-family release; rebuilds
+    * lazily). Stored readers ([[ArtifactStore.reader]]) and the 64-row
+    * driver-side codebook Seqs are KEPT. */
   def releaseCaches(s: SparkSession): Unit = {
     codedCache.removeAll(s).foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint)
     resCache.removeAll(s).foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint)

@@ -39,7 +39,7 @@ object ArtifactStore {
   import org.apache.hadoop.fs.Path
 
   /** Observability for the warm-coverage gate (WarmCoverageSpec): every
-    * artifact base name ever PUBLISHED ([[getOrBuild]]) or PROBED
+    * artifact base name ever PUBLISHED ([[reader]]/[[getOrBuild]]) or PROBED
     * ([[isLive]]/[[anyPointer]]) in this JVM. Plain name sets —
     * negligible overhead, no behavior change; the spec normalizes the
     * digest/width suffixes into family prefixes and asserts that every
@@ -52,11 +52,11 @@ object ArtifactStore {
 
   /** Thread-local capture of every artifact name touched (published OR
     * probed) while a block runs — the seam-coverage gate brackets a
-    * stream's construction with this (after a SessionCache.dropAll, so
-    * accessors cannot serve cached readers) and compares the captured
-    * family set against the stream's artifactSeams entry. Names are
-    * recorded on the calling thread only: stored-family accessors
-    * resolve during plan CONSTRUCTION, which runs on the caller. */
+    * stream's construction with this (a [[reader]] memo hit records its
+    * name too) and compares the captured family set against the
+    * stream's artifactSeams entry. Names are recorded on the calling
+    * thread only: stored-family accessors resolve during plan
+    * CONSTRUCTION, which runs on the caller. */
   private val captureTL = new ThreadLocal[java.util.Set[String]]
   private[graft] def capturing[T](body: => T): (T, Set[String]) = {
     import scala.jdk.CollectionConverters._
@@ -166,7 +166,7 @@ object ArtifactStore {
     * `spark.graft.artifact.supersededMs` (default 24 h). The horizon is
     * SESSION-lifetime-scale, not the 10-min stale horizon, because a
     * still-running old-release session touches the pointer only ONCE
-    * (its SessionCache keeps the reader for the session's lifetime) —
+    * (its [[reader]] stays open for the session's lifetime) —
     * pointer idleness proves no NEW resolves, not no live readers. A
     * day bounds the post-upgrade disk duplication at ~1/7th of the
     * orphan horizon while covering typical session lifetimes; a root
@@ -281,6 +281,36 @@ object ArtifactStore {
     catch { case _: java.io.IOException => false }
   }
 
+  private val readers = new graft.util.SessionCache[DataFrame]
+
+  /** The session's reader of the stored artifact `baseName` — the ONE
+    * place a resolved artifact is remembered. The first call per
+    * (session, qualified resolved root, `baseName`) runs `beforeResolve`
+    * (a family's pre-resolve sweeps) and then [[getOrBuild]]; later calls
+    * return the same DataFrame. Readers stay open for the session's
+    * lifetime on purpose: each is a bare parquet plan pinning zero
+    * executor memory, and re-resolving one costs ~0.14 s of pointer/
+    * footer/GC-sweep I/O (measured on d27's re-run slot, r13). The key is
+    * the artifact's identity (source digest and derived widths are in
+    * `baseName`), so regenerated source data or a re-pointed root
+    * resolves afresh. The name is recorded as published and touched
+    * BEFORE the memo lookup, so the warm- and seam-coverage gates see
+    * hits too. */
+  def reader(s: SparkSession, rootConfKey: String, baseName: String,
+             beforeResolve: () => Unit = () => ())
+            (write: String => Unit): DataFrame = {
+    publishedNames.add(baseName)
+    recordTouch(baseName)
+    val root = resolvedRoot(s, rootConfKey)
+    val qualified = root.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(root)
+    readers.getOrElseUpdate(s, s"$qualified/$baseName") {
+      beforeResolve()
+      getOrBuild(s, rootConfKey, baseName)(write)
+    }
+  }
+
+  /** Resolve-or-build without memoizing — every call re-reads the
+    * pointer and runs the GC sweeps. Query code goes through [[reader]]. */
   def getOrBuild(s: SparkSession, rootConfKey: String, baseName: String)
                 (write: String => Unit): DataFrame = {
     publishedNames.add(baseName)

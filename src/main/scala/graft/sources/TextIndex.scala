@@ -48,7 +48,8 @@ object TextIndex {
     * (mod ChunkGear) — expected chunk length = ChunkGear tokens. */
   private[graft] final val ChunkGear = 8
 
-  private def srcDigest(s: SparkSession, dir: String, tag: String): String =
+  /** Source digest of the corpus' documents table under `tag`. */
+  private[graft] def srcDigest(s: SparkSession, dir: String, tag: String): String =
     ArtifactStore.sourceDigest(
       s, new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir), "documents.parquet"), tag)
 
@@ -119,22 +120,19 @@ object TextIndex {
 
   // -------------------------------------------------- stored MinHash/LSH
 
-  /** The materialized signature table — cached per (session, dir) like
-    * the table catalog: a production near-dup pipeline computes MinHash
-    * signatures ONCE and stores them; the signature report (d08), the
-    * banding (d09) and the verify (d10) all read the stored table. */
-  private val sigCache = new graft.util.SessionCache[DataFrame]
+  /** The materialized signature table: a production near-dup pipeline
+    * computes MinHash signatures ONCE and stores them; the signature
+    * report (d08), the banding (d09) and the verify (d10) all read the
+    * stored table. */
   private[graft] def sigTable(s: SparkSession, dir: String): DataFrame =
-    sigCache.getOrElseUpdate(s, dir) {
-      // a STORED parquet table (digest-keyed, shared across sessions and
-      // JVMs via ArtifactStore) rather than a localCheckpoint: at sf100
-      // the 5 M × 128-long signature table pins multi-GB of block-manager
-      // memory as a checkpoint, while the parquet artifact costs nothing
-      // until scanned — and IS the production layout the Scaladoc claims
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.artifactDir", s"graft_sig_${srcDigest(s, dir, "minhash")}") { path =>
-        signatures(docs(s, dir)).write.mode("overwrite").parquet(path)
-      }
+    // a STORED parquet table (digest-keyed, shared across sessions and
+    // JVMs via ArtifactStore) rather than a localCheckpoint: at sf100
+    // the 5 M × 128-long signature table pins multi-GB of block-manager
+    // memory as a checkpoint, while the parquet artifact costs nothing
+    // until scanned — and IS the production layout the Scaladoc claims
+    ArtifactStore.reader(
+      s, "spark.graft.artifactDir", s"graft_sig_${srcDigest(s, dir, "minhash")}") { path =>
+      signatures(docs(s, dir)).write.mode("overwrite").parquet(path)
     }
 
   /** The stored LSH bucket index — (doc_id, band, bkey) band rows of the
@@ -146,7 +144,7 @@ object TextIndex {
     * re-signing them); every candidate-generation run then starts from
     * the stored buckets instead of re-hashing B band keys per document. */
   private[graft] def bandsTable(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.getOrBuild(
+    ArtifactStore.reader(
       s, "spark.graft.artifactDir", s"graft_bands_${srcDigest(s, dir, "lshbands")}") { path =>
       bandsFromSig(sigTable(s, dir).join(repIdsOf(docs(s, dir)), "doc_id"))
         .write.mode("overwrite").parquet(path)
@@ -187,23 +185,20 @@ object TextIndex {
         md5(col("chunk").cast("binary")).as("chunk_md5"),
         size(split(col("chunk"), " ")).cast("bigint").as("n_tok"))
 
-  /** The materialized chunk-occurrence table — cached per (session, dir)
-    * like the MinHash signature table: a production pipeline chunks the
-    * corpus ONCE and stores (doc_id, chunk_md5, n_tok); the dup report
-    * (d24) and the removal statistic (d25, which reads it twice — the
-    * first-doc aggregate and the back-join) consume the stored artifact
-    * instead of re-folding 100 TB of text per reference. */
-  private val chunkCache = new graft.util.SessionCache[DataFrame]
+  /** The materialized chunk-occurrence table, like the MinHash signature
+    * table: a production pipeline chunks the corpus ONCE and stores
+    * (doc_id, chunk_md5, n_tok); the dup report (d24) and the removal
+    * statistic (d25, which reads it twice — the first-doc aggregate and
+    * the back-join) consume the stored artifact instead of re-folding
+    * 100 TB of text per reference. */
   private[graft] def chunkTable(s: SparkSession, dir: String): DataFrame =
-    chunkCache.getOrElseUpdate(s, dir) {
-      // stored parquet artifact, same rationale as [[sigTable]]: the
-      // sf100 chunk-occurrence table is ~250 M narrow rows — a pinned
-      // checkpoint at that size taxes every later query's memory, while
-      // the stored table is the production shape (chunk ONCE, reuse)
-      ArtifactStore.getOrBuild(
-        s, "spark.graft.artifactDir", s"graft_chunks_${srcDigest(s, dir, "cdcchunks")}") { path =>
-        chunkOccurrences(docs(s, dir)).write.mode("overwrite").parquet(path)
-      }
+    // stored parquet artifact, same rationale as [[sigTable]]: the
+    // sf100 chunk-occurrence table is ~250 M narrow rows — a pinned
+    // checkpoint at that size taxes every later query's memory, while
+    // the stored table is the production shape (chunk ONCE, reuse)
+    ArtifactStore.reader(
+      s, "spark.graft.artifactDir", s"graft_chunks_${srcDigest(s, dir, "cdcchunks")}") { path =>
+      chunkOccurrences(docs(s, dir)).write.mode("overwrite").parquet(path)
     }
 
   // -------------------------------------- stored d27 corpus index (hashes + bands)
@@ -217,45 +212,43 @@ object TextIndex {
     * pre-round-9 shape) made every "incremental" run corpus-proportional
     * — 338 s at sf100, of which the batch-side dedup is only a small
     * tail — and keeping them as localCheckpoint blocks OOMed the 24 g
-    * driver at sf100 (the band table is B rows per corpus rep). The
-    * cached DataFrames here are just parquet readers. */
-  private val corpusIdxCache = new graft.util.SessionCache[(DataFrame, DataFrame)]
-  private[graft] def corpusIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    corpusIdxCache.getOrElseUpdate(s, dir) {
-      val digest = srcDigest(s, dir, "d27idx")
-      def corpus = docs(s, dir).where(!(col("doc_id") % 10 === 0))
-      val corpusHashes = ArtifactStore.getOrBuild(
-        s, "spark.graft.artifactDir", s"graft_d27_hashes_$digest") { path =>
-        corpus
-          .select(md5(col("text").cast("binary")).as("__h"), col("doc_id"))
-          .groupBy("__h").agg(min(col("doc_id")).as("exact_id"))
-          .write.mode("overwrite").parquet(path)
-      }
-      val member = ArtifactStore.getOrBuild(
-        s, "spark.graft.artifactDir", s"graft_d27_bands_$digest") { path =>
-        val cb = bandsFromSig(sigTable(s, dir).join(repIdsOf(corpus), "doc_id"))
-          .localCheckpoint()
-        try {
-          val ok = cb.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
-            .where(col("n") <= BucketCap).select("band", "bkey")
-          cb.join(ok, Seq("band", "bkey"))
-            .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
-            .write.mode("overwrite").parquet(path)
-        } finally GraftBridge.unpersistLocalCheckpoint(cb)
-      }
-      (corpusHashes, member)
+    * driver at sf100 (the band table is B rows per corpus rep). Both
+    * are plain parquet readers. */
+  private[graft] def corpusIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    val digest = srcDigest(s, dir, "d27idx")
+    def corpus = docs(s, dir).where(!(col("doc_id") % 10 === 0))
+    val corpusHashes = ArtifactStore.reader(
+      s, "spark.graft.artifactDir", s"graft_d27_hashes_$digest") { path =>
+      corpus
+        .select(md5(col("text").cast("binary")).as("__h"), col("doc_id"))
+        .groupBy("__h").agg(min(col("doc_id")).as("exact_id"))
+        .write.mode("overwrite").parquet(path)
     }
+    val member = ArtifactStore.reader(
+      s, "spark.graft.artifactDir", s"graft_d27_bands_$digest") { path =>
+      val cb = bandsFromSig(sigTable(s, dir).join(repIdsOf(corpus), "doc_id"))
+        .localCheckpoint()
+      try {
+        val ok = cb.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
+          .where(col("n") <= BucketCap).select("band", "bkey")
+        cb.join(ok, Seq("band", "bkey"))
+          .select(col("doc_id").as("corpus_id"), col("band"), col("bkey"))
+          .write.mode("overwrite").parquet(path)
+      } finally GraftBridge.unpersistLocalCheckpoint(cb)
+    }
+    (corpusHashes, member)
+  }
 
   /** s15's static join side: the stored capped corpus member table
     * (d27's LSH index artifact — (corpus_id, band, bkey) rows). */
   private[graft] def corpusMemberTable(s: SparkSession, dir: String): DataFrame =
     corpusIndex(s, dir)._2
 
-  // --------------------------------------------------------- warm + release
+  // ------------------------------------------------------------------ warm
 
   /** Session-start warm hook (resolve-only — see [[graft.services.Warm]]):
     * thunks pulling each text-side stored family that ALREADY EXISTS into
-    * this session's caches (pointer read + parquet open, batched in
+    * this session's readers (pointer read + parquet open, batched in
     * parallel by the runner). Absent families are skipped — warm never
     * builds. d27's pair is warmed only when BOTH its artifacts are live
     * (the member build would otherwise re-sign the corpus). */
@@ -271,11 +264,4 @@ object TextIndex {
         live(s"graft_d27_bands_${dg("d27idx")}") &&
         live(s"graft_sig_${dg("minhash")}")) { corpusIndex(s, dir); () }))
   }
-
-  // No release hook for the stored readers on purpose: every cache here
-  // holds a bare parquet plan (zero executor memory), and a serving
-  // session keeps its index readers open — re-resolving one costs
-  // ~0.14 s of pointer/footer/GC-sweep I/O (measured, r13). Data
-  // regenerated MID-session is not a supported invalidation point; a
-  // new session re-resolves by digest as always.
 }

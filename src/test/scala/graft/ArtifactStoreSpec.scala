@@ -313,4 +313,66 @@ class ArtifactStoreSpec extends SparkSpec {
       }
     }
   }
+
+  describe("ArtifactStore.reader") {
+
+    it("a second call in the same session returns the same reader and builds once") {
+      withScratchDir("graft_rd_same") { root =>
+        val s = session(root)
+        var builds = 0
+        def get() = ArtifactStore.reader(s, RootKey, "rd_a") { p =>
+          builds += 1; writeRange(s, 10)(p)
+        }
+        val first = get()
+        assert(get() eq first)
+        assert(builds == 1, s"expected one build, got $builds")
+        assert(first.count() == 10)
+      }
+    }
+
+    it("a new session resolves its own reader") {
+      withScratchDir("graft_rd_sess") { root =>
+        val s1 = session(root)
+        var builds = 0
+        def get(s: SparkSession) = ArtifactStore.reader(s, RootKey, "rd_b") { p =>
+          builds += 1; writeRange(s, 7)(p)
+        }
+        val r1 = get(s1)
+        val s2 = session(root)
+        val r2 = get(s2)
+        assert(!(r2 eq r1), "a new session was served another session's reader")
+        assert(r2.sparkSession eq s2)
+        assert(builds == 1, "the second session rebuilt a live artifact")
+        assert(r2.count() == 7)
+      }
+    }
+
+    it("re-pointing the root on the same session never serves the other root's reader") {
+      withScratchDir("graft_rd_rootA") { rootA =>
+        withScratchDir("graft_rd_rootB") { rootB =>
+          val s = session(rootA)
+          val ra = ArtifactStore.reader(s, RootKey, "rd_c")(writeRange(s, 3))
+          s.conf.set(RootKey, "file:" + rootB)
+          val rb = ArtifactStore.reader(s, RootKey, "rd_c")(writeRange(s, 4))
+          assert(!(rb eq ra), "root B was served root A's reader")
+          assert(rb.count() == 4)
+          assert(new java.io.File(rootB, "rd_c.ptr").exists(), "nothing published under root B")
+          s.conf.set(RootKey, "file:" + rootA)
+          assert(ArtifactStore.reader(s, RootKey, "rd_c")(writeRange(s, 3)) eq ra)
+        }
+      }
+    }
+
+    it("a memo hit inside capturing still reports the name") {
+      withScratchDir("graft_rd_cap") { root =>
+        val s = session(root)
+        val r = ArtifactStore.reader(s, RootKey, "rd_d")(writeRange(s, 2))
+        val (hit, touched) = ArtifactStore.capturing {
+          ArtifactStore.reader(s, RootKey, "rd_d")(writeRange(s, 2))
+        }
+        assert(hit eq r)
+        assert(touched.contains("rd_d"), s"memo hit not captured: $touched")
+      }
+    }
+  }
 }

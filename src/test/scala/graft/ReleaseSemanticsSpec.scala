@@ -2,11 +2,9 @@ package graft
 
 /** Pins the bench inter-family release contract (r13): releaseCaches
   * frees CHECKPOINT blocks (the q71 r6 incident — retained blocks taxing
-  * later families) but KEEPS the stored-artifact readers, which are bare
-  * parquet plans pinning zero executor memory and cost ~0.14 s of
-  * pointer/footer/sweep I/O to re-resolve (measured on d27's re-run
-  * slot). A serving session keeps its index readers open for its
-  * lifetime; reverting either half of the contract should fail here. */
+  * later families) but KEEPS the stored-artifact readers
+  * ([[graft.sources.ArtifactStore.reader]] says why). Reverting either
+  * half of the contract should fail here. */
 class ReleaseSemanticsSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -20,7 +18,9 @@ class ReleaseSemanticsSpec extends SparkSpec {
     // dropped one would re-resolve into a fresh instance
     assert(graft.sources.TextIndex.sigTable(spark, sfDir) eq sig1)
     assert(graft.sources.TextIndex.chunkTable(spark, sfDir) eq chunk1)
-    assert(graft.sources.TextIndex.corpusIndex(spark, sfDir) eq idx1)
+    val idx2 = graft.sources.TextIndex.corpusIndex(spark, sfDir)
+    assert(idx2._1 eq idx1._1)
+    assert(idx2._2 eq idx1._2)
   }
 
   it("releaseCaches still frees the checkpoint-holding caches") {
