@@ -64,12 +64,7 @@ case class MetadataCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def footerCount(files: Array[String]): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    files.iterator.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try reader.getRecordCount finally reader.close()
-    }.sum
+    files.iterator.map(graft.sources.TestData.footerRows(conf, _)).sum
   }
 }
 

@@ -409,7 +409,7 @@ object SearchQueries {
     * PARTITIONED by the token-hash bucket [[termBucket]] mirrors. */
   private def buildPostingArtifact(s: SparkSession, dir: String, tag: String, prefix: String)(
       postings: DataFrame => DataFrame): DataFrame =
-    graft.sources.ArtifactStore.reader(s, "spark.graft.artifactDir",
+    graft.sources.ArtifactStore.reader(s,
         s"${prefix}_${graft.sources.TextIndex.srcDigest(s, dir, tag)}") { path =>
       postings(docs(s, dir))
         .withColumn("bucket",
@@ -421,7 +421,7 @@ object SearchQueries {
   /** d31's posting table: (tok, doc_id, tf) rows. Rows-not-arrays on
     * purpose: a hot token's posting list stays splittable across tasks
     * instead of materializing as one giant array value. */
-  private def invertedIndex(s: SparkSession, dir: String): DataFrame =
+  private[graft] def invertedIndex(s: SparkSession, dir: String): DataFrame =
     buildPostingArtifact(s, dir, "invidx", "graft_inv")(
       _.select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
         .groupBy(col("tok"), col("doc_id")).agg(count(lit(1)).as("tf")))
@@ -430,7 +430,7 @@ object SearchQueries {
     * match the oracle's `generate_series`. Stored separately from d31's
     * tf-rollup — positions triple the index size, so a deployment opts
     * in per-corpus exactly like a search engine's positional postings. */
-  private def positionalIndex(s: SparkSession, dir: String): DataFrame =
+  private[graft] def positionalIndex(s: SparkSession, dir: String): DataFrame =
     buildPostingArtifact(s, dir, "invpos", "graft_invpos")(
       _.select(col("doc_id"), posexplode(split(col("text"), " ")))
         .select(col("doc_id"), col("col").as("tok"),
@@ -440,7 +440,7 @@ object SearchQueries {
     * production this artifact already exists from the last roll-forward.
     * Same (tok, doc_id, tf) shape and bucket layout as [[invertedIndex]],
     * over the old subset only. */
-  private def oldPostingIndex(s: SparkSession, dir: String): DataFrame =
+  private[graft] def oldPostingIndex(s: SparkSession, dir: String): DataFrame =
     buildPostingArtifact(s, dir, "invold", "graft_invold")(
       _.where(pmod(col("doc_id"), lit(10)) =!= 0)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
@@ -450,8 +450,8 @@ object SearchQueries {
     * with postings computed from the DELTA docs only (the delta is the
     * only text processed; the merge is a narrow posting-row copy —
     * file-level append/compact at 100 TB, never a re-tokenization). */
-  private def rolledPostingIndex(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ArtifactStore.reader(s, "spark.graft.artifactDir",
+  private[graft] def rolledPostingIndex(s: SparkSession, dir: String): DataFrame =
+    graft.sources.ArtifactStore.reader(s,
         s"graft_invroll_${graft.sources.TextIndex.srcDigest(s, dir, "invroll")}") { path =>
       oldPostingIndex(s, dir).select("tok", "doc_id", "tf", "bucket")
         .unionByName(docs(s, dir).where(pmod(col("doc_id"), lit(10)) === 0)
@@ -469,34 +469,14 @@ object SearchQueries {
     * it through a doc_id equi-join against already-pruned candidate rows,
     * so its access pattern is a narrow columnar scan, never a directory
     * probe. Same digest/pointer lifecycle as the posting artifacts. */
-  private def docLengths(s: SparkSession, dir: String): DataFrame =
-    graft.sources.ArtifactStore.reader(s, "spark.graft.artifactDir",
+  private[graft] def docLengths(s: SparkSession, dir: String): DataFrame =
+    graft.sources.ArtifactStore.reader(s,
         s"graft_norms_${graft.sources.TextIndex.srcDigest(s, dir, "norms")}") { path =>
       docs(s, dir)
         .select(col("doc_id"),
           size(split(col("text"), " ")).cast("bigint").as("dl"))
         .write.mode("overwrite").parquet(path)
     }
-
-  /** Session-start warm hook (resolve-only — see [[graft.services.Warm]]):
-    * the search-side stored families that already exist. Same contract as
-    * [[graft.sources.TextIndex.warmResolve]]: absent families are skipped, never
-    * built. */
-  private[graft] def warmResolve(s: SparkSession, dir: String): Seq[(String, () => Unit)] = {
-    def dg(tag: String) = graft.sources.TextIndex.srcDigest(s, dir, tag)
-    def live(name: String) = graft.sources.ArtifactStore.isLive(
-      s, "spark.graft.artifactDir", name)
-    Seq(
-      "search:inv" -> (() => if (live(s"graft_inv_${dg("invidx")}")) { invertedIndex(s, dir); () }),
-      "search:invpos" -> (() => if (live(s"graft_invpos_${dg("invpos")}")) { positionalIndex(s, dir); () }),
-      "search:norms" -> (() => if (live(s"graft_norms_${dg("norms")}")) { docLengths(s, dir); () }),
-      "search:invold" -> (() => if (live(s"graft_invold_${dg("invold")}")) { oldPostingIndex(s, dir); () }),
-      // the rolled index's resolve reaches through the old-corpus
-      // artifact (the merge is defined against it), so only warm it when
-      // BOTH are live — warm must never trigger an old-index build
-      "search:invroll" -> (() => if (live(s"graft_invold_${dg("invold")}") &&
-        live(s"graft_invroll_${dg("invroll")}")) { rolledPostingIndex(s, dir); () }))
-  }
 
   /** Drop this session's window-hash checkpoint and free its blocks
     * (bench inter-family release; rebuilds lazily). The posting/norms

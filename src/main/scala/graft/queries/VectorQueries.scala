@@ -35,7 +35,7 @@ import CoreQueries.Q
  * lookup alone held the e13 probe at ~15 s). A production client holds
  * its own vector; the pushdown scan is the test-harness stand-in.
  *
- * Index/quantizer LIFECYCLE (training, stored artifacts, warm hooks)
+ * Index/quantizer LIFECYCLE (training, stored artifacts)
  * lives in [[graft.sources.AnnIndex]]; this object holds the probe plans
  * and their DuckDB oracles, which recompute everything from raw
  * embeddings — index reads and fresh computation are bit-identical, so

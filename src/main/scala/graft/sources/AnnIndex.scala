@@ -8,9 +8,13 @@ import org.apache.spark.sql.functions._
  * The ANN index lifecycle: quantizer definitions (SRP hyperplanes, IVF
  * centroid training, PQ codebooks, the JL sketch matrix) and the STORED
  * artifacts they produce, published through [[ArtifactStore]]'s
- * versioned-dir + atomic-pointer protocol and digest-keyed by the source
- * corpus (size+mtime), so regenerated data invalidates every index at
- * once. Query/probe plans and their DuckDB oracles live in
+ * versioned-dir + atomic-pointer protocol under the one artifact root
+ * (`spark.graft.artifactDir`, shared with the text-side families) and
+ * digest-keyed by the source corpus (size+mtime), so regenerated data
+ * invalidates every index at once. Session-start warm-up
+ * ([[graft.services.Warm]]) calls the accessors below under
+ * [[ArtifactStore.resolveOnly]], so it reads what is live and builds
+ * nothing. Query/probe plans and their DuckDB oracles live in
  * [[graft.queries.VectorQueries]]; this object owns everything a
  * deployment would run on its INDEXING schedule rather than per query —
  * the FAISS train()/add() split, applied file-by-file:
@@ -40,7 +44,7 @@ object AnnIndex {
 
   /** Source digest of the corpus' embeddings table under `tag` — the
     * identity every vector-side artifact name carries. */
-  private def embDigest(s: SparkSession, dir: String, tag: String): String =
+  private[graft] def embDigest(s: SparkSession, dir: String, tag: String): String =
     ArtifactStore.sourceDigest(s,
       new org.apache.hadoop.fs.Path(new org.apache.hadoop.fs.Path(dir), "embeddings.parquet"), tag)
 
@@ -81,8 +85,7 @@ object AnnIndex {
   private val nbitsCache = new graft.util.SessionCache[Int]
   private[graft] def nbitsOf(s: SparkSession, dir: String): Int =
     nbitsCache.getOrElseUpdate(s, dir) {
-      val meta = ArtifactStore.reader(
-        s, "spark.graft.ann.indexDir", s"graft_srp_meta_${embDigest(s, dir, "srpmeta")}") { path =>
+      val meta = ArtifactStore.reader(s, s"graft_srp_meta_${embDigest(s, dir, "srpmeta")}") { path =>
         import s.implicits._
         val n = emb(s, dir).count()
         Seq((deriveNBits(n), n, NBitsMax, TargetOccupancy))
@@ -183,8 +186,7 @@ object AnnIndex {
     // restore the canonical column order and long type.
     codedCache.getOrElseUpdate(s, dir) {
       val nb = nbitsOf(s, dir)
-      if (ArtifactStore.isLive(
-            s, "spark.graft.ann.indexDir", s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}"))
+      if (ArtifactStore.isLive(s, s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}"))
         // COALESCE before checkpointing: the stored layout is one small
         // file per code directory (2^nbits of them — 4096 at sf10), and
         // localCheckpoint freezes the scan's partitioning, so without
@@ -211,8 +213,8 @@ object AnnIndex {
     // protocol (ArtifactStore: versioned dirs + atomic raw-FS pointer;
     // stress-covered by IndexRaceSpec). The digest covers the SOURCE
     // FILE's size+mtime, so regenerated data at the same path
-    // invalidates the index; the root is configurable
-    // (spark.graft.ann.indexDir, default local tmp) and may be HDFS or
+    // invalidates the index; the root is the one artifact root
+    // (spark.graft.artifactDir, default local tmp) and may be HDFS or
     // an object store. The quantizer setting is part of the index
     // identity: a change to the width derivation must never be served a
     // stored index built at a different width (for one derivation the
@@ -222,20 +224,18 @@ object AnnIndex {
       // the nb-suffixed family name replaced the bare-digest one when the
       // quantizer width became part of the index identity — age out
       // artifacts stranded under the old names (digest-only: 16 hex
-      // chars where the current names carry the decimal nb first)
-      ArtifactStore.sweepLegacyNames(s, "spark.graft.ann.indexDir",
-        "graft_ivf_idx_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
+      // chars where the current names carry the decimal nb first; no
+      // other family in the root starts with graft_ivf_idx_)
+      ArtifactStore.sweepLegacyNames(s, "graft_ivf_idx_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
       // the ivfidx→ivfidx2 TAG bump (pre-repartition small-file layouts)
       // kept the prefix and changed the digest, so the stranded old-tag
       // index of THIS source sits under a name this release can compute
       // exactly — delete it after mere pointer idleness instead of
       // letting a full-size index double the root's disk for the 7-day
       // orphan horizon
-      ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
-        s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx")}")
+      ArtifactStore.sweepSupersededFamily(s, s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx")}")
     }
-    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
-        s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}", sweeps) { path =>
+    ArtifactStore.reader(s, s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}", sweeps) { path =>
       // repartition BY the partition column before the partitioned
       // write: without it every write task emits one file into every
       // code directory it holds rows for — tasks × 2^nbits tiny files
@@ -269,8 +269,7 @@ object AnnIndex {
     * (IEEE round-to-nearest, identical in both engines), so the stored
     * sketch is bit-stable across partitionings and rebuilds. */
   private[graft] def jlSketch(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.ann.indexDir", s"graft_jl_${embDigest(s, dir, "jlsketch")}") { path =>
+    ArtifactStore.reader(s, s"graft_jl_${embDigest(s, dir, "jlsketch")}") { path =>
       jlProjection(emb(s, dir)).write.mode("overwrite").parquet(path)
     }
 
@@ -397,8 +396,7 @@ object AnnIndex {
     * hash-matches. e06b keeps training live on purpose — it IS the
     * training-loop diagnostic. */
   private[graft] def trainedCentroids(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.ann.indexDir", s"graft_cents1_${embDigest(s, dir, "cents1")}") { path =>
+    ArtifactStore.reader(s, s"graft_cents1_${embDigest(s, dir, "cents1")}") { path =>
       // derived from the STORED iteration-1 sums (one K-row reduce, no
       // corpus pass when the sums artifact is live) — centsFromSums of
       // lloydSums1 IS lloydIterate(coded, seeds), by definition
@@ -418,8 +416,7 @@ object AnnIndex {
     * pass and the oracle — which retrains both iterations from raw
     * embeddings — still hash-matches. */
   private[graft] def lloydSums1(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.ann.indexDir", s"graft_lsums1_${embDigest(s, dir, "lsums1")}") { path =>
+    ArtifactStore.reader(s, s"graft_lsums1_${embDigest(s, dir, "lsums1")}") { path =>
       val coded = codedVectors(s, dir)
       lloydSums(coded, seedCentroids(coded))
         .coalesce(1).write.mode("overwrite").parquet(path)
@@ -437,10 +434,9 @@ object AnnIndex {
   private[graft] def annOldIndex(s: SparkSession, dir: String, nbOld: Int): DataFrame =
     // annold→annold2 tag bump: see partitionedIndex — reclaim the
     // computable old-tag family without waiting the orphan horizon
-    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
-        s"graft_annold_${nbOld}_${embDigest(s, dir, "annold2")}",
-        () => ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
-          s"graft_annold_${nbOld}_${embDigest(s, dir, "annold")}")) { path =>
+    ArtifactStore.reader(s, s"graft_annold_${nbOld}_${embDigest(s, dir, "annold2")}",
+        () => ArtifactStore.sweepSupersededFamily(s,
+            s"graft_annold_${nbOld}_${embDigest(s, dir, "annold")}")) { path =>
       codeVectors(emb(s, dir).where(pmod(col("vec_id"), lit(10)) =!= 0), nbOld)
         .repartition(col("code")) // one file per code dir, see partitionedIndex
         .write.mode("overwrite").partitionBy("code").parquet(path)
@@ -451,10 +447,9 @@ object AnnIndex {
     * add()-path; delta-proportional build cost). */
   private[graft] def annRolledIndex(s: SparkSession, dir: String, nbOld: Int): DataFrame =
     // annroll→annroll2 tag bump: see partitionedIndex
-    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
-        s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll2")}",
-        () => ArtifactStore.sweepSupersededFamily(s, "spark.graft.ann.indexDir",
-          s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll")}")) { path =>
+    ArtifactStore.reader(s, s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll2")}",
+        () => ArtifactStore.sweepSupersededFamily(s,
+            s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll")}")) { path =>
       // the artifact's partition column reads back as the narrowest
       // inferred type — normalize to the coder's LONG before union
       annOldIndex(s, dir, nbOld)
@@ -506,8 +501,7 @@ object AnnIndex {
     * [[seedSubCodebooks]] over the raw embeddings, built once per corpus
     * digest. */
   private[graft] def pqCodebooks(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.ann.indexDir", s"graft_pq_cb_${embDigest(s, dir, "pqcb")}") { path =>
+    ArtifactStore.reader(s, s"graft_pq_cb_${embDigest(s, dir, "pqcb")}") { path =>
       seedSubCodebooks(emb(s, dir), "embedding", "pq")
         .coalesce(1).write.mode("overwrite").parquet(path)
     }
@@ -577,8 +571,7 @@ object AnnIndex {
     * corpus scan); e08 probes are LUT joins against this table and never
     * re-encode (the last ANN family to get the train()/add() split). */
   private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.ann.indexDir", s"graft_pq_codes_${embDigest(s, dir, "pqcodes")}") { path =>
+    ArtifactStore.reader(s, s"graft_pq_codes_${embDigest(s, dir, "pqcodes")}") { path =>
       val cb = collectedCodebooks(s, dir)
       emb(s, dir).select(col("vec_id") +: pqEncodeColumns(cb): _*)
         .write.mode("overwrite").parquet(path)
@@ -613,8 +606,7 @@ object AnnIndex {
     * quantizer's resolution inside the coarse bucket, which is exactly
     * why production IVFPQ encodes residuals, not raw vectors. */
   private[graft] def rpqCodebooks(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.ann.indexDir", s"graft_rpq_cb_${embDigest(s, dir, "rpqcb")}") { path =>
+    ArtifactStore.reader(s, s"graft_rpq_cb_${embDigest(s, dir, "rpqcb")}") { path =>
       seedSubCodebooks(residualVectors(s, dir), "rvec", "rpq")
         .coalesce(1).write.mode("overwrite").parquet(path)
     }
@@ -630,8 +622,7 @@ object AnnIndex {
     * buckets and what it scans is M small ints per row. Encoded once per
     * corpus digest with [[pqEncodeColumnsOn]] over the residuals. */
   private[graft] def rpqCodes(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.ann.indexDir", s"graft_rpq_codes_${embDigest(s, dir, "rpqcodes")}") { path =>
+    ArtifactStore.reader(s, s"graft_rpq_codes_${embDigest(s, dir, "rpqcodes")}") { path =>
       val cb = collectedRpqCodebooks(s, dir)
       residualVectors(s, dir)
         .select(Seq(col("vec_id"), col("cid")) ++ pqEncodeColumnsOn(cb, "rvec"): _*)
@@ -648,8 +639,7 @@ object AnnIndex {
     * build-time join of the two stored artifacts (codes ⋈ coded on
     * vec_id); keyed by the quantizer width like the IVF index. */
   private[graft] def ivfPqIndex(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(s, "spark.graft.ann.indexDir",
-        s"graft_ivfpq_${nbitsOf(s, dir)}_${embDigest(s, dir, "ivfpq2")}") { path =>
+    ArtifactStore.reader(s, s"graft_ivfpq_${nbitsOf(s, dir)}_${embDigest(s, dir, "ivfpq2")}") { path =>
       pqCodes(s, dir)
         .join(codedVectors(s, dir).select(col("vec_id"), col("code")), "vec_id")
         .repartition(col("code")) // one file per code dir, see partitionedIndex
@@ -657,70 +647,6 @@ object AnnIndex {
     }
 
   // ------------------------------------------------------------- lifecycle
-  /** Session-start warm hook (resolve-only — see [[graft.services.Warm]]):
-    * thunks that pull each vector-side stored family that ALREADY EXISTS
-    * into this session's caches, so the first e-family query doesn't
-    * absorb the pointer reads, parquet opens and partition discovery
-    * serially (r10's e06 probe: 6.5 s rep 1 vs 1.15 s steady). A family
-    * whose artifact is absent is SKIPPED — warm never builds, so a cold
-    * root costs nothing here and the first real query builds exactly as
-    * before. The IVF thunk also pre-populates the coded-vector cache:
-    * with the stored index live, [[codedVectors]] is a parquet read. */
-  private[graft] def warmResolve(s: SparkSession, dir: String): Seq[(String, () => Unit)] = {
-    def dg(tag: String) = embDigest(s, dir, tag)
-    def live(name: String) = ArtifactStore.isLive(
-      s, "spark.graft.ann.indexDir", name)
-    Seq(
-      "vec:srpmeta" -> (() => if (live(s"graft_srp_meta_${dg("srpmeta")}")) { nbitsOf(s, dir); () }),
-      "vec:jl" -> (() => if (live(s"graft_jl_${dg("jlsketch")}")) { jlSketch(s, dir); () }),
-      "vec:cents1" -> (() => if (live(s"graft_cents1_${dg("cents1")}") &&
-        live(s"graft_srp_meta_${dg("srpmeta")}")) { trainedCentroids(s, dir); () }),
-      "vec:lsums1" -> (() => if (live(s"graft_lsums1_${dg("lsums1")}") &&
-        live(s"graft_srp_meta_${dg("srpmeta")}")) { lloydSums1(s, dir); () }),
-      "vec:pqcb" -> (() => if (live(s"graft_pq_cb_${dg("pqcb")}")) { collectedCodebooks(s, dir); () }),
-      // pqCodes' resolve reaches through the codebooks (the encode is
-      // defined against them), so only warm it when BOTH are live —
-      // warm must never trigger a codebook build
-      "vec:pqcodes" -> (() => if (live(s"graft_pq_cb_${dg("pqcb")}") &&
-        live(s"graft_pq_codes_${dg("pqcodes")}")) { pqCodes(s, dir); () }),
-      "vec:annroll" -> (() => {
-        // the exact names carry the frozen quantizer width; only pay the
-        // deriving count when SOME pointer for these digests exists
-        val (dgo, dgr) = (dg("annold2"), dg("annroll2"))
-        def any(g: String) = ArtifactStore.anyPointer(
-          s, "spark.graft.ann.indexDir", g)
-        if (any(s"graft_annold_*_$dgo") && any(s"graft_annroll_*_$dgr")) {
-          val nb = annNbOld(s, dir)
-          if (live(s"graft_annold_${nb}_$dgo") && live(s"graft_annroll_${nb}_$dgr")) {
-            annRolledIndex(s, dir, nb)
-            ()
-          }
-        }
-      }),
-      "vec:ivf" -> (() => if (live(s"graft_srp_meta_${dg("srpmeta")}")) {
-        val nb = nbitsOf(s, dir)
-        if (live(s"graft_ivf_idx_${nb}_${dg("ivfidx2")}")) {
-          partitionedIndex(s, dir)
-          codedVectors(s, dir)
-          ()
-        }
-      }),
-      // the combined index's resolve reaches through pqCodes and the
-      // coded table only when BUILDING; with its own artifact live the
-      // resolve is a pure partitioned read — still gate on srp_meta for
-      // the width derivation
-      "vec:ivfpq" -> (() => if (live(s"graft_srp_meta_${dg("srpmeta")}")) {
-        val nb = nbitsOf(s, dir)
-        if (live(s"graft_ivfpq_${nb}_${dg("ivfpq2")}")) { ivfPqIndex(s, dir); () }
-      }),
-      // the residual-code resolve reaches through the residual codebooks
-      // (encode defined against them) only when BUILDING; gate both on
-      // their own artifacts so warm never triggers the residual pipeline
-      "vec:rpqcb" -> (() => if (live(s"graft_rpq_cb_${dg("rpqcb")}")) { collectedRpqCodebooks(s, dir); () }),
-      "vec:rpqcodes" -> (() => if (live(s"graft_rpq_cb_${dg("rpqcb")}") &&
-        live(s"graft_rpq_codes_${dg("rpqcodes")}")) { rpqCodes(s, dir); () }))
-  }
-
   /** Drop this session's cached coded-vector and residual tables and
     * free their checkpoint blocks (bench inter-family release; rebuilds
     * lazily). Stored readers ([[ArtifactStore.reader]]) and the 64-row

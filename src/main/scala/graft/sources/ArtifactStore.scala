@@ -40,11 +40,12 @@ object ArtifactStore {
 
   /** Observability for the warm-coverage gate (WarmCoverageSpec): every
     * artifact base name ever PUBLISHED ([[reader]]/[[getOrBuild]]) or PROBED
-    * ([[isLive]]/[[anyPointer]]) in this JVM. Plain name sets —
-    * negligible overhead, no behavior change; the spec normalizes the
-    * digest/width suffixes into family prefixes and asserts that every
-    * published family is probed by some warm hook, so a new stored
-    * family cannot silently miss session-start warm-up. */
+    * ([[isLive]]/[[anyPointer]], or [[reader]] under [[resolveOnly]]) in
+    * this JVM. Plain name sets — negligible overhead, no behavior
+    * change; the spec normalizes the digest/width suffixes into family
+    * prefixes and asserts that every published family is probed by some
+    * warm hook, so a new stored family cannot silently miss
+    * session-start warm-up. */
   private[graft] val publishedNames =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] val probedNames =
@@ -67,6 +68,22 @@ object ArtifactStore {
   }
   private def recordTouch(name: String): Unit =
     Option(captureTL.get()).foreach(_.add(name))
+
+  /** Thrown by [[reader]] inside [[resolveOnly]] when the artifact has no
+    * live version. */
+  final class NotLive(val baseName: String)
+    extends RuntimeException(s"stored artifact $baseName is not live")
+
+  /** Thread-local resolve-only mode for a block (the session-start warm
+    * hooks): inside it a [[reader]] miss whose pointer is not live throws
+    * [[NotLive]] before the root or a staging dir is created, so `write`
+    * never runs and no nested build can start. Like [[capturing]], only
+    * the calling thread is affected — accessors resolve on the caller. */
+  private val resolveOnlyTL = ThreadLocal.withInitial[Boolean](() => false)
+  private[graft] def resolveOnly[T](body: => T): T = {
+    resolveOnlyTL.set(true)
+    try body finally resolveOnlyTL.remove()
+  }
 
   /** Digest-free family prefix of an artifact name: strip the 16-hex
     * source digest, then a trailing derived-width segment (`_6`) or glob
@@ -95,10 +112,11 @@ object ArtifactStore {
   }
 
   /** Resolve the live artifact `baseName` under the root named by conf
-    * `rootConfKey` (default: a per-user owner-only subdir of local tmp),
-    * building and publishing it via `write(path)` when absent. Returns a
-    * DataFrame reading the live parquet directory. `write` must produce a
-    * Spark parquet dir (its _SUCCESS marker is the completeness witness).
+    * `spark.graft.artifactDir` (default: a per-user owner-only subdir of
+    * local tmp), building and publishing it via `write(path)` when
+    * absent. Returns a DataFrame reading the live parquet directory.
+    * `write` must produce a Spark parquet dir (its _SUCCESS marker is the
+    * completeness witness).
     *
     * Lifecycle: every resolve touches the pointer (usage marker); a
     * same-digest orphan version ages out after `spark.graft.artifact
@@ -112,12 +130,13 @@ object ArtifactStore {
   // size+mtime, not content), so a world-writable shared tmp would let
   // another local user pre-plant a pointer + _SUCCESS-complete version
   // dir that correctness-bearing dedup artifacts would serve. Shared
-  // multi-tenant deployments point rootConfKey at an ACL'd lake path.
+  // multi-tenant deployments point spark.graft.artifactDir at an ACL'd
+  // lake path.
   // (Artifacts written by releases that defaulted to the BARE tmpdir are
   // outside this root and not swept — a shared dir is not ours to clean;
   // remove them with the documented `rm -rf /tmp/graft_*`.)
-  private def resolvedRoot(s: SparkSession, rootConfKey: String): Path =
-    new Path(s.conf.get(rootConfKey,
+  private[graft] def resolvedRoot(s: SparkSession): Path =
+    new Path(s.conf.get("spark.graft.artifactDir",
       "file:" + System.getProperty("java.io.tmpdir") +
         "/graft-" + System.getProperty("user.name", "anon")))
 
@@ -127,8 +146,8 @@ object ArtifactStore {
     * root entries whose full name matches `legacyRegex` and whose mtime
     * is past the orphan horizon — call it from the renamed family's
     * builder with a regex that CANNOT match the current names. */
-  def sweepLegacyNames(s: SparkSession, rootConfKey: String, legacyRegex: String): Unit = {
-    val root = resolvedRoot(s, rootConfKey)
+  def sweepLegacyNames(s: SparkSession, legacyRegex: String): Unit = {
+    val root = resolvedRoot(s)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
     val orphanMs = s.conf.get("spark.graft.artifact.orphanMs", "604800000").toLong
@@ -172,8 +191,8 @@ object ArtifactStore {
     * orphan horizon while covering typical session lifetimes; a root
     * shared with longer-lived old binaries raises the conf to its max
     * session lifetime. */
-  def sweepSupersededFamily(s: SparkSession, rootConfKey: String, baseName: String): Unit = {
-    val (fs, pfs, root) = rootFs(s, rootConfKey)
+  def sweepSupersededFamily(s: SparkSession, baseName: String): Unit = {
+    val (fs, pfs, root) = rootFs(s)
     try {
       if (!fs.exists(root)) return
       val idleMs = s.conf.get("spark.graft.artifact.supersededMs", "86400000").toLong
@@ -223,9 +242,9 @@ object ArtifactStore {
   /** (data fs, pointer fs, root) for an artifact root — the pointer fs is
     * the RAW filesystem when the root is checksummed (see the protocol
     * note above: sidecar-free pointer renames are atomic on POSIX). */
-  private def rootFs(s: SparkSession, rootConfKey: String)
+  private def rootFs(s: SparkSession)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.FileSystem, Path) = {
-    val root = resolvedRoot(s, rootConfKey)
+    val root = resolvedRoot(s)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val pfs = fs match {
       case c: org.apache.hadoop.fs.ChecksumFileSystem => c.getRawFileSystem
@@ -255,14 +274,11 @@ object ArtifactStore {
   }
 
   /** Whether a live, complete artifact exists for `baseName` — a pure
-    * pointer read, never builds and never touches usage markers. The
-    * session-start warm path uses this to resolve only what EXISTS
-    * (calling the regular accessor on a cold root would trigger a full
-    * index build at warm time). */
-  def isLive(s: SparkSession, rootConfKey: String, baseName: String): Boolean = {
+    * pointer read, never builds and never touches usage markers. */
+  def isLive(s: SparkSession, baseName: String): Boolean = {
     probedNames.add(baseName)
     recordTouch(baseName)
-    val (fs, pfs, root) = rootFs(s, rootConfKey)
+    val (fs, pfs, root) = rootFs(s)
     readLive(fs, pfs, root, new Path(root, s"$baseName.ptr")).isDefined
   }
 
@@ -271,12 +287,12 @@ object ArtifactStore {
     * DERIVED component (e.g. the quantizer width in
     * `graft_annold_<nb>_<digest>`): a warm hook uses this to decide
     * whether deriving that component (a count job) is worth running at
-    * all, then validates the exact name with [[isLive]]. Pointer
+    * all, then resolves the exact name under [[resolveOnly]]. Pointer
     * presence only — no torn/_SUCCESS validation here. */
-  def anyPointer(s: SparkSession, rootConfKey: String, baseGlob: String): Boolean = {
+  def anyPointer(s: SparkSession, baseGlob: String): Boolean = {
     probedNames.add(baseGlob)
     recordTouch(baseGlob)
-    val (_, pfs, root) = rootFs(s, rootConfKey)
+    val (_, pfs, root) = rootFs(s)
     try Option(pfs.globStatus(new Path(root, baseGlob + ".ptr"))).exists(_.nonEmpty)
     catch { case _: java.io.IOException => false }
   }
@@ -294,28 +310,36 @@ object ArtifactStore {
     * the artifact's identity (source digest and derived widths are in
     * `baseName`), so regenerated source data or a re-pointed root
     * resolves afresh. The name is recorded as published and touched
-    * BEFORE the memo lookup, so the warm- and seam-coverage gates see
-    * hits too. */
-  def reader(s: SparkSession, rootConfKey: String, baseName: String,
+    * (and, under [[resolveOnly]], probed) BEFORE the memo lookup, so the
+    * warm- and seam-coverage gates see hits too. A holder that failed
+    * resolves again on the next call. */
+  def reader(s: SparkSession, baseName: String,
              beforeResolve: () => Unit = () => ())
             (write: String => Unit): DataFrame = {
     publishedNames.add(baseName)
     recordTouch(baseName)
-    val root = resolvedRoot(s, rootConfKey)
+    if (resolveOnlyTL.get) probedNames.add(baseName)
+    val root = resolvedRoot(s)
     val qualified = root.getFileSystem(s.sparkContext.hadoopConfiguration).makeQualified(root)
     readers.getOrElseUpdate(s, s"$qualified/$baseName") {
+      // resolve-only: stop before getOrBuild creates anything; a pointer
+      // that vanishes after the check still never reaches `write`
+      val build: String => Unit =
+        if (!resolveOnlyTL.get) write
+        else if (isLive(s, baseName)) _ => throw new NotLive(baseName)
+        else throw new NotLive(baseName)
       beforeResolve()
-      getOrBuild(s, rootConfKey, baseName)(write)
+      getOrBuild(s, baseName)(build)
     }
   }
 
   /** Resolve-or-build without memoizing — every call re-reads the
     * pointer and runs the GC sweeps. Query code goes through [[reader]]. */
-  def getOrBuild(s: SparkSession, rootConfKey: String, baseName: String)
+  def getOrBuild(s: SparkSession, baseName: String)
                 (write: String => Unit): DataFrame = {
     publishedNames.add(baseName)
     recordTouch(baseName)
-    val (fs, pfs, root) = rootFs(s, rootConfKey)
+    val (fs, pfs, root) = rootFs(s)
     if (!fs.exists(root)) {
       fs.mkdirs(root)
       try fs.setPermission(root,

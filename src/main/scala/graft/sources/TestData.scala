@@ -76,12 +76,17 @@ object TestData {
       .map { f =>
         val hconf = new org.apache.hadoop.conf.Configuration(false)
         confProps.foreach { case (k, v) => hconf.set(k, v) }
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(f), hconf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try reader.getRecordCount finally reader.close()
+        footerRows(hconf, f)
       }
       .sum().toLong
+  }
+
+  /** Row count of one parquet file, read from its footer alone. */
+  private[graft] def footerRows(conf: org.apache.hadoop.conf.Configuration, file: String): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new org.apache.hadoop.fs.Path(file), conf)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getRecordCount finally reader.close()
   }
 
   private val graphCache = new graft.util.SessionCache[Graph]
@@ -90,10 +95,6 @@ object TestData {
     * query construction. */
   def graph(spark: SparkSession, dir: String): Graph =
     graphCache.getOrElseUpdate(spark, dir)(buildGraph(spark, dir))
-
-  /** Release a retiring session's catalog entries (see SessionCache's
-    * lifetime note — entries hold their session reachable until removed). */
-  def releaseCache(spark: SparkSession): Unit = graphCache.removeAll(spark)
 
   /** Size AQE's initial shuffle-partition count to the catalog's input
     * volume: one post-shuffle partition per ~32 MB of compressed input,

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
  *
  * All go through the shared [[ArtifactStore]] protocol (versioned dirs,
  * atomic pointer, digest invalidation, orphan GC), are resolved in the
- * session-start warm batch ([[warmResolve]] — gate-enforced by
+ * session-start warm batch ([[graft.services.Warm]] — gate-enforced by
  * WarmCoverageSpec), and are maintained row-equal by the streaming path
  * (the per-row build expressions here are FACTORED so StreamAgg runs the
  * identical plans over arriving rows — s08/s15's contract).
@@ -130,8 +130,7 @@ object TextIndex {
     // the 5 M × 128-long signature table pins multi-GB of block-manager
     // memory as a checkpoint, while the parquet artifact costs nothing
     // until scanned — and IS the production layout the Scaladoc claims
-    ArtifactStore.reader(
-      s, "spark.graft.artifactDir", s"graft_sig_${srcDigest(s, dir, "minhash")}") { path =>
+    ArtifactStore.reader(s, s"graft_sig_${srcDigest(s, dir, "minhash")}") { path =>
       signatures(docs(s, dir)).write.mode("overwrite").parquet(path)
     }
 
@@ -144,8 +143,7 @@ object TextIndex {
     * re-signing them); every candidate-generation run then starts from
     * the stored buckets instead of re-hashing B band keys per document. */
   private[graft] def bandsTable(s: SparkSession, dir: String): DataFrame =
-    ArtifactStore.reader(
-      s, "spark.graft.artifactDir", s"graft_bands_${srcDigest(s, dir, "lshbands")}") { path =>
+    ArtifactStore.reader(s, s"graft_bands_${srcDigest(s, dir, "lshbands")}") { path =>
       bandsFromSig(sigTable(s, dir).join(repIdsOf(docs(s, dir)), "doc_id"))
         .write.mode("overwrite").parquet(path)
     }
@@ -196,8 +194,7 @@ object TextIndex {
     // sf100 chunk-occurrence table is ~250 M narrow rows — a pinned
     // checkpoint at that size taxes every later query's memory, while
     // the stored table is the production shape (chunk ONCE, reuse)
-    ArtifactStore.reader(
-      s, "spark.graft.artifactDir", s"graft_chunks_${srcDigest(s, dir, "cdcchunks")}") { path =>
+    ArtifactStore.reader(s, s"graft_chunks_${srcDigest(s, dir, "cdcchunks")}") { path =>
       chunkOccurrences(docs(s, dir)).write.mode("overwrite").parquet(path)
     }
 
@@ -217,15 +214,13 @@ object TextIndex {
   private[graft] def corpusIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val digest = srcDigest(s, dir, "d27idx")
     def corpus = docs(s, dir).where(!(col("doc_id") % 10 === 0))
-    val corpusHashes = ArtifactStore.reader(
-      s, "spark.graft.artifactDir", s"graft_d27_hashes_$digest") { path =>
+    val corpusHashes = ArtifactStore.reader(s, s"graft_d27_hashes_$digest") { path =>
       corpus
         .select(md5(col("text").cast("binary")).as("__h"), col("doc_id"))
         .groupBy("__h").agg(min(col("doc_id")).as("exact_id"))
         .write.mode("overwrite").parquet(path)
     }
-    val member = ArtifactStore.reader(
-      s, "spark.graft.artifactDir", s"graft_d27_bands_$digest") { path =>
+    val member = ArtifactStore.reader(s, s"graft_d27_bands_$digest") { path =>
       val cb = bandsFromSig(sigTable(s, dir).join(repIdsOf(corpus), "doc_id"))
         .localCheckpoint()
       try {
@@ -243,25 +238,4 @@ object TextIndex {
     * (d27's LSH index artifact — (corpus_id, band, bkey) rows). */
   private[graft] def corpusMemberTable(s: SparkSession, dir: String): DataFrame =
     corpusIndex(s, dir)._2
-
-  // ------------------------------------------------------------------ warm
-
-  /** Session-start warm hook (resolve-only — see [[graft.services.Warm]]):
-    * thunks pulling each text-side stored family that ALREADY EXISTS into
-    * this session's readers (pointer read + parquet open, batched in
-    * parallel by the runner). Absent families are skipped — warm never
-    * builds. d27's pair is warmed only when BOTH its artifacts are live
-    * (the member build would otherwise re-sign the corpus). */
-  private[graft] def warmResolve(s: SparkSession, dir: String): Seq[(String, () => Unit)] = {
-    def dg(tag: String) = srcDigest(s, dir, tag)
-    def live(name: String) = ArtifactStore.isLive(s, "spark.graft.artifactDir", name)
-    Seq(
-      "text:sig" -> (() => if (live(s"graft_sig_${dg("minhash")}")) { sigTable(s, dir); () }),
-      "text:bands" -> (() => if (live(s"graft_sig_${dg("minhash")}") &&
-        live(s"graft_bands_${dg("lshbands")}")) { bandsTable(s, dir); () }),
-      "text:chunks" -> (() => if (live(s"graft_chunks_${dg("cdcchunks")}")) { chunkTable(s, dir); () }),
-      "text:d27" -> (() => if (live(s"graft_d27_hashes_${dg("d27idx")}") &&
-        live(s"graft_d27_bands_${dg("d27idx")}") &&
-        live(s"graft_sig_${dg("minhash")}")) { corpusIndex(s, dir); () }))
-  }
 }

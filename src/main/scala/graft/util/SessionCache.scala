@@ -17,9 +17,8 @@ import org.apache.spark.sql.SparkSession
  * reference their SparkSession, so while an entry map exists its weak
  * key stays reachable through it — the weak keying prevents collisions,
  * not automatic collection. Callers that retire a session release its
- * entries explicitly via [[removeAll]] (the bench's family release, a
- * service's session-close hook); after removeAll the session and its
- * plans become collectable.
+ * entries explicitly via [[removeAll]] (the bench's family release);
+ * after removeAll the session and its plans become collectable.
  *
  * Map lookup synchronizes on the WeakHashMap (it is not thread-safe);
  * entry builds run OUTSIDE that lock on the session's own concurrent map,

@@ -30,7 +30,7 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_basic") { root =>
         val s = session(root)
         var builds = 0
-        def get() = ArtifactStore.getOrBuild(s, RootKey, "art_a") { p =>
+        def get() = ArtifactStore.getOrBuild(s, "art_a") { p =>
           builds += 1; writeRange(s, 100)(p)
         }
         assert(get().count() == 100)
@@ -48,39 +48,39 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_live") { root =>
         val s = session(root)
         // cold root: both probes false, nothing created
-        assert(!ArtifactStore.isLive(s, RootKey, "probe_x_00ff"))
-        assert(!ArtifactStore.anyPointer(s, RootKey, "probe_x_*"))
+        assert(!ArtifactStore.isLive(s, "probe_x_00ff"))
+        assert(!ArtifactStore.anyPointer(s, "probe_x_*"))
         assert(!new java.io.File(root, "probe_x_00ff.ptr").exists())
         // built artifact: both true (exact name and the derived-component
         // glob the warm hooks use)
-        ArtifactStore.getOrBuild(s, RootKey, "probe_x_00ff")(writeRange(s, 5))
-        assert(ArtifactStore.isLive(s, RootKey, "probe_x_00ff"))
-        assert(ArtifactStore.anyPointer(s, RootKey, "probe_x_*"))
-        assert(!ArtifactStore.anyPointer(s, RootKey, "probe_y_*"))
+        ArtifactStore.getOrBuild(s, "probe_x_00ff")(writeRange(s, 5))
+        assert(ArtifactStore.isLive(s, "probe_x_00ff"))
+        assert(ArtifactStore.anyPointer(s, "probe_x_*"))
+        assert(!ArtifactStore.anyPointer(s, "probe_y_*"))
         // torn pointer: anyPointer (presence-only) still true, isLive
         // (validating) false — exactly the warm-hook division of labor
         val ptr = new java.io.File(root, "probe_x_00ff.ptr")
         val name = new String(java.nio.file.Files.readAllBytes(ptr.toPath), "UTF-8").trim
         java.nio.file.Files.write(ptr.toPath, name.getBytes("UTF-8")) // no newline
-        assert(ArtifactStore.anyPointer(s, RootKey, "probe_x_*"))
-        assert(!ArtifactStore.isLive(s, RootKey, "probe_x_00ff"))
+        assert(ArtifactStore.anyPointer(s, "probe_x_*"))
+        assert(!ArtifactStore.isLive(s, "probe_x_00ff"))
         // pointee missing its _SUCCESS marker: isLive false
         java.nio.file.Files.write(ptr.toPath, (name + "\n").getBytes("UTF-8"))
-        assert(ArtifactStore.isLive(s, RootKey, "probe_x_00ff"))
+        assert(ArtifactStore.isLive(s, "probe_x_00ff"))
         assert(new java.io.File(new java.io.File(root, name), "_SUCCESS").delete())
-        assert(!ArtifactStore.isLive(s, RootKey, "probe_x_00ff"))
+        assert(!ArtifactStore.isLive(s, "probe_x_00ff"))
       }
     }
 
     it("a torn pointer (no newline terminator) reads as absent and self-heals") {
       withScratchDir("graft_as_torn") { root =>
         val s = session(root)
-        ArtifactStore.getOrBuild(s, RootKey, "art_b")(writeRange(s, 50))
+        ArtifactStore.getOrBuild(s, "art_b")(writeRange(s, 50))
         val ptr = new java.io.File(root, "art_b.ptr")
         val name = new String(java.nio.file.Files.readAllBytes(ptr.toPath), "UTF-8").trim
         java.nio.file.Files.write(ptr.toPath, name.getBytes("UTF-8")) // strip terminator
         var rebuilt = false
-        val df = ArtifactStore.getOrBuild(s, RootKey, "art_b") { p =>
+        val df = ArtifactStore.getOrBuild(s, "art_b") { p =>
           rebuilt = true; writeRange(s, 50)(p)
         }
         assert(rebuilt, "torn pointer must trigger a rebuild")
@@ -95,11 +95,11 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_poison") { root =>
         val s = session(root)
         s.conf.set("spark.graft.artifact.staleMs", "0")
-        ArtifactStore.getOrBuild(s, RootKey, "art_c")(writeRange(s, 10))
+        ArtifactStore.getOrBuild(s, "art_c")(writeRange(s, 10))
         val ptr = new java.io.File(root, "art_c.ptr")
         val first = new String(java.nio.file.Files.readAllBytes(ptr.toPath), "UTF-8").trim
         new java.io.File(new java.io.File(root, first), "_SUCCESS").delete()
-        assert(ArtifactStore.getOrBuild(s, RootKey, "art_c")(writeRange(s, 10)).count() == 10)
+        assert(ArtifactStore.getOrBuild(s, "art_c")(writeRange(s, 10)).count() == 10)
         val healedName = new String(java.nio.file.Files.readAllBytes(ptr.toPath), "UTF-8").trim
         assert(healedName != first, "pointer still names the poisoned dir")
         assert(!new java.io.File(root, first).exists(), "stale poisoned dir not collected")
@@ -110,9 +110,9 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_gc") { root =>
         val s = session(root)
         s.conf.set("spark.graft.artifact.staleMs", "0")
-        ArtifactStore.getOrBuild(s, RootKey, "art_d")(writeRange(s, 25))
+        ArtifactStore.getOrBuild(s, "art_d")(writeRange(s, 25))
         // resolve again (runs GC with everything "stale"): live dir survives
-        assert(ArtifactStore.getOrBuild(s, RootKey, "art_d")(writeRange(s, 25)).count() == 25)
+        assert(ArtifactStore.getOrBuild(s, "art_d")(writeRange(s, 25)).count() == 25)
         val versions = new java.io.File(root).listFiles()
           .filter(f => f.isDirectory && f.getName.startsWith("art_d_v_"))
         assert(versions.length == 1, s"live version collected or duplicated: ${versions.map(_.getName).toSeq}")
@@ -129,7 +129,7 @@ class ArtifactStoreSpec extends SparkSpec {
           val futs = Seq(s1, s2).map { s =>
             pool.submit { () =>
               start.await()
-              ArtifactStore.getOrBuild(s, RootKey, "art_e")(writeRange(s, 1000)).count(): Long
+              ArtifactStore.getOrBuild(s, "art_e")(writeRange(s, 1000)).count(): Long
             }
           }
           start.countDown()
@@ -154,8 +154,8 @@ class ArtifactStoreSpec extends SparkSpec {
         val s = session(root)
         val dead = "fam_" + "a" * 16   // digest-shaped suffix
         val live = "fam_" + "b" * 16
-        ArtifactStore.getOrBuild(s, RootKey, dead)(writeRange(s, 5))
-        ArtifactStore.getOrBuild(s, RootKey, live)(writeRange(s, 7))
+        ArtifactStore.getOrBuild(s, dead)(writeRange(s, 5))
+        ArtifactStore.getOrBuild(s, live)(writeRange(s, 7))
         // age the dead digest's pointer + version past the orphan horizon
         val deadPtr = new java.io.File(root, s"$dead.ptr")
         val deadV = new java.io.File(root).listFiles()
@@ -163,13 +163,13 @@ class ArtifactStoreSpec extends SparkSpec {
         (deadPtr +: deadV.toSeq).foreach(f => assert(f.setLastModified(1000L)))
         s.conf.set("spark.graft.artifact.orphanMs", "60000")
         // any same-family resolve runs the sweep
-        assert(ArtifactStore.getOrBuild(s, RootKey, live)(writeRange(s, 7)).count() == 7)
+        assert(ArtifactStore.getOrBuild(s, live)(writeRange(s, 7)).count() == 7)
         assert(!deadPtr.exists(), "dead digest's pointer not collected")
         assert(new java.io.File(root).listFiles()
           .forall(f => !f.getName.startsWith(s"${dead}_v_")), "dead digest's version not collected")
         // the live sibling (just resolved → freshly touched) is intact
         assert(new java.io.File(root, s"$live.ptr").exists(), "live sibling's pointer collected")
-        assert(ArtifactStore.getOrBuild(s, RootKey, live)(writeRange(s, 7)).count() == 7)
+        assert(ArtifactStore.getOrBuild(s, live)(writeRange(s, 7)).count() == 7)
       }
     }
 
@@ -177,11 +177,11 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_touch") { root =>
         val s = session(root)
         val a = "tch_" + "c" * 16
-        ArtifactStore.getOrBuild(s, RootKey, a)(writeRange(s, 3))
+        ArtifactStore.getOrBuild(s, a)(writeRange(s, 3))
         val ptr = new java.io.File(root, s"$a.ptr")
         assert(ptr.setLastModified(1000L))
         // resolving the artifact itself refreshes the usage marker
-        assert(ArtifactStore.getOrBuild(s, RootKey, a)(writeRange(s, 3)).count() == 3)
+        assert(ArtifactStore.getOrBuild(s, a)(writeRange(s, 3)).count() == 3)
         assert(ptr.lastModified() > 1000L, "resolve did not touch the pointer usage marker")
       }
     }
@@ -195,15 +195,15 @@ class ArtifactStoreSpec extends SparkSpec {
         val s = session(root)
         val live = "rc_" + "d" * 16
         val other = "rc_" + "e" * 16
-        ArtifactStore.getOrBuild(s, RootKey, live)(writeRange(s, 4))
-        ArtifactStore.getOrBuild(s, RootKey, other)(writeRange(s, 6))
+        ArtifactStore.getOrBuild(s, live)(writeRange(s, 4))
+        ArtifactStore.getOrBuild(s, other)(writeRange(s, 6))
         val liveV = new java.io.File(root).listFiles()
           .filter(f => f.isDirectory && f.getName.startsWith(s"${live}_v_"))
         assert(liveV.nonEmpty)
         // a resolve refreshes the dir mtime — so this aging only sticks
         // if the fix were reverted
         liveV.foreach(f => assert(f.setLastModified(1000L)))
-        assert(ArtifactStore.getOrBuild(s, RootKey, live)(writeRange(s, 4)).count() == 4)
+        assert(ArtifactStore.getOrBuild(s, live)(writeRange(s, 4)).count() == 4)
         assert(liveV.forall(_.lastModified() > 1000L),
           "resolve did not refresh the version dir's usage marker")
         // now simulate the pointer-absent window with an aged dir: even
@@ -212,11 +212,11 @@ class ArtifactStoreSpec extends SparkSpec {
         val ptrBytes = java.nio.file.Files.readAllBytes(ptr.toPath)
         assert(ptr.delete())
         s.conf.set("spark.graft.artifact.orphanMs", "60000")
-        assert(ArtifactStore.getOrBuild(s, RootKey, other)(writeRange(s, 6)).count() == 6)
+        assert(ArtifactStore.getOrBuild(s, other)(writeRange(s, 6)).count() == 6)
         assert(liveV.forall(_.exists()),
           "sweep collected a recently-used version during its pointer's commit window")
         java.nio.file.Files.write(ptr.toPath, ptrBytes)
-        assert(ArtifactStore.getOrBuild(s, RootKey, live)(writeRange(s, 4)).count() == 4)
+        assert(ArtifactStore.getOrBuild(s, live)(writeRange(s, 4)).count() == 4)
       }
     }
 
@@ -224,7 +224,7 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_legacy") { root =>
         val s = session(root)
         val current = "ren_9_" + "f" * 16
-        ArtifactStore.getOrBuild(s, RootKey, current)(writeRange(s, 5))
+        ArtifactStore.getOrBuild(s, current)(writeRange(s, 5))
         // plant a legacy-named pointer + version dir (digest-only form)
         val legacyBase = "ren_" + "a" * 16
         val legacyV = new java.io.File(root, s"${legacyBase}_v_deadbeef")
@@ -233,11 +233,11 @@ class ArtifactStoreSpec extends SparkSpec {
         java.nio.file.Files.write(legacyPtr.toPath, s"${legacyBase}_v_deadbeef\n".getBytes)
         Seq(legacyV, legacyPtr).foreach(f => assert(f.setLastModified(1000L)))
         s.conf.set("spark.graft.artifact.orphanMs", "60000")
-        ArtifactStore.sweepLegacyNames(s, RootKey, "ren_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
+        ArtifactStore.sweepLegacyNames(s, "ren_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
         assert(!legacyPtr.exists() && !legacyV.exists(), "legacy names not collected")
         // the current family (nb-prefixed) does not match the regex
         assert(new java.io.File(root, s"$current.ptr").exists())
-        assert(ArtifactStore.getOrBuild(s, RootKey, current)(writeRange(s, 5)).count() == 5)
+        assert(ArtifactStore.getOrBuild(s, current)(writeRange(s, 5)).count() == 5)
       }
     }
 
@@ -254,7 +254,7 @@ class ArtifactStoreSpec extends SparkSpec {
         java.nio.file.Files.write(servedPtr.toPath, s"${servedBase}_v_cafe0001\n".getBytes)
         assert(servedV.setLastModified(1000L)) // dir old; pointer fresh
         s.conf.set("spark.graft.artifact.orphanMs", "60000")
-        ArtifactStore.sweepLegacyNames(s, RootKey, "rn2_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
+        ArtifactStore.sweepLegacyNames(s, "rn2_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
         assert(servedV.exists() && servedPtr.exists(),
           "sweep collected a family whose pointer is still being used")
       }
@@ -268,19 +268,19 @@ class ArtifactStoreSpec extends SparkSpec {
         val s = session(root)
         val dead = "sup_7_" + "a" * 16
         val sibling = "sup_7_" + "b" * 16
-        ArtifactStore.getOrBuild(s, RootKey, dead)(writeRange(s, 5))
-        ArtifactStore.getOrBuild(s, RootKey, sibling)(writeRange(s, 6))
+        ArtifactStore.getOrBuild(s, dead)(writeRange(s, 5))
+        ArtifactStore.getOrBuild(s, sibling)(writeRange(s, 6))
         val deadPtr = new java.io.File(root, s"$dead.ptr")
         val deadV = new java.io.File(root).listFiles()
           .filter(f => f.isDirectory && f.getName.startsWith(s"${dead}_v_"))
         (deadPtr +: deadV.toSeq).foreach(f => assert(f.setLastModified(1000L)))
         s.conf.set("spark.graft.artifact.supersededMs", "60000")
-        ArtifactStore.sweepSupersededFamily(s, RootKey, dead)
+        ArtifactStore.sweepSupersededFamily(s, dead)
         assert(!deadPtr.exists(), "superseded pointer not collected")
         assert(deadV.forall(!_.exists()), "superseded versions not collected")
         // the live same-prefix sibling is untouched (exact-name sweep)
         assert(new java.io.File(root, s"$sibling.ptr").exists())
-        assert(ArtifactStore.getOrBuild(s, RootKey, sibling)(writeRange(s, 6)).count() == 6)
+        assert(ArtifactStore.getOrBuild(s, sibling)(writeRange(s, 6)).count() == 6)
       }
     }
 
@@ -288,13 +288,13 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_supers2") { root =>
         val s = session(root)
         val served = "sup_8_" + "c" * 16
-        ArtifactStore.getOrBuild(s, RootKey, served)(writeRange(s, 4))
+        ArtifactStore.getOrBuild(s, served)(writeRange(s, 4))
         // pointer mtime is now-fresh (just resolved) — mixed-version guard
         s.conf.set("spark.graft.artifact.supersededMs", "60000")
-        ArtifactStore.sweepSupersededFamily(s, RootKey, served)
+        ArtifactStore.sweepSupersededFamily(s, served)
         assert(new java.io.File(root, s"$served.ptr").exists(),
           "sweep collected a family whose pointer is still being used")
-        assert(ArtifactStore.getOrBuild(s, RootKey, served)(writeRange(s, 4)).count() == 4)
+        assert(ArtifactStore.getOrBuild(s, served)(writeRange(s, 4)).count() == 4)
       }
     }
 
@@ -302,12 +302,12 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_as_fwd") { root =>
         val s = session(root)
         val a = "fwd_" + "c" * 16
-        ArtifactStore.getOrBuild(s, RootKey, a)(writeRange(s, 3))
+        ArtifactStore.getOrBuild(s, a)(writeRange(s, 3))
         val v = new java.io.File(root).listFiles()
           .filter(f => f.isDirectory && f.getName.startsWith(s"${a}_v_")).head
         val future = System.currentTimeMillis() + 3600000L
         assert(v.setLastModified(future))
-        assert(ArtifactStore.getOrBuild(s, RootKey, a)(writeRange(s, 3)).count() == 3)
+        assert(ArtifactStore.getOrBuild(s, a)(writeRange(s, 3)).count() == 3)
         assert(v.lastModified() >= future - 1000L,
           "resolve rewound a forward-dated tree's protective mtime")
       }
@@ -320,7 +320,7 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_rd_same") { root =>
         val s = session(root)
         var builds = 0
-        def get() = ArtifactStore.reader(s, RootKey, "rd_a") { p =>
+        def get() = ArtifactStore.reader(s, "rd_a") { p =>
           builds += 1; writeRange(s, 10)(p)
         }
         val first = get()
@@ -334,7 +334,7 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_rd_sess") { root =>
         val s1 = session(root)
         var builds = 0
-        def get(s: SparkSession) = ArtifactStore.reader(s, RootKey, "rd_b") { p =>
+        def get(s: SparkSession) = ArtifactStore.reader(s, "rd_b") { p =>
           builds += 1; writeRange(s, 7)(p)
         }
         val r1 = get(s1)
@@ -351,14 +351,14 @@ class ArtifactStoreSpec extends SparkSpec {
       withScratchDir("graft_rd_rootA") { rootA =>
         withScratchDir("graft_rd_rootB") { rootB =>
           val s = session(rootA)
-          val ra = ArtifactStore.reader(s, RootKey, "rd_c")(writeRange(s, 3))
+          val ra = ArtifactStore.reader(s, "rd_c")(writeRange(s, 3))
           s.conf.set(RootKey, "file:" + rootB)
-          val rb = ArtifactStore.reader(s, RootKey, "rd_c")(writeRange(s, 4))
+          val rb = ArtifactStore.reader(s, "rd_c")(writeRange(s, 4))
           assert(!(rb eq ra), "root B was served root A's reader")
           assert(rb.count() == 4)
           assert(new java.io.File(rootB, "rd_c.ptr").exists(), "nothing published under root B")
           s.conf.set(RootKey, "file:" + rootA)
-          assert(ArtifactStore.reader(s, RootKey, "rd_c")(writeRange(s, 3)) eq ra)
+          assert(ArtifactStore.reader(s, "rd_c")(writeRange(s, 3)) eq ra)
         }
       }
     }
@@ -366,12 +366,57 @@ class ArtifactStoreSpec extends SparkSpec {
     it("a memo hit inside capturing still reports the name") {
       withScratchDir("graft_rd_cap") { root =>
         val s = session(root)
-        val r = ArtifactStore.reader(s, RootKey, "rd_d")(writeRange(s, 2))
+        val r = ArtifactStore.reader(s, "rd_d")(writeRange(s, 2))
         val (hit, touched) = ArtifactStore.capturing {
-          ArtifactStore.reader(s, RootKey, "rd_d")(writeRange(s, 2))
+          ArtifactStore.reader(s, "rd_d")(writeRange(s, 2))
         }
         assert(hit eq r)
         assert(touched.contains("rd_d"), s"memo hit not captured: $touched")
+      }
+    }
+  }
+
+  describe("ArtifactStore.resolveOnly") {
+
+    it("on a cold root throws NotLive without running write or creating the root") {
+      withScratchDir("graft_ro_cold") { scratch =>
+        val root = new java.io.File(scratch, "root")
+        val s = session(root.getPath)
+        var builds = 0
+        intercept[ArtifactStore.NotLive] {
+          ArtifactStore.resolveOnly {
+            ArtifactStore.reader(s, "ro_a") { p => builds += 1; writeRange(s, 3)(p) }
+          }
+        }
+        assert(builds == 0, "write ran under resolveOnly")
+        assert(!root.exists(), "resolveOnly created the artifact root")
+      }
+    }
+
+    it("on a live artifact returns the same reader as a normal call") {
+      withScratchDir("graft_ro_live") { root =>
+        val builder = session(root)
+        ArtifactStore.getOrBuild(builder, "ro_b")(writeRange(builder, 5))
+        val s = session(root)
+        var builds = 0
+        def get() = ArtifactStore.reader(s, "ro_b") { p => builds += 1; writeRange(s, 5)(p) }
+        val r = ArtifactStore.resolveOnly(get())
+        assert(get() eq r)
+        assert(builds == 0, "a live artifact was rebuilt")
+        assert(r.count() == 5)
+      }
+    }
+
+    it("a memo holder that failed under resolveOnly builds on the next plain call") {
+      withScratchDir("graft_ro_retry") { root =>
+        val s = session(root)
+        var builds = 0
+        def get() = ArtifactStore.reader(s, "ro_c") { p => builds += 1; writeRange(s, 4)(p) }
+        intercept[ArtifactStore.NotLive](ArtifactStore.resolveOnly(get()))
+        val r = get()
+        assert(builds == 1, s"expected one build, got $builds")
+        assert(r.count() == 4)
+        assert(ArtifactStore.resolveOnly(get()) eq r)
       }
     }
   }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.Row
 
 /** Concurrent-session safety of the production ANN index build
   * ([[graft.sources.AnnIndex.partitionedIndex]]): two live sessions
-  * racing to build the same `spark.graft.ann.indexDir` must both read a
+  * racing to build the same `spark.graft.artifactDir` must both read a
   * complete, identical index. Under the round-9 pointer protocol data
   * directories are never renamed, so the historical failure mode — the
   * loser's tree nested inside the live index, poisoning partition
@@ -43,7 +43,7 @@ class IndexRaceSpec extends SparkSpec {
       withScratchDir("graft_idx_race") { root =>
         val s1 = spark.newSession()
         val s2 = spark.newSession()
-        Seq(s1, s2).foreach(_.conf.set("spark.graft.ann.indexDir", "file:" + root))
+        Seq(s1, s2).foreach(_.conf.set("spark.graft.artifactDir", "file:" + root))
         val start = new CountDownLatch(1)
         val pool = Executors.newFixedThreadPool(2)
         try {
@@ -86,13 +86,13 @@ class IndexRaceSpec extends SparkSpec {
     it("a poisoned live target is rebuilt; the stale leftover is collected") {
       withScratchDir("graft_idx_stale") { root =>
         val s = spark.newSession()
-        s.conf.set("spark.graft.ann.indexDir", "file:" + root)
+        s.conf.set("spark.graft.artifactDir", "file:" + root)
         s.conf.set("spark.graft.artifact.staleMs", "0") // everything is stale
         graft.sources.AnnIndex.partitionedIndex(s, sfDir) // builds clean
         val first = liveTarget(root)
         new java.io.File(first, "_SUCCESS").delete() // poison: live → crash leftover
         val s3 = spark.newSession()
-        s3.conf.set("spark.graft.ann.indexDir", "file:" + root)
+        s3.conf.set("spark.graft.artifactDir", "file:" + root)
         s3.conf.set("spark.graft.artifact.staleMs", "0")
         val rebuilt = graft.sources.AnnIndex.partitionedIndex(s3, sfDir)
         assert(rebuilt.count() == spark.read.parquet(s"$sfDir/embeddings.parquet").count())
