@@ -356,11 +356,9 @@ object SearchQueries {
     * object init (see the init-order note at [[ChunkGear]]). */
   private[graft] final val SubstrW = 20
 
-  private val winCache = new graft.util.SessionCache[DataFrame]
-
   /** The SHARED positional window-hash table (doc_id, wpos, h): one
-    * 1-based-start md5 per W-token window, materialized ONCE (checkpoint;
-    * a deployment stores it — the ExactSubstr suffix table's lake analog,
+    * 1-based-start md5 per W-token window, stored once per corpus digest
+    * (`graft_exwin_*` — the ExactSubstr suffix table's lake analog,
     * rebuilt per ingest like the MinHash signature artifact). d30's
     * census, its semi-join, and d33's removal all read this one table —
     * an unshared plan would pay the O(tokens × W) hashing pass per
@@ -370,8 +368,9 @@ object SearchQueries {
     * evaluates the transform on unfiltered rows, where a bare
     * sequence(1, size-W+1) on a short doc yields a descending [1, 0]
     * and slice(…, 0, …) throws. */
-  private def windowHashTable(s: SparkSession, dir: String): DataFrame =
-    winCache.getOrElseUpdate(s, s"$dir#exwin")(
+  private[graft] def windowHashTable(s: SparkSession, dir: String): DataFrame =
+    graft.sources.ArtifactStore.reader(s,
+        s"graft_exwin_${graft.sources.TextIndex.srcDigest(s, dir, "exwin")}") { path =>
       docs(s, dir)
         .select(col("doc_id"), split(col("text"), " ").as("toks"))
         .where(size(col("toks")) >= SubstrW)
@@ -386,7 +385,8 @@ object SearchQueries {
             GraftBridge.expression(col("toks")), SubstrW)).as("hs"))
         .select(col("doc_id"), posexplode(col("hs")))
         .select(col("doc_id"), (col("pos") + 1).as("wpos"), col("col").as("h"))
-        .localCheckpoint())
+        .write.mode("overwrite").parquet(path)
+    }
 
   /** d31's token-hash partition fan-out. 64 directories keeps the demo
     * artifact small; a 100 TB deployment raises it the same way
@@ -478,9 +478,8 @@ object SearchQueries {
         .write.mode("overwrite").parquet(path)
     }
 
-  /** Drop this session's window-hash checkpoint and free its blocks
-    * (bench inter-family release; rebuilds lazily). The posting/norms
-    * readers ([[graft.sources.ArtifactStore.reader]]) are kept. */
-  def releaseCaches(s: SparkSession): Unit =
-    winCache.removeAll(s).foreach(GraftBridge.unpersistLocalCheckpoint)
+  /** The bench's inter-family release: a no-op, because every shared
+    * search table is a stored artifact whose reader stays open
+    * ([[graft.sources.ArtifactStore.reader]]). */
+  def releaseCaches(s: SparkSession): Unit = ()
 }

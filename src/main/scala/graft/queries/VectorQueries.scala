@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import CoreQueries.Q
@@ -147,10 +147,10 @@ object VectorQueries {
   /** Query-time ADC lookup table: exact sub-dots of the query vector
     * against every stored codebook entry — M×KSub rows, checkpointed
     * (joined MSub times downstream). Shared by e08/e14/e15 — and cached
-    * per (session, dir) so one bench/serving session builds the small
-    * table once, not once per probe query (the established SessionCache
-    * pattern for every other shared intermediate); released with the
-    * e-family caches below. */
+    * per (session, dir), because building it per call measured e08 and
+    * e14 about 1.5× slower at rep 3 (two extra jobs per query: the query
+    * vector's broadcast and the checkpoint). It is the one query-time
+    * checkpoint cache of the vector family; [[releaseCaches]] drops it. */
   private val lutCache = new graft.util.SessionCache[DataFrame]
   private def queryLut(s: SparkSession, dir: String): DataFrame =
     lutCache.getOrElseUpdate(s, dir)(lutOf(s, dir, pqCodebooks(s, dir)))
@@ -164,10 +164,11 @@ object VectorQueries {
         dotNativeC(expr(s"slice(qvec, m * $SubDim + 1, $SubDim)"), col("cvec")).as("l"))
       .localCheckpoint()
 
-  /** Free this session's query-LUT checkpoint blocks (bench
-    * inter-family release; rebuilds lazily). */
-  private[graft] def releaseCaches(s: SparkSession): Unit =
-    lutCache.removeAll(s).foreach(GraftBridge.unpersistLocalCheckpoint)
+  /** Drop this session's query LUTs (bench inter-family release; they
+    * rebuild lazily). The ContextCleaner frees their checkpoint blocks
+    * once the dropped DataFrames are collected — the bench nudges the GC
+    * right after the release. */
+  private[graft] def releaseCaches(s: SparkSession): Unit = lutCache.removeAll(s)
 
   /** e16's query-time RESIDUAL ADC lookup table — [[lutOf]] against the
     * residual-trained codebooks (the query itself is NOT residualized:

@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
  * in parallel, into the session's readers
  * ([[graft.sources.ArtifactStore.reader]]).
  *
- * Why: each stored family (MinHash signatures, LSH bands, posting/
- * positional/norms tables, CDC chunks, the d27 corpus index, the SRP
- * quantizer metadata, the JL sketch, the IVF index) costs a pointer read,
+ * Why: each stored family (MinHash signatures, LSH bands and pairs,
+ * posting/positional/norms/window tables, CDC chunks, the d27 corpus
+ * index, the SRP quantizer metadata, the coded vectors, the JL sketch,
+ * the IVF index, the clustered audit view) costs a pointer read,
  * a parquet footer open and — for partitioned artifacts — partition
  * discovery on FIRST touch. Individually tiny driver-side reads, but a
  * fresh session's first index-backed query used to absorb them all
@@ -25,9 +26,9 @@ import org.apache.spark.sql.SparkSession
  * the hook counts as a completed skip — never built, so a cold root warms
  * in milliseconds and the first real query pays the build exactly as
  * before; warming never moves index-BUILD cost out of measured queries.
- * Thread-safety: the reader memo and the checkpoint caches deduplicate
- * resolves per (session, key) behind lazy holders
- * ([[graft.util.SessionCache]]), so a real query racing the warm-up
+ * Thread-safety: the reader memo deduplicates resolves per (session,
+ * key) behind lazy holders ([[graft.util.SessionCache]]), so a real
+ * query racing the warm-up
  * simply shares the same resolve (and builds itself if the warm-up's
  * resolve-only attempt found nothing live).
  */
@@ -39,10 +40,12 @@ object Warm {
     * whose artifact is absent completes as a no-op). */
   def resolve(s: SparkSession, dir: String, timeoutSec: Int = 120): Seq[String] = {
     import graft.sources.{AnnIndex => A, ArtifactStore, TextIndex => T}
-    import graft.queries.{SearchQueries => Q}
+    import graft.queries.{MogQueries => M, SearchQueries => Q, TextQueries => TQ}
     val hooks: Seq[(String, () => Any)] = Seq(
       "text:sig" -> (() => T.sigTable(s, dir)),
       "text:bands" -> (() => T.bandsTable(s, dir)),
+      "text:lshcand" -> (() => TQ.candidatePairs(s, dir)),
+      "text:lshver" -> (() => TQ.verifiedPairs(s, dir)),
       "text:chunks" -> (() => T.chunkTable(s, dir)),
       "text:d27" -> (() => T.corpusIndex(s, dir)),
       "search:inv" -> (() => Q.invertedIndex(s, dir)),
@@ -50,6 +53,7 @@ object Warm {
       "search:norms" -> (() => Q.docLengths(s, dir)),
       "search:invold" -> (() => Q.oldPostingIndex(s, dir)),
       "search:invroll" -> (() => Q.rolledPostingIndex(s, dir)),
+      "search:exwin" -> (() => Q.windowHashTable(s, dir)),
       "vec:srpmeta" -> (() => A.nbitsOf(s, dir)),
       "vec:jl" -> (() => A.jlSketch(s, dir)),
       "vec:cents1" -> (() => A.trainedCentroids(s, dir)),
@@ -62,11 +66,13 @@ object Warm {
         if (ArtifactStore.anyPointer(s, s"graft_annold_*_${A.embDigest(s, dir, "annold2")}") &&
             ArtifactStore.anyPointer(s, s"graft_annroll_*_${A.embDigest(s, dir, "annroll2")}"))
           A.annRolledIndex(s, dir, A.annNbOld(s, dir))),
-      // the stored index first: with it live, codedVectors is a load
-      "vec:ivf" -> (() => { A.partitionedIndex(s, dir); A.codedVectors(s, dir) }),
+      "vec:coded" -> (() => A.codedVectors(s, dir)),
+      "vec:ivf" -> (() => A.partitionedIndex(s, dir)),
       "vec:ivfpq" -> (() => A.ivfPqIndex(s, dir)),
       "vec:rpqcb" -> (() => A.collectedRpqCodebooks(s, dir)),
-      "vec:rpqcodes" -> (() => A.rpqCodes(s, dir)))
+      "vec:rpqcodes" -> (() => A.rpqCodes(s, dir)),
+      "mog:view" -> (() => M.storedMogView(s, dir)),
+      "mog:truth" -> (() => M.truthTop5(s, dir)))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(hooks.size, 8),
       r => { val t = new Thread(r, "graft-warm"); t.setDaemon(true); t })

@@ -20,6 +20,7 @@ import org.apache.spark.sql.functions._
  * the FAISS train()/add() split, applied file-by-file:
  *
  *  - `graft_srp_meta_*`  — the derived SRP quantizer width ([[nbitsOf]])
+ *  - `graft_coded_*`     — the coded vectors, unpartitioned ([[codedVectors]])
  *  - `graft_ivf_idx_*`   — coded vectors partitioned by bucket code
  *  - `graft_cents1_*`    — Lloyd-trained IVF centroids ([[trainedCentroids]])
  *  - `graft_jl_*`        — the 16-dim JL sketch table ([[jlSketch]])
@@ -33,7 +34,10 @@ import org.apache.spark.sql.functions._
  * Every stored value is bit-stable across partitionings and engines
  * (decimal-exact dots, integer-exact width derivation), so an artifact
  * read is indistinguishable from a fresh computation — the oracle, which
- * retrains from raw embeddings every run, still hash-matches.
+ * retrains from raw embeddings every run, still hash-matches. Nothing
+ * here holds executor blocks between queries: build-time intermediates
+ * ([[residualVectors]]) are plain plans, and everything shared is a
+ * stored family.
  */
 object AnnIndex {
 
@@ -162,44 +166,22 @@ object AnnIndex {
       sqrt(dotNative("embedding", "embedding")).as("norm"))
 
   /** The stored "index": every vector with its SRP bucket code and L2
-    * norm, materialized once (a production table keeps this precomputed
-    * and partitioned/bucketed BY the code, so a probe is partition
-    * pruning; the stored norm means cosine scoring costs one dot per
-    * pair, not three). */
-  private val codedCache = new graft.util.SessionCache[DataFrame]
-  private[graft] def codedVectors(s: SparkSession, dir: String): DataFrame =
-    // cached per (session, dir): this IS the stored index table — e02/e03/
-    // e05/d12 all read it, as a production deployment reads the
-    // materialized code table rather than re-quantizing the corpus.
-    // When the stored partitioned index (e09's artifact — the SAME rows,
-    // written partitionBy(code)) is already live, LOAD it instead of
-    // re-coding: a fresh session then pays one stored-index read, not a
-    // corpus re-quantization (r10's e06 probe paid ~3.5 s of exactly
-    // that on rep 1; the Warm hook runs this load in the session-start
-    // batch so no query absorbs it at all). Loaded INTO a checkpoint,
-    // not served as the partitioned reader: the consumers here (Lloyd
-    // iterations, the d12 self-join) are full-scan-iterative, and
-    // re-opening a 2^nbits-directory layout per iteration is small-file
-    // death at sf10+ (measured: e06 steady 2.9 s vs 1.3 s). Probe-style
-    // pruned access keeps using [[partitionedIndex]] directly. The
-    // partition column round-trips as a directory key (inferred int) —
-    // restore the canonical column order and long type.
-    codedCache.getOrElseUpdate(s, dir) {
-      val nb = nbitsOf(s, dir)
-      if (ArtifactStore.isLive(s, s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}"))
-        // COALESCE before checkpointing: the stored layout is one small
-        // file per code directory (2^nbits of them — 4096 at sf10), and
-        // localCheckpoint freezes the scan's partitioning, so without
-        // this every downstream stage pays thousands of near-empty
-        // tasks per action (measured at sf10: e05 steady 18 s vs 1.6 s
-        // recomputed; with the coalesce the load path wins again)
-        partitionedIndex(s, dir).select(
-            col("vec_id"), col("embedding"),
-            col("code").cast("long").as("code"), col("norm"))
-          .coalesce(s.sparkContext.defaultParallelism)
-          .localCheckpoint()
-      else codeVectors(emb(s, dir), nb).localCheckpoint()
+    * norm (`graft_coded_<nb>_*`), coded once per corpus digest and width
+    * (a production table keeps this precomputed and partitioned/bucketed
+    * BY the code, so a probe is partition pruning; the stored norm means
+    * cosine scoring costs one dot per pair, not three). e02/e03/e05/d12,
+    * the Lloyd builds and the s18 stream read it, and the partitioned
+    * index ([[partitionedIndex]]) and the IVF-PQ layout ([[ivfPqIndex]])
+    * are built from it. Unpartitioned on purpose: the consumers here are
+    * full-scan-iterative, and re-opening the 2^nbits-directory layout per
+    * iteration is small-file death at sf10+ (measured: e06 steady 2.9 s
+    * vs 1.3 s); probe-style pruned access uses [[partitionedIndex]]. */
+  private[graft] def codedVectors(s: SparkSession, dir: String): DataFrame = {
+    val nb = nbitsOf(s, dir)
+    ArtifactStore.reader(s, s"graft_coded_${nb}_${embDigest(s, dir, "coded")}") { path =>
+      codeVectors(emb(s, dir), nb).write.mode("overwrite").parquet(path)
     }
+  }
 
   /** The stored index in its PRODUCTION layout: the coded vectors
     * written once as a parquet table PARTITIONED BY the bucket code, so a
@@ -584,21 +566,15 @@ object AnnIndex {
     * float−float subtraction is exactly representable in double and then
     * correctly rounded back, so both engines produce bit-identical
     * residuals. Not itself a stored table: it is the build-time input of
-    * the two stored residual artifacts below — session-cached as a
-    * tracked checkpoint so a cold root's TWO builds (codebooks, then
-    * codes) pay the corpus-scale assignment pass ONCE, not twice;
-    * [[releaseCaches]] frees the blocks with the coded table's. */
-  private val resCache = new graft.util.SessionCache[DataFrame]
-  private[graft] def residualVectors(s: SparkSession, dir: String): DataFrame =
-    resCache.getOrElseUpdate(s, dir) {
-      val coded = codedVectors(s, dir)
-      val cents = trainedCentroids(s, dir)
-      withCentroid(coded, cents)
-        .join(broadcast(cents.select(col("cid"), col("cvec"))), "cid")
-        .select(col("vec_id"), col("cid"),
-          zip_with(col("embedding"), col("cvec"), (x, y) => x - y).as("rvec"))
-        .localCheckpoint()
-    }
+    * the two stored residual artifacts below, which run once per corpus
+    * digest, so each recomputes it from the stored coded table. */
+  private[graft] def residualVectors(s: SparkSession, dir: String): DataFrame = {
+    val cents = trainedCentroids(s, dir)
+    withCentroid(codedVectors(s, dir), cents)
+      .join(broadcast(cents.select(col("cid"), col("cvec"))), "cid")
+      .select(col("vec_id"), col("cid"),
+        zip_with(col("embedding"), col("cvec"), (x, y) => x - y).as("rvec"))
+  }
 
   /** The stored RESIDUAL PQ codebooks (`graft_rpq_cb_*`): the
     * [[pqCodebooks]] hash-sample seeding applied to residual sub-vectors
@@ -647,12 +623,8 @@ object AnnIndex {
     }
 
   // ------------------------------------------------------------- lifecycle
-  /** Drop this session's cached coded-vector and residual tables and
-    * free their checkpoint blocks (bench inter-family release; rebuilds
-    * lazily). Stored readers ([[ArtifactStore.reader]]) and the 64-row
-    * driver-side codebook Seqs are KEPT. */
-  def releaseCaches(s: SparkSession): Unit = {
-    codedCache.removeAll(s).foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint)
-    resCache.removeAll(s).foreach(org.apache.spark.sql.GraftBridge.unpersistLocalCheckpoint)
-  }
+  /** The bench's inter-family release: a no-op, because nothing here
+    * holds executor blocks (readers stay open, see
+    * [[ArtifactStore.reader]]). */
+  def releaseCaches(s: SparkSession): Unit = ()
 }

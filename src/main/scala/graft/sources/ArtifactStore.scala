@@ -40,12 +40,12 @@ object ArtifactStore {
 
   /** Observability for the warm-coverage gate (WarmCoverageSpec): every
     * artifact base name ever PUBLISHED ([[reader]]/[[getOrBuild]]) or PROBED
-    * ([[isLive]]/[[anyPointer]], or [[reader]] under [[resolveOnly]]) in
-    * this JVM. Plain name sets — negligible overhead, no behavior
-    * change; the spec normalizes the digest/width suffixes into family
-    * prefixes and asserts that every published family is probed by some
-    * warm hook, so a new stored family cannot silently miss
-    * session-start warm-up. */
+    * ([[reader]] under [[resolveOnly]], or [[anyPointer]]) in this JVM.
+    * Plain name sets — negligible overhead, no behavior change; the spec
+    * normalizes the digest/width suffixes into family prefixes and
+    * asserts that every published family is probed by some warm hook,
+    * so a new stored family cannot silently miss session-start
+    * warm-up. */
   private[graft] val publishedNames =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] val probedNames =
@@ -255,7 +255,8 @@ object ArtifactStore {
 
   /** Read the live version dir named by `ptr`, if any: pointer present,
     * newline-terminated (not torn), pointee carries Spark's _SUCCESS
-    * completeness marker. Shared by [[getOrBuild]] and [[isLive]]. */
+    * completeness marker. Shared by [[getOrBuild]] and the resolve-only
+    * check in [[reader]]. */
   private def readLive(fs: org.apache.hadoop.fs.FileSystem,
                        pfs: org.apache.hadoop.fs.FileSystem,
                        root: Path, ptr: Path): Option[Path] = {
@@ -274,10 +275,10 @@ object ArtifactStore {
   }
 
   /** Whether a live, complete artifact exists for `baseName` — a pure
-    * pointer read, never builds and never touches usage markers. */
-  def isLive(s: SparkSession, baseName: String): Boolean = {
-    probedNames.add(baseName)
-    recordTouch(baseName)
+    * pointer read, never builds and never touches usage markers. Only
+    * [[reader]]'s resolve-only mode asks (package-visible for
+    * ArtifactStoreSpec's probe states). */
+  private[graft] def isLive(s: SparkSession, baseName: String): Boolean = {
     val (fs, pfs, root) = rootFs(s)
     readLive(fs, pfs, root, new Path(root, s"$baseName.ptr")).isDefined
   }

@@ -3,37 +3,41 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /**
- * Per-(session, key) cache for driver-side index artifacts (materialized
- * signature tables, coded vectors, table catalogs).
+ * Per-(session, key) cache: the stored-artifact readers
+ * ([[graft.sources.ArtifactStore.reader]]), the parquet catalog, two
+ * small values derived from stored artifacts (the quantizer width, the
+ * collected PQ codebooks), and two query-time checkpoints whose per-call
+ * rebuild measured too slow (VectorQueries' ADC lookup table, d27's
+ * batch side). Only those two hold executor blocks; their owners'
+ * `releaseCaches` drop them with [[removeAll]], and the ContextCleaner
+ * frees the blocks once the dropped DataFrames are collected.
  *
  * Keyed by the session OBJECT through a `WeakHashMap`, not by
  * `System.identityHashCode(session)`: an identity hash can be reused by a
  * new session once the old one is garbage-collected, which would hand the
- * new session another session's cached DataFrames (dead plans, freed
- * checkpoint blocks). With object keys a collision is impossible by
- * construction.
+ * new session another session's cached DataFrames (dead plans). With
+ * object keys a collision is impossible by construction.
  *
  * Lifetime, honestly: the cached VALUES (DataFrames, Graphs) strongly
  * reference their SparkSession, so while an entry map exists its weak
  * key stays reachable through it — the weak keying prevents collisions,
- * not automatic collection. Callers that retire a session release its
- * entries explicitly via [[removeAll]] (the bench's family release);
- * after removeAll the session and its plans become collectable.
+ * not automatic collection. Entries live as long as the session, or
+ * until [[removeAll]].
  *
  * Map lookup synchronizes on the WeakHashMap (it is not thread-safe);
  * entry builds run OUTSIDE that lock on the session's own concurrent map,
- * so one session materializing an index (a Spark job) never blocks
- * another session's cache.
+ * so one session resolving an artifact (pointer and footer I/O, maybe a
+ * build) never blocks another session's cache.
  *
  * Builds are deduplicated per (session, key): values are stored behind a
  * lazy holder, so when two threads race on `TrieMap.getOrElseUpdate`
  * (which may evaluate its default argument in both — it is
  * getOrElse + putIfAbsent underneath) only cheap holder objects are
  * created twice; both threads then force the SAME stored holder, whose
- * `lazy val` runs the expensive build (a Spark job materializing a
- * localCheckpoint) exactly once. Without this, the losing build's
- * checkpointed blocks would leak — discarded unreferenced, but never
- * unpersisted, and invisible to [[removeAll]].
+ * `lazy val` runs the expensive build exactly once (a losing build's
+ * checkpoint blocks would otherwise sit unreferenced until the next GC).
+ * A build that throws leaves the holder unforced, so the next lookup
+ * builds again.
  */
 object SessionCache {
   private val instances =
@@ -44,14 +48,9 @@ object SessionCache {
     * stand-in the seam-coverage gate uses so a stream's side-input
     * accessors must re-resolve their stored artifacts (and therefore
     * re-touch ArtifactStore, where the capture lives) instead of
-    * returning a prior test's cached reader. Dropped checkpointed values
-    * are NOT unpersisted here (the ContextCleaner reclaims unreferenced
-    * blocks); production release paths keep using the per-cache
-    * removeAll + explicit unpersist. Test-path only. */
-  private[graft] def dropAll(s: SparkSession): Unit = {
+    * returning a prior test's cached reader. Test-path only. */
+  private[graft] def dropAll(s: SparkSession): Unit =
     instances.forEach(_.removeAll(s))
-    ()
-  }
 }
 
 final class SessionCache[V] {
@@ -59,8 +58,7 @@ final class SessionCache[V] {
   SessionCache.register(this)
 
   private final class Holder(build: () => V) {
-    @volatile var forced = false
-    lazy val value: V = { val v = build(); forced = true; v }
+    lazy val value: V = build()
   }
 
   private val bySession =
@@ -79,13 +77,7 @@ final class SessionCache[V] {
   def getOrElseUpdate(s: SparkSession, key: String)(build: => V): V =
     mapFor(s).getOrElseUpdate(key, new Holder(() => build)).value
 
-  /** Remove and return this session's entries (cache release path).
-    * Unbuilt holders are NOT forced: an entry whose build never ran has
-    * nothing to release, and forcing it here would launch a Spark job
-    * just to throw the result away. */
-  def removeAll(s: SparkSession): Seq[V] = {
-    val m = bySession.synchronized(bySession.remove(s))
-    if (m == null) Nil
-    else m.values.toSeq.collect { case h if h.forced => h.value }
-  }
+  /** Forget this session's entries; the next lookup builds again. */
+  private[graft] def removeAll(s: SparkSession): Unit =
+    bySession.synchronized { bySession.remove(s); () }
 }

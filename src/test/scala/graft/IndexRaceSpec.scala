@@ -69,12 +69,16 @@ class IndexRaceSpec extends SparkSpec {
         // tree (the nesting that poisoned partition discovery), and each
         // INDEX dir holds only Spark's partitioned layout (code=*/ +
         // markers). The racers also publish the 1-row SRP quantizer
-        // metadata artifact (graft_srp_meta_*) through the same protocol
-        // — at most 2 versions of each artifact may exist post-race.
+        // metadata artifact (graft_srp_meta_*) and the unpartitioned
+        // coded table the index is built from (graft_coded_*) through the
+        // same protocol — at most 2 versions of each artifact may exist
+        // post-race.
         val vdirs = versionDirs(root)
-        val (metaDirs, idxDirs) = vdirs.partition(_.getName.startsWith("graft_srp_meta_"))
+        val (metaDirs, rest) = vdirs.partition(_.getName.startsWith("graft_srp_meta_"))
+        val (codedDirs, idxDirs) = rest.partition(_.getName.startsWith("graft_coded_"))
         assert(idxDirs.nonEmpty && idxDirs.size <= 2, s"unexpected index version dirs: ${idxDirs.map(_.getName)}")
         assert(metaDirs.size <= 2, s"unexpected meta version dirs: ${metaDirs.map(_.getName)}")
+        assert(codedDirs.size <= 2, s"unexpected coded version dirs: ${codedDirs.map(_.getName)}")
         idxDirs.foreach { d =>
           val foreign = d.listFiles().filter(f =>
             f.isDirectory && !f.getName.startsWith("code="))

@@ -187,21 +187,25 @@ class PlanQualitySpec extends SparkSpec {
     }
 
     it("coded-vector checkpoint loaded from the stored index keeps a sane partition count") {
-      // The sf10-only defect this pins: the stored index spans 2^nbits
-      // code DIRECTORIES, the scan gives ~one partition per small file,
-      // and localCheckpoint FREEZES that layout — without the coalesce,
-      // every downstream stage of every full-scan consumer (Lloyd, d12)
-      // pays thousands of near-empty tasks per action (measured at sf10:
-      // e05 steady ~6× slower than recomputing). A fresh session forces
-      // the load path (its codedCache entry is empty while the artifact
-      // from the e09 gate above is live).
+      // The sf10-only defect this pins: the partitioned index spans
+      // 2^nbits code DIRECTORIES, a scan of it gives ~one partition per
+      // small file, and every downstream stage of every full-scan
+      // consumer (Lloyd, d12) would pay thousands of near-empty tasks per
+      // action (measured at sf10: e05 steady ~6× slower than
+      // recomputing). A fresh session resolves the stored coded table
+      // (`graft_coded_*`, unpartitioned) while the partitioned artifact
+      // from the e09 gate above is live; the stored mog view the e18–e20
+      // audits read must keep its data-size spread just as well.
       graft.sources.AnnIndex.partitionedIndex(spark, sfDir) // ensure stored
       val s2 = spark.newSession()
       val coded = graft.sources.AnnIndex.codedVectors(s2, sfDir)
-      val parts = coded.rdd.getNumPartitions
-      assert(parts <= s2.sparkContext.defaultParallelism,
-        s"checkpointed coded table froze $parts partitions (files of the " +
-          s"partitioned artifact?) — expected <= ${s2.sparkContext.defaultParallelism}")
+      val mog = graft.queries.MogQueries.storedMogView(s2, sfDir)
+      Seq("coded table" -> coded, "mog view" -> mog).foreach { case (what, df) =>
+        val parts = df.rdd.getNumPartitions
+        assert(parts <= s2.sparkContext.defaultParallelism,
+          s"stored $what reads $parts partitions (files of the " +
+            s"partitioned artifact?) — expected <= ${s2.sparkContext.defaultParallelism}")
+      }
     }
 
     // AQE wraps the tree in AdaptiveSparkPlanExec / QueryStageExec —

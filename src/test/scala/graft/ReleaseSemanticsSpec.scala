@@ -1,10 +1,10 @@
 package graft
 
-/** Pins the bench inter-family release contract (r13): releaseCaches
-  * frees CHECKPOINT blocks (the q71 r6 incident — retained blocks taxing
-  * later families) but KEEPS the stored-artifact readers
-  * ([[graft.sources.ArtifactStore.reader]] says why). Reverting either
-  * half of the contract should fail here. */
+/** Pins the bench inter-family release contract: every releaseCaches the
+  * bench calls KEEPS the stored-artifact readers
+  * ([[graft.sources.ArtifactStore.reader]] says why) — the shared
+  * corpus-derived tables among them. Only the two query-time checkpoint
+  * caches (the ADC lookup table, d27's batch side) are dropped. */
 class ReleaseSemanticsSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
@@ -13,7 +13,14 @@ class ReleaseSemanticsSpec extends SparkSpec {
     val sig1 = graft.sources.TextIndex.sigTable(spark, sfDir)
     val chunk1 = graft.sources.TextIndex.chunkTable(spark, sfDir)
     val idx1 = graft.sources.TextIndex.corpusIndex(spark, sfDir)
+    val cand1 = graft.queries.TextQueries.candidatePairs(spark, sfDir)
+    val coded1 = graft.sources.AnnIndex.codedVectors(spark, sfDir)
+    // every release the bench's family boundary runs
     graft.queries.TextQueries.releaseCaches(spark)
+    graft.queries.SearchQueries.releaseCaches(spark)
+    graft.sources.AnnIndex.releaseCaches(spark)
+    graft.queries.VectorQueries.releaseCaches(spark)
+    graft.queries.MogQueries.releaseCaches(spark)
     // reference equality: a kept cache returns the SAME DataFrame; a
     // dropped one would re-resolve into a fresh instance
     assert(graft.sources.TextIndex.sigTable(spark, sfDir) eq sig1)
@@ -21,23 +28,7 @@ class ReleaseSemanticsSpec extends SparkSpec {
     val idx2 = graft.sources.TextIndex.corpusIndex(spark, sfDir)
     assert(idx2._1 eq idx1._1)
     assert(idx2._2 eq idx1._2)
-  }
-
-  it("releaseCaches still frees the checkpoint-holding caches") {
-    import scala.jdk.CollectionConverters._
-    // d09's candidate pairs are a session-cached localCheckpoint: after
-    // running it the block-manager holds its RDD; releaseCaches must
-    // unpersist it (retained blocks are exactly what the release exists
-    // to free)
-    SparkEntry.queries("d09_lsh_band_candidates")(spark, sfDir).count()
-    val withCand = spark.sparkContext.getPersistentRDDs.size
-    assert(withCand > 0, "expected d09's checkpoint to be persisted")
-    graft.queries.TextQueries.releaseCaches(spark)
-    // unpersist is synchronous on the driver's bookkeeping
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after < withCand,
-      s"releaseCaches freed no checkpoint blocks ($withCand -> $after)")
-    // and the checkpoint caches rebuild lazily: the query still runs
-    assert(SparkEntry.queries("d09_lsh_band_candidates")(spark, sfDir).count() > 0)
+    assert(graft.queries.TextQueries.candidatePairs(spark, sfDir) eq cand1)
+    assert(graft.sources.AnnIndex.codedVectors(spark, sfDir) eq coded1)
   }
 }

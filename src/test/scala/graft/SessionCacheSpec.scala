@@ -7,9 +7,7 @@ import graft.util.SessionCache
 
 /** Pins the build-deduplication contract of [[graft.util.SessionCache]]:
   * concurrent lookups of the same (session, key) must run the expensive
-  * build exactly once (a lost race used to leak the loser's
-  * localCheckpoint blocks — they were discarded unreferenced, invisible
-  * to removeAll).
+  * build exactly once, and `removeAll` forgets a session's entries.
   */
 class SessionCacheSpec extends SparkSpec {
 
@@ -36,17 +34,22 @@ class SessionCacheSpec extends SparkSpec {
         assert(values.forall(_ == 42))
         assert(builds.get() == 1, s"build ran ${builds.get()} times")
       } finally pool.shutdownNow()
-      assert(cache.removeAll(spark) == Seq(Integer.valueOf(42)))
+      cache.removeAll(spark)
+      cache.getOrElseUpdate(spark, "k") { builds.incrementAndGet(); Integer.valueOf(42) }
+      assert(builds.get() == 2, s"after removeAll the lookup ran ${builds.get()} builds in total")
     }
 
-    it("removeAll skips entries whose build never ran") {
+    it("removeAll makes the next lookup build again") {
       val cache = new SessionCache[Integer]
-      cache.getOrElseUpdate(spark, "built")(Integer.valueOf(1))
-      // force a second entry's holder into the map without forcing its
-      // lazy value: impossible through the public API (getOrElseUpdate
-      // always forces), so this documents the released set == forced set
-      assert(cache.removeAll(spark) == Seq(Integer.valueOf(1)))
-      assert(cache.removeAll(spark).isEmpty)
+      val builds = new AtomicInteger(0)
+      def lookup() = cache.getOrElseUpdate(spark, "built") {
+        builds.incrementAndGet(); Integer.valueOf(1)
+      }
+      lookup(); lookup()
+      assert(builds.get() == 1)
+      cache.removeAll(spark)
+      assert(lookup() == 1)
+      assert(builds.get() == 2, s"after removeAll the lookup ran ${builds.get()} builds in total")
     }
   }
 }

@@ -72,7 +72,7 @@ class WarmCoverageSpec extends SparkSpec {
   }
 
   it("warm-up never builds: a cold root stays empty, a built root gains no version") {
-    val hookCount = 20
+    val hookCount = 26
     withScratchDir("graft_warm_cold") { scratch =>
       val cold = spark.newSession()
       cold.conf.set("spark.graft.artifactDir", "file:" + scratch)
