@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /** Row-count and single-query timing probe.
   *
@@ -7,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Runs each named [[SparkEntry.queries]] entry under `count()` in a
   * fresh session, with optional extra SQL confs, and prints one
-  * `[rowcount] <name> <rows> <seconds>` line per query (the time covers
-  * building the DataFrame and the count).
+  * `[rowcount] <name> <rows> <seconds> <jobs>` line per query: the time
+  * covers building the DataFrame and the count, and the jobs (counted by
+  * a SparkListener) are every Spark job both ran — 1 for a plan that
+  * runs as one task ([[graft.plans.OneTaskPlan]]), more for each
+  * exchange, broadcast and driver-side collect.
   *
   * It is the Spark half of the driver's weaker rows-only check
   * (`tools/rowcount_check.py` runs `SELECT COUNT(*)` over the same
@@ -58,14 +64,22 @@ object RowCount {
     spark.range(1000).selectExpr("sum(id)").count()
     graft.sources.TestData.graph(spark, sfDir).V("region").df.count()
     graft.services.Warm.resolve(spark, sfDir)
+    val jobs = new AtomicInteger
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })
     names.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
+      GraftBridge.drainListeners(spark)
+      val j0 = jobs.get
       val t0 = System.nanoTime()
       // STDOUT like Verify's [verify] lines: the forked JVM's stdout
       // passes through sbt raw for the tool to grep
       try {
         val rows = fn(spark, sfDir).count()
-        println(f"[rowcount] $name $rows ${(System.nanoTime() - t0) / 1e9}%.3f")
+        val secs = (System.nanoTime() - t0) / 1e9
+        GraftBridge.drainListeners(spark)
+        println(f"[rowcount] $name $rows $secs%.3f ${jobs.get - j0}")
       } catch { case e: Throwable => println(s"[rowcount] $name ERROR ${e.getMessage}") }
     }
     spark.stop()

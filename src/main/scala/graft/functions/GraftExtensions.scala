@@ -21,11 +21,16 @@ object MinHashDefaults {
 }
 
 /**
- * SparkSessionExtensions hook registering the engine's native functions
- * for SQL use (`spark.sql.extensions=graft.functions.GraftExtensions` at
- * deploy time; [[GraftExtensions.register]] for a live session). Today:
+ * SparkSessionExtensions hook (`spark.sql.extensions=graft.functions.GraftExtensions`
+ * at deploy time) registering the engine's native functions for SQL use
+ * ([[GraftExtensions.register]] for a live session; e.g.
  * `minhash_signature(array<bigint>) → array<bigint>` with the default
- * 128-permutation parameterization.
+ * 128-permutation parameterization) and its plan rules:
+ *  - optimizer rules: [[graft.plans.MetadataCountRule]],
+ *    [[graft.plans.RedundantDistinctRule]], [[graft.plans.FirstStructPruningRule]]
+ *    and [[graft.plans.EagerCountAggregation]];
+ *  - the AQE query-stage preparation rule [[graft.plans.OneTaskPlan]]:
+ *    a plan whose scans are all single-split runs as one task.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -39,6 +44,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(session => graft.plans.FirstStructPruningRule(session))
     // count-aggregation pushdown below joins (on by default)
     ext.injectOptimizerRule(session => graft.plans.EagerCountAggregation(session))
+    // tiny inputs run as one task (after EnsureRequirements, inside AQE)
+    ext.injectQueryStagePrepRule(_ => graft.plans.OneTaskPlan)
   }
 }
 

@@ -59,7 +59,7 @@ private[graft] object VectorOracles {
        |    FROM codes v CROSS JOIN $cents c) t WHERE rn = 1""".stripMargin
 
   /** DuckDB mirror of one spherical-Lloyd iteration (AnnIndex
-    * .lloydIterate): CTEs `aN` (assignment against `inCents`), `sumsN`,
+    * .centsFromSums of .lloydSums): CTEs `aN` (assignment against `inCents`), `sumsN`,
     * `outBase` (raw sums) and `outBase + "n"` (with norm) — the table
     * produced for the next step is `outBase + "n"`. */
   def lloydSqlCtes(inCents: String, aName: String, sumsName: String, outBase: String): String =

@@ -336,19 +336,15 @@ object AnnIndex {
   private[graft] def assignToCentroids(coded: DataFrame, cents: DataFrame): DataFrame =
     withCentroid(coded, cents).select(col("vec_id"), col("cid"))
 
-  /** One spherical-Lloyd iteration (shared by e06/e06b and the stored
-    * centroid build): assign to the given centroids, then rebuild each
-    * centroid as the per-cluster per-dimension exact-decimal component
-    * SUM (cosine assignment is invariant to positive scaling, so no
-    * division — the whole update is bit-reproducible across engines and
-    * partitionings). Checkpointed: every trained centroid table has
-    * multiple consumers. */
-  private[graft] def lloydIterate(coded: DataFrame, cents: DataFrame): DataFrame =
-    centsFromSums(lloydSums(coded, cents))
-
-  /** The iteration's narrow (cid, pos, sv) component-sum table; `sv` is
-    * the exact DECIMAL(38,6) sum emitted as double (exact round-trip:
-    * ≤ 9 significant digits). */
+  /** One spherical-Lloyd iteration is `centsFromSums(lloydSums(coded,
+    * cents))` (shared by e06/e06b and the stored centroid build): assign
+    * to the given centroids, then rebuild each centroid as the
+    * per-cluster per-dimension exact-decimal component SUM (cosine
+    * assignment is invariant to positive scaling, so no division — the
+    * whole update is bit-reproducible across engines and partitionings).
+    * This is the iteration's narrow (cid, pos, sv) component-sum table;
+    * `sv` is the exact DECIMAL(38,6) sum emitted as double (exact
+    * round-trip: ≤ 9 significant digits). */
   private[graft] def lloydSums(coded: DataFrame, cents: DataFrame): DataFrame = {
     // map-side cid (see withCentroid) — the corpus-wide self-join that
     // used to re-attach the assignment by vec_id is gone
@@ -363,7 +359,6 @@ object AnnIndex {
     sums.groupBy(col("cid"))
       .agg(expr("transform(array_sort(collect_list(struct(pos, sv))), x -> CAST(x.sv AS FLOAT))").as("cvec"))
       .withColumn("cnorm", sqrt(dotNative("cvec", "cvec")))
-      .localCheckpoint()
 
   /** e06's TRAINED centroids as a stored artifact — the FAISS
     * train()-vs-add() split applied to the coarse quantizer (the same
@@ -381,7 +376,7 @@ object AnnIndex {
     ArtifactStore.reader(s, s"graft_cents1_${embDigest(s, dir, "cents1")}") { path =>
       // derived from the STORED iteration-1 sums (one K-row reduce, no
       // corpus pass when the sums artifact is live) — centsFromSums of
-      // lloydSums1 IS lloydIterate(coded, seeds), by definition
+      // lloydSums1 IS one Lloyd iteration from the seeds, by definition
       centsFromSums(lloydSums1(s, dir))
         .coalesce(1).write.mode("overwrite").parquet(path)
     }

@@ -11,11 +11,13 @@ import graft.traversal.{EdgeTable, FkEdge, Graph, VertexTable}
  * single equi-join with no intermediate edge table.
  *
  * Scale notes: parquet scans here are label-pruned by construction (one
- * dataset per label). `nation`/`region` are tiny dimensions — Catalyst
- * broadcast-joins them automatically (they are far below the 10 MB
- * autoBroadcastJoinThreshold at any SF); the big fact-to-fact joins
- * (lineitem→orders) shuffle on their join key, which is also the natural
- * bucketing key for a production deployment.
+ * dataset per label). `nation`/`region` are tiny dimensions — once any
+ * scan of a plan has more than one split, Catalyst broadcast-joins them
+ * automatically (they are far below the 10 MB autoBroadcastJoinThreshold
+ * at any SF) and the big fact-to-fact joins (lineitem→orders) shuffle on
+ * their join key, which is also the natural bucketing key for a
+ * production deployment. A plan whose scans are all single-split (small
+ * SFs) runs as one task instead ([[graft.plans.OneTaskPlan]]).
  */
 object TestData {
   val vertexTables = Seq(

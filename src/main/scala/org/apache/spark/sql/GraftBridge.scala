@@ -16,6 +16,9 @@ object GraftBridge {
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
 
+  /** Block until every listener has seen every event posted so far. */
+  def drainListeners(spark: SparkSession): Unit = spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Free the executor blocks behind a `localCheckpoint()`ed DataFrame.
     * A local checkpoint's data IS its persisted blocks (lineage is
     * truncated at checkpoint time), so only call this once the DataFrame

@@ -6,7 +6,10 @@ import org.apache.spark.sql.functions._
  * Plan-quality gates: the scale claims the engine makes (filter pushdown
  * to parquet, column pruning, broadcast of small dimensions) asserted on
  * the actual physical plans, so a regression that silently de-optimizes
- * a plan fails CI instead of only showing up at 100 TB.
+ * a plan fails CI instead of only showing up at 100 TB. A gate that pins
+ * a large-input shape (broadcasts, shuffled joins, what an exchange
+ * carries) runs [[withSplitScans]]: on the single-split testdata
+ * [[graft.plans.OneTaskPlan]] would otherwise run the plan as one task.
  */
 class PlanQualitySpec extends SparkSpec {
 
@@ -31,10 +34,12 @@ class PlanQualitySpec extends SparkSpec {
     }
 
     it("broadcasts the small dimension side of an FK hop") {
-      val t = graft.sources.TestData.graph(spark, sfDir)
-        .V("customer").out("cust_nation")
-      val plan = t.df.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"), plan)
+      withSplitScans {
+        val t = graft.sources.TestData.graph(spark, sfDir)
+          .V("customer").out("cust_nation")
+        val plan = t.df.queryExecution.executedPlan.toString
+        assert(plan.contains("BroadcastHashJoin"), plan)
+      }
     }
 
     it("q94's lineitem quantity pre-aggregation sits BELOW the customer join") {
@@ -107,11 +112,14 @@ class PlanQualitySpec extends SparkSpec {
       // executors see is the pair join on cid plus the K-row broadcast
       // cap gate — a re-planned assignment subtree (3 corpus passes) or a
       // per-row cluster-count window would both regress 100 TB cost
-      val df = SparkEntry.queries("e10_semdedup")(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-      assert(!plan.contains("Window"), plan)
-      assert(plan.contains("BroadcastHashJoin"), plan)
+      SparkEntry.queries("e10_semdedup")(spark, sfDir) // stores what it reads
+      withSplitScans {
+        val df = SparkEntry.queries("e10_semdedup")(spark, sfDir)
+        val plan = df.queryExecution.executedPlan.toString
+        assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+        assert(!plan.contains("Window"), plan)
+        assert(plan.contains("BroadcastHashJoin"), plan)
+      }
     }
 
     it("the mog audits (e18/e19/e20) never go cartesian and window only on per-key partitions") {
@@ -141,30 +149,35 @@ class PlanQualitySpec extends SparkSpec {
       // is the final top-k sort of 10 rows. A SortMergeJoin or an
       // exchange carrying 'embedding'/'pvec' would shuffle the corpus
       // (or its 16-dim sketch) at 100 TB.
-      val df = SparkEntry.queries("e12_jl_projection_knn")(spark, sfDir)
-      val plan = df.queryExecution.executedPlan
-      val planStr = plan.toString
-      assert(!planStr.contains("SortMergeJoin"), planStr)
-      assert(!planStr.contains("CartesianProduct"), planStr)
-      val exchanged = plan.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
-          e.child.output.map(_.name)
-      }.flatten
-      assert(!exchanged.exists(n => n.contains("embedding") || n.contains("pvec")),
-        s"corpus vectors crossed an exchange: $exchanged\n$planStr")
+      SparkEntry.queries("e12_jl_projection_knn")(spark, sfDir) // stores what it reads
+      withSplitScans {
+        val df = SparkEntry.queries("e12_jl_projection_knn")(spark, sfDir)
+        val plan = df.queryExecution.executedPlan
+        val planStr = plan.toString
+        assert(!planStr.contains("SortMergeJoin"), planStr)
+        assert(!planStr.contains("CartesianProduct"), planStr)
+        val exchanged = plan.collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+            e.child.output.map(_.name)
+        }.flatten
+        assert(!exchanged.exists(n => n.contains("embedding") || n.contains("pvec")),
+          s"corpus vectors crossed an exchange: $exchanged\n$planStr")
+      }
     }
 
     it("d26's corpus cumsum windows on (lang, shard), never a whole language") {
       // a PARTITION BY lang window over the corpus would serialize a
       // 100 TB language onto one task; the two-level prefix sum keeps the
       // corpus-sized window keyed by (lang, sh)
-      val df = SparkEntry.queries("d26_mixture_sample")(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      val winLines = plan.linesIterator.filter(_.contains("Window ")).toSeq
-      assert(winLines.nonEmpty, plan)
-      assert(winLines.exists(l => l.contains("lang#") && l.contains("sh#")), plan)
-      // the per-shard offset table and the 5-row totals join are broadcasts
-      assert(plan.contains("BroadcastHashJoin"), plan)
+      withSplitScans {
+        val df = SparkEntry.queries("d26_mixture_sample")(spark, sfDir)
+        val plan = df.queryExecution.executedPlan.toString
+        val winLines = plan.linesIterator.filter(_.contains("Window ")).toSeq
+        assert(winLines.nonEmpty, plan)
+        assert(winLines.exists(l => l.contains("lang#") && l.contains("sh#")), plan)
+        // the per-shard offset table and the 5-row totals join are broadcasts
+        assert(plan.contains("BroadcastHashJoin"), plan)
+      }
     }
 
     it("e09's probe prunes the partitioned ANN index to the probed buckets") {
@@ -349,15 +362,17 @@ class PlanQualitySpec extends SparkSpec {
       // an unhinted one would show up as a CartesianProduct or
       // SortMergeJoin over the corpus, and a reappearing Window means
       // the assignment regressed to the crossJoin+rank shape
-      val df = graft.queries.VectorQueries.all.find(_.name == "e06_ivf_lloyd_ann").get
-        .fn(spark, sfDir)
-      val plan = df.queryExecution.executedPlan.toString
-      val broadcasts = "Broadcast(NestedLoop|Hash)Join".r.findAllIn(plan).size
-      assert(broadcasts >= 2, s"expected >=2 broadcast joins, got $broadcasts\n$plan")
-      assert(plan.contains("codebook_argmin"), s"map-side argmin assignment missing:\n$plan")
-      assert(!plan.contains("Window"), s"assignment regressed to a window:\n$plan")
-      assert(!plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("CartesianProduct"), plan)
+      val e06 = graft.queries.VectorQueries.all.find(_.name == "e06_ivf_lloyd_ann").get
+      e06.fn(spark, sfDir) // stores what it reads
+      withSplitScans {
+        val plan = e06.fn(spark, sfDir).queryExecution.executedPlan.toString
+        val broadcasts = "Broadcast(NestedLoop|Hash)Join".r.findAllIn(plan).size
+        assert(broadcasts >= 2, s"expected >=2 broadcast joins, got $broadcasts\n$plan")
+        assert(plan.contains("codebook_argmin"), s"map-side argmin assignment missing:\n$plan")
+        assert(!plan.contains("Window"), s"assignment regressed to a window:\n$plan")
+        assert(!plan.contains("SortMergeJoin"), plan)
+        assert(!plan.contains("CartesianProduct"), plan)
+      }
     }
 
     it("e08 probes the STORED PQ index — no corpus encode in the probe plan") {
@@ -611,11 +626,12 @@ class PlanQualitySpec extends SparkSpec {
       // of JIT.
       // q54's superkey-eliminated plan can legitimately run span-free
       // (whole-plan LocalTableScan/broadcast shapes) — the cap assertion
-      // still applies to any span it does have
-      for (name <- Seq("d27_incremental_batch_dedup", "e18_mog_pq_recall",
+      // still applies to any span it does have. Both sides of the
+      // one-task gate: without exchanges, spans fuse longer.
+      for (split <- Seq(false, true); name <- Seq("d27_incremental_batch_dedup", "e18_mog_pq_recall",
           "e20_mog_residual_recall", "q54_match_pattern", "d35_bm25_search")) {
         val df = SparkEntry.queries(name)(spark, sfDir)
-        df.collect()
+        if (split) withSplitScans(df.collect()) else df.collect()
         var spans = List.empty[org.apache.spark.sql.execution.WholeStageCodegenExec]
         foreachNode(df.queryExecution.executedPlan) {
           case (w: org.apache.spark.sql.execution.WholeStageCodegenExec, _) => spans = w :: spans
@@ -657,17 +673,11 @@ class PlanQualitySpec extends SparkSpec {
   /** Run `body` with AQE forced on (including skew-join and partition
     * coalescing, the re-planners most likely to disturb a gated shape)
     * or forced off; session conf restored afterwards. */
-  private def withAqe[T](on: Boolean)(body: => T): T = {
-    val keys = Seq(
+  private def withAqe[T](on: Boolean)(body: => T): T =
+    withConf(Seq(
       "spark.sql.adaptive.enabled",
       "spark.sql.adaptive.skewJoin.enabled",
-      "spark.sql.adaptive.coalescePartitions.enabled")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(k => spark.conf.set(k, on.toString))
-    try body
-    finally saved.foreach { case (k, v) =>
-      v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
+      "spark.sql.adaptive.coalescePartitions.enabled").map(_ -> on.toString): _*)(body)
 
   /** The FINAL physical plan: under AQE the pre-execution executedPlan is
     * only the initial plan inside AdaptiveSparkPlanExec — drive the query
@@ -758,11 +768,13 @@ class PlanQualitySpec extends SparkSpec {
         withAqe(aqe) {
           // q88's whole point is spreading a hot key across partitions — a
           // silently re-planned broadcast join would make the salt a no-op
-          val df = graft.queries.JoinQueries.all.find(_.name == "q88_skew_salted_join").get
-            .fn(spark, sfDir)
-          val plan = finalPlan(df)
-          assert(plan.contains("ShuffledHashJoin"), plan)
-          assert(!plan.contains("BroadcastHashJoin"), plan)
+          withSplitScans {
+            val df = graft.queries.JoinQueries.all.find(_.name == "q88_skew_salted_join").get
+              .fn(spark, sfDir)
+            val plan = finalPlan(df)
+            assert(plan.contains("ShuffledHashJoin"), plan)
+            assert(!plan.contains("BroadcastHashJoin"), plan)
+          }
         }
       }
 
@@ -771,11 +783,13 @@ class PlanQualitySpec extends SparkSpec {
           // sorting the 3×-exploded probe stream for a sort-merge join is
           // wasted work at any scale (measured: the sf100 spill knee,
           // SCALE_sf100.md) — the hint must hold the shuffled-hash path
-          val df = graft.queries.JoinQueries.all.find(_.name == "q77_range_join_bucketed").get
-            .fn(spark, sfDir)
-          val plan = finalPlan(df)
-          assert(plan.contains("ShuffledHashJoin"), plan)
-          assert(!plan.contains("SortMergeJoin"), plan)
+          withSplitScans {
+            val df = graft.queries.JoinQueries.all.find(_.name == "q77_range_join_bucketed").get
+              .fn(spark, sfDir)
+            val plan = finalPlan(df)
+            assert(plan.contains("ShuffledHashJoin"), plan)
+            assert(!plan.contains("SortMergeJoin"), plan)
+          }
         }
       }
 

@@ -19,6 +19,24 @@ trait SparkSpec extends AnyFunSpec {
       finally st.close()
     }
   }
+
+  /** Run `body` with session confs set; the previous values (or their
+    * absence) are restored afterwards. */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  /** Run `body` with every parquet scan of more than 1 KB forced to
+    * several splits, so a gate written for a large-input plan shape sees
+    * it on the small testdata: [[graft.plans.OneTaskPlan]] runs a plan
+    * whose scans are all single-split as one task. Stored artifacts a
+    * query reads should be built before the scope — a write gets one file
+    * per partition. */
+  def withSplitScans[T](body: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes" -> "1k")(body)
 }
 
 object SparkSpec {

@@ -36,7 +36,7 @@ else:
     if "[success]" not in out:
         print(out[-4000:]); print(r.stderr[-2000:]); sys.exit(1)
 
-# [rowcount] <name> <rows> <seconds>, or [rowcount] <name> ERROR <message>
+# [rowcount] <name> <rows> <seconds> <jobs>, or [rowcount] <name> ERROR <message>
 spark_fields = {}
 for line in out.splitlines():
     if line.startswith("[rowcount] "):
