@@ -13,11 +13,11 @@ import org.apache.spark.sql.functions._
  * Input is the same relational shape the traversal layer uses: a vertex
  * DataFrame with a long `vid` and an edge DataFrame with (`src`, `dst`).
  * GraphX is the right tool exactly where Catalyst is not: fixed-point
- * iteration (components, PageRank) that would otherwise be an unbounded
- * chain of self-joins.
+ * iteration (components, shortest paths) that would otherwise be an
+ * unbounded chain of self-joins.
  *
  * Scale notes: GraphX partitions edges (EdgePartition2D keeps the
- * replication factor ~sqrt(parts)); both ops below are O(iterations ×
+ * replication factor ~sqrt(parts)); its ops below are O(iterations ×
  * edges) message passing with no driver-side state.
  */
 object GraphAnalytics {
@@ -34,15 +34,6 @@ object GraphAnalytics {
     g.connectedComponents().vertices
       .map { case (vid: VertexId, comp: VertexId) => (vid, comp) }
       .toDF("vid", "component")
-  }
-
-  /** PageRank with fixed iteration count (deterministic across runs). */
-  def pageRank(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
-    import spark.implicits._
-    val g = XGraph.fromEdges(toEdgeRDD(edges), 0.0)
-    g.staticPageRank(iters).vertices
-      .map { case (vid: VertexId, rank: Double) => (vid, rank) }
-      .toDF("vid", "rank")
   }
 
   /** Per-vertex triangle count (undirected). GraphX's triangleCount()
@@ -121,10 +112,9 @@ object GraphAnalytics {
     * oracle — double summation order would not be. Each iteration is two
     * equi-joins + one groupBy on the vertex id; with the edge table hash-
     * partitioned on src (as a production deployment would bucket it), the
-    * join is co-located and only the contribution sum shuffles. Prefer the
-    * GraphX variant for high iteration counts (Pregel avoids re-planning
-    * per step); this shape wins when iterations are few and fixed, and its
-    * plans stay inside Catalyst/AQE. */
+    * join is co-located and only the contribution sum shuffles. Each step
+    * is re-planned, which suits few, fixed iterations; the plans stay
+    * inside Catalyst/AQE. */
   def pageRankDecimal(spark: SparkSession, edges: DataFrame, iters: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dec = DecimalType(28, 10)

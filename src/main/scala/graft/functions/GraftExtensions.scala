@@ -26,23 +26,23 @@ object MinHashDefaults {
  * ([[GraftExtensions.register]] for a live session; e.g.
  * `minhash_signature(array<bigint>) → array<bigint>` with the default
  * 128-permutation parameterization) and its plan rules:
- *  - optimizer rules: [[graft.plans.MetadataCountRule]],
- *    [[graft.plans.RedundantDistinctRule]], [[graft.plans.FirstStructPruningRule]]
- *    and [[graft.plans.EagerCountAggregation]];
+ *  - optimizer rules: [[graft.plans.RedundantDistinctRule]],
+ *    [[graft.plans.FirstStructPruningRule]] and
+ *    [[graft.plans.EagerCountAggregation]] (Spark's
+ *    `spark.sql.optimizer.excludedRules` turns any of them off by class
+ *    name; the opt-in [[graft.plans.MetadataCountRule]] is not injected);
  *  - the AQE query-stage preparation rule [[graft.plans.OneTaskPlan]]:
  *    a plan whose scans are all single-split runs as one task.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(ext.injectFunction)
-    // metadata-only count rewrite (opt-in via its conf flag)
-    ext.injectOptimizerRule(session => graft.plans.MetadataCountRule(session))
-    // superkey-proven dedup removal (on by default) — before the struct
-    // pruner so an aggregate it eliminates is never also pruned
+    // superkey-proven dedup removal — before the struct pruner so an
+    // aggregate it eliminates is never also pruned
     ext.injectOptimizerRule(session => graft.plans.RedundantDistinctRule(session))
-    // nested pruning through first(struct) dedup buffers (on by default)
+    // nested pruning through first(struct) dedup buffers
     ext.injectOptimizerRule(session => graft.plans.FirstStructPruningRule(session))
-    // count-aggregation pushdown below joins (on by default)
+    // count-aggregation pushdown below joins
     ext.injectOptimizerRule(session => graft.plans.EagerCountAggregation(session))
     // tiny inputs run as one task (after EnsureRequirements, inside AQE)
     ext.injectQueryStagePrepRule(_ => graft.plans.OneTaskPlan)

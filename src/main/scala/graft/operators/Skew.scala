@@ -33,11 +33,4 @@ object Skew {
       .agg(count(lit(1)).as("__pc"))
       .groupBy(col("key"))
       .agg(sum(col("__pc")).as("count"))
-
-  /** Skew-tolerant sum aggregation (partial sums merge by key). */
-  def saltedGroupSum(df: DataFrame, key: Column, value: Column, salts: Int): DataFrame =
-    df.groupBy(key.as("key"), salt(df, salts).as("__salt"))
-      .agg(sum(value).as("__ps"))
-      .groupBy(col("key"))
-      .agg(sum(col("__ps")).as("sum"))
 }

@@ -65,15 +65,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * Streaming plans are skipped wholesale: a streaming dedup holds state
  * ACROSS micro-batches, so per-batch key-coverage proves nothing.
  *
- * Enabled by default; `spark.graft.distinctElimination.enabled=false`
- * opts out.
+ * Injected by [[graft.functions.GraftExtensions]]; Spark's
+ * `spark.sql.optimizer.excludedRules` turns it off by class name.
  */
 case class RedundantDistinctRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import DistinctKeys.Flag
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (plan.isStreaming || !spark.conf.get(Flag, "true").toBoolean) plan
+    if (plan.isStreaming) plan
     else plan.transformUp {
       case agg: Aggregate if agg.groupingExpressions.nonEmpty =>
         rewrite(agg).getOrElse(agg)
@@ -115,8 +113,6 @@ case class RedundantDistinctRule(spark: SparkSession) extends Rule[LogicalPlan] 
 }
 
 object DistinctKeys {
-  val Flag = "spark.graft.distinctElimination.enabled"
-
   /** Qualified table root path → unique id column name. Registration is
     * the trust anchor: only a source layer that OWNS the table's data
     * contract (vertex id uniqueness — what every row-identity operator

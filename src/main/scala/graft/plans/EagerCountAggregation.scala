@@ -45,13 +45,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
 case class EagerCountAggregation(session: SparkSession)
     extends Rule[LogicalPlan] with PredicateHelper {
 
-  private val enabledKey = "spark.graft.eagerCountAgg.enabled"
-  private def enabled: Boolean =
-    session.conf.get(enabledKey, "true").toBoolean
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformDown { case agg: Aggregate => rewrite(agg).getOrElse(agg) }
+    plan.transformDown { case agg: Aggregate => rewrite(agg).getOrElse(agg) }
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {
     // unwrap one deterministic pruning/aliasing Project over the join.

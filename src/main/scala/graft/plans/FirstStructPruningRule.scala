@@ -47,16 +47,13 @@ import org.apache.spark.sql.types.StructType
  * surviving `GetStructField` sees the same value whether the first()
  * buffer held the full struct or the pruned one.
  *
- * Enabled by default; `spark.graft.pruneFirstStruct.enabled=false`
- * opts out.
+ * Injected by [[graft.functions.GraftExtensions]]; Spark's
+ * `spark.sql.optimizer.excludedRules` turns it off by class name.
  */
 case class FirstStructPruningRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import FirstStructPruningRule.Flag
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!spark.conf.get(Flag, "true").toBoolean) plan
-    else plan.transformUp {
+    plan.transformUp {
       case p: Project =>
         // peel any Filter chain between the project and the aggregate
         val (filters, base) = peelFilters(p.child)
@@ -168,16 +165,4 @@ case class FirstStructPruningRule(spark: SparkSession) extends Rule[LogicalPlan]
         GetStructField(r.newAlias.toAttribute, r.keptOrdinals.indexOf(ord), gsf.name)
       case other => other.mapChildren(rewriteRefs(_, byId))
     }
-}
-
-object FirstStructPruningRule {
-  val Flag = "spark.graft.pruneFirstStruct.enabled"
-
-  /** Install on a live session (idempotent). Deploy time uses
-    * `spark.sql.extensions=graft.functions.GraftExtensions` instead. */
-  def install(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraOptimizations
-    if (!cur.exists(_.isInstanceOf[FirstStructPruningRule]))
-      spark.experimental.extraOptimizations = cur :+ FirstStructPruningRule(spark)
-  }
 }

@@ -21,20 +21,17 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
  * itself (optionally under a Project, which never changes row count). Any
  * Filter/Limit/join in between leaves the plan untouched.
  *
- * Opt-in via `spark.graft.metadataCount.enabled` (default false). Deploy
- * time: injected by [[graft.functions.GraftExtensions]]; on a live
- * session: `spark.experimental.extraOptimizations`. Footers are read on
+ * Opt-in: not injected by [[graft.functions.GraftExtensions]]; a session
+ * that wants it installs the rule through
+ * `spark.experimental.extraOptimizations`. Footers are read on
  * the driver here (one tiny ranged read per file — the planner-side cost
  * model); a deployment with very large file counts distributes the same
  * loop as `TestData.metadataCount` does.
  */
 case class MetadataCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  import MetadataCountRule.Flag
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!spark.conf.get(Flag, "false").toBoolean) plan
-    else plan.transformUp {
+    plan.transformUp {
       case agg @ Aggregate(Nil, Seq(Alias(ae: AggregateExpression, _)), child, _)
           if isBareCount(ae) =>
         parquetFiles(child) match {
@@ -66,8 +63,4 @@ case class MetadataCountRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val conf = spark.sessionState.newHadoopConf()
     files.iterator.map(graft.sources.TestData.footerRows(conf, _)).sum
   }
-}
-
-object MetadataCountRule {
-  val Flag = "spark.graft.metadataCount.enabled"
 }

@@ -196,23 +196,20 @@ object MogQueries {
   private val panelSql: String =
     s"q AS (SELECT vec_id AS q_id, embedding AS qvec FROM cemb WHERE vec_id % $QMod = 0 AND vec_id < $QPanelCap)"
 
-  /** Per-(panel query, codebook entry) exact sub-dot LUT. */
-  private def lutQ(cb: DataFrame, q: DataFrame): DataFrame =
-    cb.crossJoin(broadcast(q))
-      .select(col("q_id"), col("m"), col("k"),
-        dotNativeC(expr(s"slice(qvec, m * $SubDim + 1, $SubDim)"), col("cvec")).as("l"))
+  /** The M ADC lookups of a (q_id, k0..k{M-1}) row: the panel is
+    * collected once (≤ QPanelCap/QMod rows), each query's lookup table
+    * is built on the driver by [[graft.sources.AnnIndex.adcLut]] — the
+    * one LUT definition the single-query probes use — and subspace m's
+    * tables ride as one literal map from q_id. */
+  private def panelLutTerms(q: DataFrame, cb: Seq[(Int, Int, IndexedSeq[Float], Double)]): Seq[Column] = {
+    val luts = q.collect().map(r => r.getLong(0) -> adcLut(cb, r.getSeq[Any](1)))
+    adcTerms(m => element_at(typedLit(luts.map { case (id, lut) => id -> lut(m) }.toMap), col("q_id")))
+  }
 
   private def lutQSql(cb: String): String =
     s"""lut AS (SELECT q.q_id, c.m, c.k,
        |    ${dotSqlOf(s"list_slice(q.qvec, c.m * $SubDim + 1, (c.m + 1) * $SubDim)", "c.cvec")} AS l
        |  FROM $cb c CROSS JOIN q)""".stripMargin
-
-  /** The M per-panel-query LUT joins (broadcast — ≤ KSub·panel rows each). */
-  private def lutJoinedQ(codes: DataFrame, lut: DataFrame): DataFrame =
-    (0 until MSub).foldLeft(codes) { (df, m) =>
-      df.join(broadcast(lut.where(col("m") === m)
-        .select(col("q_id"), col("k").as(s"k$m"), col("l").as(s"l$m"))), Seq("q_id", s"k$m"))
-    }
 
   private def lutJoinsSql: String = (0 until MSub)
     .map(m => s"JOIN lut l$m ON l$m.q_id = q.q_id AND l$m.m = $m AND l$m.k = w.k$m").mkString(" ")
@@ -362,27 +359,17 @@ object MogQueries {
        |FROM cemb ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT $CKMog""".stripMargin
 
   /** Flat-PQ recall over the panel, parameterized by the codebook rows
-    * used for the encode and a codebook DataFrame for the LUT — shared by
-    * e18 (seed codebooks) and e19 (mean-trained codebooks). */
+    * used for the encode and the LUT — shared by e18 (seed codebooks)
+    * and e19 (mean-trained codebooks). */
   private def flatPqRecall(s: SparkSession, dir: String,
       cbRows: DataFrame => Seq[(Int, Int, IndexedSeq[Float], Double)]): DataFrame = {
     val v = storedMogView(s, dir)
     val rows = cbRows(v)
-    val cbDf = cbRowsToDf(s, rows)
     val q = panel(v)
     val wide = v.select(Seq(col("vec_id")) ++ pqEncodeColumnsOn(rows, "embedding"): _*)
-    val scored = lutJoinedQ(wide.crossJoin(broadcast(q.select(col("q_id")))), lutQ(cbDf, q))
-      .select(col("q_id"), col("vec_id"),
-        (0 until MSub).map(m => col(s"l$m")).reduce(_ + _).as("approx"))
+    val scored = wide.crossJoin(broadcast(q.select(col("q_id"))))
+      .select(col("q_id"), col("vec_id"), panelLutTerms(q, rows).reduce(_ + _).as("approx"))
     recallOverPanel(s, dir, q, scored)
-  }
-
-  /** Codebook rows back to a DataFrame (for the LUT cross join) — the
-    * inverse of collectCodebookRows, driver-side ≤ M·KSub rows. */
-  private def cbRowsToDf(s: SparkSession, rows: Seq[(Int, Int, IndexedSeq[Float], Double)]): DataFrame = {
-    import s.implicits._
-    rows.map { case (m, k, cvec, cn2) => (m, k, cvec.toArray, cn2) }
-      .toDF("m", "k", "cvec", "cn2")
   }
 
   val all: Seq[Q] = Seq(
@@ -454,11 +441,10 @@ object MogQueries {
         val rwide = res.select(Seq(col("vec_id"), col("cid")) ++ pqEncodeColumnsOn(rcbRows, "rvec"): _*)
         val term0 = cents1.crossJoin(broadcast(q))
           .select(col("q_id"), col("cid"), dotNative("cvec", "qvec").as("term0"))
-        val scored = lutJoinedQ(rwide.crossJoin(broadcast(q.select(col("q_id")))),
-            lutQ(cbRowsToDf(s, rcbRows), q))
+        val scored = rwide.crossJoin(broadcast(q.select(col("q_id"))))
           .join(broadcast(term0), Seq("q_id", "cid"))
           .select(col("q_id"), col("vec_id"),
-            (0 until MSub).map(m => col(s"l$m")).foldLeft(col("term0"))(_ + _).as("approx"))
+            panelLutTerms(q, rcbRows).foldLeft(col("term0"))(_ + _).as("approx"))
         recallOverPanel(s, dir, q, scored)
       },
       Some(s"""WITH ${mogViewSql("MATERIALIZED")},

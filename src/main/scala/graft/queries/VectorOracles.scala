@@ -131,8 +131,9 @@ private[graft] object VectorOracles {
        |SELECT w.vec_id, ${(0 until MSub).map(m => s"w.k$m").mkString(", ")}, c.code
        |FROM wide w JOIN codes c USING (vec_id) ORDER BY vec_id""".stripMargin
 
-  /** The DuckDB mirror of [[queryLut]]+[[adcApprox]] (CTEs `lut`,
-    * `appr`) — composes after [[pqEncodeSqlCtes]] and a `q` CTE. */
+  /** The DuckDB mirror of [[graft.sources.AnnIndex.adcLut]] and the
+    * e08/e14/e15 ADC sum (CTEs `lut`, `appr`) — composes after
+    * [[pqEncodeSqlCtes]] and a `q` CTE. */
   val adcSqlCtes: String = {
     val lutJoins = (0 until MSub)
       .map(m => s"JOIN lut l$m ON l$m.m = $m AND l$m.k = w.k$m").mkString(" ")
@@ -192,7 +193,8 @@ private[graft] object VectorOracles {
        |  FROM rcb c CROSS JOIN q)""".stripMargin
   }
 
-  /** The M residual-LUT joins as SQL (mirrors [[lutJoined]]). */
+  /** The M residual-LUT lookups as SQL joins (mirrors e16/e17's
+    * [[graft.sources.AnnIndex.adcTerms]]). */
   def rlutJoinsSql: String = (0 until MSub)
     .map(m => s"JOIN rlut l$m ON l$m.m = $m AND l$m.k = w.k$m").mkString(" ")
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import CoreQueries.Q
@@ -142,63 +142,23 @@ object VectorQueries {
       .limit(5)
   }
 
+  /** The query's M ADC lookups against collected codebooks
+    * ([[graft.sources.AnnIndex.collectedCodebooks]] or its residual
+    * twin): one 1-row fetch of the query vector, the M×KSub lookup
+    * table built on the driver ([[graft.sources.AnnIndex.adcLut]]), and
+    * each subspace's row embedded as a literal array, so scoring a code
+    * row is M map-side array lookups with no join. e08/e14/e15 reduce
+    * the lookups, e16/e17 fold them onto their per-bucket term0, each in
+    * the fixed order its oracle mirrors. */
+  private def lutTerms(s: SparkSession, dir: String,
+      cb: Seq[(Int, Int, IndexedSeq[Float], Double)]): Seq[Column] = {
+    val lut = adcLut(cb, queryVec(s, dir).head(1).headOption.map(_.getSeq[Any](0)).orNull)
+    adcTerms(m => typedLit(lut(m)))
+  }
 
-
-  /** Query-time ADC lookup table: exact sub-dots of the query vector
-    * against every stored codebook entry — M×KSub rows, checkpointed
-    * (joined MSub times downstream). Shared by e08/e14/e15 — and cached
-    * per (session, dir), because building it per call measured e08 and
-    * e14 about 1.5× slower at rep 3 (two extra jobs per query: the query
-    * vector's broadcast and the checkpoint). It is the one query-time
-    * checkpoint cache of the vector family; [[releaseCaches]] drops it. */
-  private val lutCache = new graft.util.SessionCache[DataFrame]
-  private def queryLut(s: SparkSession, dir: String): DataFrame =
-    lutCache.getOrElseUpdate(s, dir)(lutOf(s, dir, pqCodebooks(s, dir)))
-
-  /** ONE definition of the LUT construction for both codebook families
-    * (raw-vector e08/e14/e15 and residual e16) — the arithmetic must not
-    * fork between them. */
-  private def lutOf(s: SparkSession, dir: String, codebooks: DataFrame): DataFrame =
-    codebooks.crossJoin(broadcast(queryVec(s, dir)))
-      .select(col("m"), col("k"),
-        dotNativeC(expr(s"slice(qvec, m * $SubDim + 1, $SubDim)"), col("cvec")).as("l"))
-      .localCheckpoint()
-
-  /** Drop this session's query LUTs (bench inter-family release; they
-    * rebuild lazily). The ContextCleaner frees their checkpoint blocks
-    * once the dropped DataFrames are collected — the bench nudges the GC
-    * right after the release. */
-  private[graft] def releaseCaches(s: SparkSession): Unit = lutCache.removeAll(s)
-
-  /** e16's query-time RESIDUAL ADC lookup table — [[lutOf]] against the
-    * residual-trained codebooks (the query itself is NOT residualized:
-    * dot(q, residual(x)) decomposes per subspace against the residual
-    * codebook entries directly). Session-cached like queryLut. */
-  private def rpqQueryLut(s: SparkSession, dir: String): DataFrame =
-    lutCache.getOrElseUpdate(s, s"$dir#rpq")(lutOf(s, dir, rpqCodebooks(s, dir)))
-
-  /** The M broadcast LUT joins every ADC scorer runs (one l$m column per
-    * subspace) — the join stage must not fork between the raw and
-    * residual families; only the approx SUM differs (e08/e14/e15 reduce
-    * the lookups, e16 folds them onto its per-bucket term0, each with
-    * its own fixed addition order mirrored in its oracle). */
-  private def lutJoined(codes: DataFrame, lut: DataFrame): DataFrame =
-    (0 until MSub).foldLeft(codes) { (df, m) =>
-      df.join(broadcast(lut.where(col("m") === m)
-        .select(col("k").as(s"k$m"), col("l").as(s"l$m"))), s"k$m")
-    }
-
-  /** ADC scoring over a stored code table: every row's approximate dot
-    * is the fixed-order sum of M broadcast LUT lookups — map-side, no
-    * shuffle, nothing but small ints and the 64-row LUT. Shared by
-    * e08/e14/e15. */
-  private def adcApprox(codes: DataFrame, lut: DataFrame): DataFrame =
-    lutJoined(codes, lut).select(col("vec_id"),
-      (0 until MSub).map(m => col(s"l$m")).reduce(_ + _).as("approx"))
-
-
-
-
+  /** The bench's inter-family release: a no-op, because nothing here
+    * holds executor blocks (the lookup tables are driver-side literals). */
+  private[graft] def releaseCaches(s: SparkSession): Unit = ()
 
   val all: Seq[Q] = Seq(
     Q("e01_knn_bruteforce",
@@ -531,10 +491,10 @@ object VectorQueries {
       // ANN family to get the train()/add() split): the codebooks and
       // the M-small-int per-vector code table are built once per corpus
       // digest; the query builds an M×KSub lookup table of exact
-      // sub-dot-products against the stored codebooks, every stored
-      // code row's APPROXIMATE dot is the sum of M broadcast-join
-      // lookups (map-side over the code table — no window, no encode,
-      // no corpus pass; pinned in PlanQualitySpec), and only the top
+      // sub-dot-products against the collected codebooks on the driver,
+      // every stored code row's APPROXIMATE dot is the sum of M literal
+      // array lookups (map-side over the code table — no window, no
+      // encode, no corpus pass; pinned in PlanQualitySpec), and only the top
       // ReRank approximates are exact-rescored via a narrow id join.
       // Fixed-order lut0+..+lut3 addition keeps the approx score
       // IEEE-identical in both engines; the oracle retrains + re-encodes
@@ -542,7 +502,8 @@ object VectorQueries {
       // bit-stability too.
       (s, dir) => {
         val q = queryVec(s, dir)
-        adcApprox(pqCodes(s, dir), queryLut(s, dir))
+        pqCodes(s, dir)
+          .select(col("vec_id"), lutTerms(s, dir, collectedCodebooks(s, dir)).reduce(_ + _).as("approx"))
           .where(col("vec_id") =!= 0)
           .orderBy(col("approx").desc, col("vec_id").asc)
           .limit(ReRank)
@@ -568,7 +529,7 @@ object VectorQueries {
       // from stored artifacts: the probe directory-prunes the combined
       // index (PQ codes partitioned by SRP bucket,
       // AnnIndex.ivfPqIndex) to the query's Hamming ball, ADC-scores
-      // ONLY the probed buckets' code rows (M broadcast LUT joins over
+      // ONLY the probed buckets' code rows (M literal LUT lookups over
       // 4 small ints per row — candidate selection is partition
       // pruning, no join, and the pruned scan never touches a float
       // vector), and exact-rescores the top ReRank by id. vs e08:
@@ -583,8 +544,7 @@ object VectorQueries {
           .where(col("code").isin(probes: _*))
           .where(col("vec_id") =!= 0)
         val q = queryVec(s, dir)
-        adcApprox(cand.select(col("vec_id") +: (0 until MSub).map(m => col(s"k$m")): _*),
-            queryLut(s, dir))
+        cand.select(col("vec_id"), lutTerms(s, dir, collectedCodebooks(s, dir)).reduce(_ + _).as("approx"))
           .orderBy(col("approx").desc, col("vec_id").asc)
           .limit(ReRank)
           .join(emb(s, dir).select(col("vec_id"), col("embedding")), "vec_id")
@@ -618,7 +578,7 @@ object VectorQueries {
       // client-side coarse probe (NProbe cids + their term0 dots — a
       // bounded 2-row collect, the e09 qcode precedent), directory-
       // pruned scan of the stored cid-partitioned residual code table
-      // (M small ints per row), per-row approx = term0 + M broadcast
+      // (M small ints per row), per-row approx = term0 + M literal
       // LUT lookups in fixed order (IEEE-identical across engines),
       // exact re-rank of the top ReRank. Composes THREE stored
       // artifacts: trained centroids, residual codebooks, residual
@@ -640,9 +600,8 @@ object VectorQueries {
         val term0 = probed.foldLeft(lit(0d)) { case (acc, r) =>
           when(col("cid") === r.getLong(0), lit(r.getDouble(1))).otherwise(acc)
         }
-        val scored = lutJoined(cand, rpqQueryLut(s, dir)).select(col("vec_id"),
-          (0 until MSub).map(m => col(s"l$m")).foldLeft(term0)(_ + _).as("approx"))
-        scored
+        cand.select(col("vec_id"),
+            lutTerms(s, dir, collectedRpqCodebooks(s, dir)).foldLeft(term0)(_ + _).as("approx"))
           .orderBy(col("approx").desc, col("vec_id").asc)
           .limit(ReRank)
           .join(emb(s, dir).select(col("vec_id"), col("embedding")), "vec_id")
@@ -671,10 +630,10 @@ object VectorQueries {
         val q = queryVec(s, dir)
         val term0s = trainedCentroids(s, dir).crossJoin(broadcast(q))
           .select(col("cid"), dotNative("cvec", "qvec").as("term0"))
-        val approxTop = lutJoined(rpqCodes(s, dir).where(col("vec_id") =!= 0), rpqQueryLut(s, dir))
+        val approxTop = rpqCodes(s, dir).where(col("vec_id") =!= 0)
           .join(broadcast(term0s), "cid")
           .select(col("vec_id"),
-            (0 until MSub).map(m => col(s"l$m")).foldLeft(col("term0"))(_ + _).as("approx"))
+            lutTerms(s, dir, collectedRpqCodebooks(s, dir)).foldLeft(col("term0"))(_ + _).as("approx"))
           .orderBy(col("approx").desc, col("vec_id").asc)
           .limit(5)
           .select(col("vec_id"))
@@ -698,7 +657,8 @@ object VectorQueries {
       // stored code table map-side.
       (s, dir) => {
         val q = queryVec(s, dir)
-        val approxTop = adcApprox(pqCodes(s, dir), queryLut(s, dir))
+        val approxTop = pqCodes(s, dir)
+          .select(col("vec_id"), lutTerms(s, dir, collectedCodebooks(s, dir)).reduce(_ + _).as("approx"))
           .where(col("vec_id") =!= 0)
           .orderBy(col("approx").desc, col("vec_id").asc)
           .limit(5)

@@ -490,6 +490,31 @@ object AnnIndex {
   private[graft] def collectedCodebooks(s: SparkSession, dir: String): Seq[(Int, Int, IndexedSeq[Float], Double)] =
     cbCache.getOrElseUpdate(s, dir)(collectCodebookRows(pqCodebooks(s, dir)))
 
+  /** The ADC lookup table of one query vector against collected codebook
+    * rows: `lut(m)(k)` is the exact sub-dot of the query's subspace m
+    * with entry (m, k), computed by [[graft.functions.DecimalDotProduct
+    * .dotRange]], i.e. exactly `decimal_dot(slice(qvec, m*SubDim+1,
+    * SubDim), cvec)`. A null sub-dot (null query, null slot) is `None`;
+    * so is a k with no entry, which no code references. Scorers embed
+    * each subspace's row as a literal array indexed by `k$m + 1`. */
+  private[graft] def adcLut(cb: Seq[(Int, Int, IndexedSeq[Float], Double)],
+      qvec: scala.collection.Seq[Any]): IndexedSeq[IndexedSeq[Option[Double]]] = {
+    val q = Option(qvec).map(v => new org.apache.spark.sql.catalyst.util.GenericArrayData(v.toArray))
+    (0 until MSub).map { m =>
+      val byK = cb.collect { case (`m`, k, cvec, _) => k -> cvec.toArray }.toMap
+      (0 until byK.keys.maxOption.fold(0)(_ + 1)).map { k =>
+        for (cvec <- byK.get(k); x <- q;
+             d <- Option(graft.functions.DecimalDotProduct.dotRange(x, m * SubDim, cvec))) yield d.doubleValue
+      }
+    }
+  }
+
+  /** A code row's M ADC lookups, in subspace order: `table(m)` is
+    * subspace m's row of an [[adcLut]] as an array column. Scorers add
+    * them left to right, the oracle's fixed `l0 + l1 + ...` order. */
+  private[graft] def adcTerms(table: Int => Column): Seq[Column] =
+    (0 until MSub).map(m => element_at(table(m), col(s"k$m") + 1))
+
   /** Collect an (m, k, cvec, cn2) codebook table into the driver-side
     * literal form the encoder embeds — always a bounded ≤ M×KSub-row
     * fetch. Shared by the stored families' collectors and the live
@@ -528,9 +553,7 @@ object AnnIndex {
       // equivalence property), one compiled call per subspace instead of
       // KSub inlined dot+struct blocks — the fused mog encode+LUT-join
       // codegen span measured 15.9 KB of bytecode with the struct form
-      // (past the JVM's 8000-byte JIT cap: interpreter-run). The mog
-      // audits JOIN on k$m; nullable=false folds the optimizer's pushed
-      // isnotnull(k$m) guards exactly as the r15 KnownNotNull marker did.
+      // (past the JVM's 8000-byte JIT cap: interpreter-run).
       val entries = cb.filter(_._1 == m).sortBy(_._2)
       require(entries.nonEmpty, s"pqEncodeColumnsOn: no codebook entries for subspace $m")
       org.apache.spark.sql.GraftBridge.column(graft.functions.CodebookArgmin(
@@ -545,7 +568,7 @@ object AnnIndex {
     * columns (vec_id, k0..k{M-1}) — 4 ints instead of 64 floats, the
     * 100 TB memory story. Encoded once per corpus digest with
     * [[pqEncodeColumns]] (map-only — the build's cost is exactly one
-    * corpus scan); e08 probes are LUT joins against this table and never
+    * corpus scan); e08 probes are LUT lookups over this table and never
     * re-encode (the last ANN family to get the train()/add() split). */
   private[graft] def pqCodes(s: SparkSession, dir: String): DataFrame =
     ArtifactStore.reader(s, s"graft_pq_codes_${embDigest(s, dir, "pqcodes")}") { path =>

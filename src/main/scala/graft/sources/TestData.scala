@@ -134,14 +134,6 @@ object TestData {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // partitioning follows the data (see above)
     sizeShufflePartitions(spark, dir)
-    // NOTE: FirstStructPruningRule is NOT installed here — every engine
-    // entry point builds its session with
-    // `.withExtensions(new GraftExtensions)`, which injects the rule into
-    // the main operator-optimization batch (where the pruning can cascade
-    // to the scans); a post-hoc extraOptimizations copy would run the
-    // same rule a second time per query in a too-late batch. Sessions
-    // built without the extensions can opt in via
-    // FirstStructPruningRule.install.
     val vs = vertexTables.map { case (name, id) =>
       val df0 = table(spark, dir, name)
       // declare the natural unique keys to the optimizer

@@ -6,11 +6,11 @@ import org.apache.spark.sql.SparkSession
  * Per-(session, key) cache: the stored-artifact readers
  * ([[graft.sources.ArtifactStore.reader]]), the parquet catalog, two
  * small values derived from stored artifacts (the quantizer width, the
- * collected PQ codebooks), and two query-time checkpoints whose per-call
- * rebuild measured too slow (VectorQueries' ADC lookup table, d27's
- * batch side). Only those two hold executor blocks; their owners'
- * `releaseCaches` drop them with [[removeAll]], and the ContextCleaner
- * frees the blocks once the dropped DataFrames are collected.
+ * collected PQ codebooks), and one query-time checkpoint whose per-call
+ * rebuild measured too slow (d27's batch side). Only that one holds
+ * executor blocks; `TextQueries.releaseCaches` drops it with
+ * [[removeAll]], and the ContextCleaner frees the blocks once the
+ * dropped DataFrame is collected.
  *
  * Keyed by the session OBJECT through a `WeakHashMap`, not by
  * `System.identityHashCode(session)`: an identity hash can be reused by a

@@ -21,11 +21,9 @@ class DistinctKeysSpec extends SparkSpec {
   private def aggCount(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
 
-  private def withRuleOff[T](body: => T): T = {
-    spark.conf.set(graft.plans.DistinctKeys.Flag, "false")
-    try body
-    finally spark.conf.set(graft.plans.DistinctKeys.Flag, "true")
-  }
+  private def withRuleOff[T](body: => T): T =
+    withConf("spark.sql.optimizer.excludedRules" ->
+      classOf[graft.plans.RedundantDistinctRule].getName)(body)
 
   private def graph = graft.sources.TestData.graph(spark, sfDir)
 

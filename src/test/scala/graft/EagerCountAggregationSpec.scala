@@ -26,13 +26,10 @@ class EagerCountAggregationSpec extends SparkSpec {
     Seq((1L, "red"), (2L, "blue"), (2L, "teal"), (3L, "green"))
       .toDF("pk", "color")
 
-  private def withRule[T](on: Boolean)(body: => T): T = {
-    val key = "spark.graft.eagerCountAgg.enabled"
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, on.toString)
-    try body
-    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  private def withRule[T](on: Boolean)(body: => T): T =
+    if (on) body
+    else withConf("spark.sql.optimizer.excludedRules" ->
+      classOf[graft.plans.EagerCountAggregation].getName)(body)
 
   private def fired(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.toString.contains("__eagercnt")

@@ -13,12 +13,10 @@ import graft.plans.FirstStructPruningRule
  */
 class FirstStructPruningSpec extends SparkSpec {
 
-  private def withRule[T](on: Boolean)(body: => T): T = {
-    FirstStructPruningRule.install(spark)
-    val prev = spark.conf.get(FirstStructPruningRule.Flag, "true")
-    spark.conf.set(FirstStructPruningRule.Flag, on.toString)
-    try body finally spark.conf.set(FirstStructPruningRule.Flag, prev)
-  }
+  private def withRule[T](on: Boolean)(body: => T): T =
+    if (on) body
+    else withConf("spark.sql.optimizer.excludedRules" ->
+      classOf[FirstStructPruningRule].getName)(body)
 
   /** key, payload struct (null for k=3), extra noise column. */
   private def base: DataFrame = {

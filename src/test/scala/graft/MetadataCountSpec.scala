@@ -18,7 +18,6 @@ class MetadataCountSpec extends SparkSpec {
       val rule = graft.plans.MetadataCountRule(s)
       val prev = s.experimental.extraOptimizations
       s.experimental.extraOptimizations = prev :+ rule
-      s.conf.set(graft.plans.MetadataCountRule.Flag, "true")
       try {
         val df = s.read.parquet(s"$sfDir/nation.parquet")
         val bare = df.groupBy().count()
@@ -26,8 +25,8 @@ class MetadataCountSpec extends SparkSpec {
         assert(bare.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
           bare.queryExecution.optimizedPlan.toString)
         // and the literal equals the real row count
-        val expected = { s.conf.set(graft.plans.MetadataCountRule.Flag, "false")
-          val n = df.count(); s.conf.set(graft.plans.MetadataCountRule.Flag, "true"); n }
+        val expected = withConf("spark.sql.optimizer.excludedRules" ->
+          classOf[graft.plans.MetadataCountRule].getName)(df.count())
         assert(bare.collect().head.getLong(0) === expected)
 
         // a filter between the scan and the count blocks the rewrite
@@ -35,10 +34,7 @@ class MetadataCountSpec extends SparkSpec {
         assert(!filtered.queryExecution.optimizedPlan.isInstanceOf[LocalRelation],
           filtered.queryExecution.optimizedPlan.toString)
         assert(filtered.collect().head.getLong(0) < expected)
-      } finally {
-        s.conf.set(graft.plans.MetadataCountRule.Flag, "false")
-        s.experimental.extraOptimizations = prev
-      }
+      } finally s.experimental.extraOptimizations = prev
     }
   }
 }

@@ -87,4 +87,38 @@ class PqEncodePropertySpec extends SparkSpec {
       assert(!got(id).contains(kSub - 1), s"tie-break lost: vec $id chose the duplicate")
     }
   }
+
+  it("the driver-side ADC lookup table is bit-identical to decimal_dot over the same codebooks") {
+    import graft.sources.AnnIndex
+    val dir = "/root/testdata/sf0.001"
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    /** `cbDf` (m, k, cvec, ...) against the one-row `q` (qvec): every
+      * adcLut entry must equal Spark's decimal_dot over the same slice
+      * bit for bit, null entries included. */
+    def check(name: String, cbDf: org.apache.spark.sql.DataFrame, q: org.apache.spark.sql.DataFrame): Unit = {
+      val lut = AnnIndex.adcLut(AnnIndex.collectCodebookRows(cbDf), q.head().getSeq[Any](0))
+      val want = cbDf.crossJoin(q)
+        .select(col("m"), col("k"), expr(s"decimal_dot(slice(qvec, m * $SubDim + 1, $SubDim), cvec)"))
+        .collect().map(r => (r.getInt(0), r.getInt(1)) -> (if (r.isNullAt(2)) None else Some(bits(r.getDouble(2)))))
+        .toMap
+      val got = lut.indices.flatMap(m => lut(m).indices.map(k => (m, k) -> lut(m)(k).map(bits))).toMap
+      assert(want.size == lut.map(_.size).sum && want.nonEmpty, s"$name: ${want.size} codebook entries")
+      val diff = want.keys.filter(e => got.get(e) != want.get(e)).toSeq.sorted
+      assert(diff.isEmpty, s"$name: ${diff.size} entries differ from decimal_dot, e.g. " +
+        diff.take(3).map(e => s"$e driver ${got.get(e)} spark ${want(e)}").mkString("; "))
+    }
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val q0 = emb.where(col("vec_id") === 0).select(col("embedding").as("qvec"))
+    check("pq", AnnIndex.pqCodebooks(spark, dir), q0)
+    check("rpq", AnnIndex.rpqCodebooks(spark, dir), q0)
+    // the mog audits' panel query 0 against their seed codebooks
+    val view = graft.queries.MogQueries.storedMogView(spark, dir)
+    check("mog", AnnIndex.seedSubCodebooks(view, "embedding", "cpq"),
+      view.where(col("vec_id") === 0).select(col("embedding").as("qvec")))
+    // a null slot nulls its subspace's entries and only those
+    val withNull = q0.select(expr(s"transform(qvec, (x, i) -> IF(i = ${2 * SubDim + 3}, NULL, x))").as("qvec"))
+    check("null slot", AnnIndex.pqCodebooks(spark, dir), withNull)
+    assert(AnnIndex.adcLut(AnnIndex.collectedCodebooks(spark, dir), withNull.head().getSeq[Any](0))
+      .map(_.forall(_.isEmpty)) == Seq(false, false, true, false))
+  }
 }

@@ -3,8 +3,8 @@ package graft
 /** Pins the bench inter-family release contract: every releaseCaches the
   * bench calls KEEPS the stored-artifact readers
   * ([[graft.sources.ArtifactStore.reader]] says why) — the shared
-  * corpus-derived tables among them. Only the two query-time checkpoint
-  * caches (the ADC lookup table, d27's batch side) are dropped. */
+  * corpus-derived tables among them. Only the one query-time checkpoint
+  * cache (d27's batch side) is dropped. */
 class ReleaseSemanticsSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"

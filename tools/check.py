@@ -7,6 +7,9 @@ Usage: python3 tools/check.py [sfdir] [outdir] [--skip-verify] [only_query ...]
 """
 import sys, json, subprocess, hashlib, glob, os
 
+# the checkout this script lives in: sbt builds and runs ITS code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_verify"
 args = sys.argv[3:]
@@ -16,7 +19,7 @@ only = [a for a in args if not a.startswith("--")]
 if not skip_verify:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.Verify {sf} {out}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=REPO)
     if "[success]" not in r.stdout:
         print(r.stdout[-4000:]); print(r.stderr[-2000:]); sys.exit(1)
     for line in r.stdout.splitlines():

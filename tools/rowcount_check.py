@@ -14,6 +14,9 @@ of launching sbt (re-compare after an oracle-side-only change).
 """
 import sys, json, subprocess, glob, os
 
+# the checkout this script lives in: sbt builds and runs ITS code
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 args = [a for a in sys.argv[1:] if not a.startswith("--")]
 sf, oracle_path, names = args[0], args[1], args[2:]
 skip_log = None
@@ -31,7 +34,7 @@ if skip_log:
 else:
     r = subprocess.run(
         ["sbt", "-batch", f'runMain graft.RowCount {sf} {",".join(names)}'],
-        capture_output=True, text=True, cwd="/root/repo")
+        capture_output=True, text=True, cwd=REPO)
     out = r.stdout
     if "[success]" not in out:
         print(out[-4000:]); print(r.stderr[-2000:]); sys.exit(1)
