@@ -10,11 +10,16 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
   *
   * Runs each named [[SparkEntry.queries]] entry under `count()` in a
   * fresh session, with optional extra SQL confs, and prints one
-  * `[rowcount] <name> <rows> <seconds> <jobs>` line per query: the time
-  * covers building the DataFrame and the count, and the jobs (counted by
-  * a SparkListener) are every Spark job both ran — 1 for a plan that
-  * runs as one task ([[graft.plans.OneTaskPlan]]), more for each
-  * exchange, broadcast and driver-side collect.
+  * `[rowcount] <name> <rows> <seconds> <jobs> <compiles>` line per query:
+  * the time covers building the DataFrame and the count, the jobs
+  * (counted by a SparkListener) are every Spark job both ran — 1 for a
+  * plan that runs as one task ([[graft.plans.OneTaskPlan]]), more for
+  * each exchange, broadcast and driver-side collect — and the compiles
+  * are the generated classes Spark compiled meanwhile ([[codegenCompiles]]).
+  * A query listed twice compiles nothing the second time unless its
+  * generated code differs per call (a literal that changes) or the
+  * JVM-wide codegen cache evicted its classes
+  * ([[graft.functions.GraftExtensions]] sizes that cache).
   *
   * It is the Spark half of the driver's weaker rows-only check
   * (`tools/rowcount_check.py` runs `SELECT COUNT(*)` over the same
@@ -31,6 +36,11 @@ import org.apache.spark.sql.{GraftBridge, SparkSession}
   *     spark.sql.adaptive.coalescePartitions.initialPartitionNum=256
   */
 object RowCount {
+  /** Generated classes Spark has compiled in this JVM so far: the count of
+    * its compile-time histogram, which records cache misses only. */
+  private[graft] def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** The local session the diagnostic mains (RowCount, [[Explain]]) run
     * in: `local[n]` with n from `SPARK_GRAFT_CPUS`, else every available
     * core, and as many shuffle partitions; `confs` are `k=v` SQL confs
@@ -72,6 +82,7 @@ object RowCount {
       val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query $name"))
       GraftBridge.drainListeners(spark)
       val j0 = jobs.get
+      val c0 = codegenCompiles()
       val t0 = System.nanoTime()
       // STDOUT like Verify's [verify] lines: the forked JVM's stdout
       // passes through sbt raw for the tool to grep
@@ -79,7 +90,7 @@ object RowCount {
         val rows = fn(spark, sfDir).count()
         val secs = (System.nanoTime() - t0) / 1e9
         GraftBridge.drainListeners(spark)
-        println(f"[rowcount] $name $rows $secs%.3f ${jobs.get - j0}")
+        println(f"[rowcount] $name $rows $secs%.3f ${jobs.get - j0} ${codegenCompiles() - c0}")
       } catch { case e: Throwable => println(s"[rowcount] $name ERROR ${e.getMessage}") }
     }
     spark.stop()

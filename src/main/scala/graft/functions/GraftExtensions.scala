@@ -33,23 +33,44 @@ object MinHashDefaults {
  *    name; the opt-in [[graft.plans.MetadataCountRule]] is not injected);
  *  - the AQE query-stage preparation rule [[graft.plans.OneTaskPlan]]:
  *    a plan whose scans are all single-split runs as one task.
+ *
+ * It also defaults Spark's static `spark.sql.codegen.cache.maxEntries`,
+ * the JVM-wide cache of compiled generated classes, to 4096 (Spark's
+ * default is 100) by setting the system property when it is unset. One
+ * pass over the query registry at sf0.01 compiles about 2,045 distinct
+ * classes, so at 100 nearly every request compiles all of its classes
+ * again; 4096 holds a pass twice over, room for the other plan shapes a
+ * larger scale makes. A builder `.config`, `--conf` or `-D` setting of
+ * the key wins. The default reaches a session built with
+ * `SparkSession.builder().withExtensions(new GraftExtensions)`, because
+ * the builder runs the extension before its `SparkConf` reads the
+ * `spark.*` system properties. Loaded through `spark.sql.extensions`,
+ * the extension is created after the SparkContext exists: such a
+ * deployment sets the key itself.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    GraftExtensions.defaultCodegenCache(sys.props)
     GraftExtensions.functions.foreach(ext.injectFunction)
     // superkey-proven dedup removal — before the struct pruner so an
     // aggregate it eliminates is never also pruned
-    ext.injectOptimizerRule(session => graft.plans.RedundantDistinctRule(session))
+    ext.injectOptimizerRule(_ => new graft.plans.RedundantDistinctRule)
     // nested pruning through first(struct) dedup buffers
-    ext.injectOptimizerRule(session => graft.plans.FirstStructPruningRule(session))
+    ext.injectOptimizerRule(_ => new graft.plans.FirstStructPruningRule)
     // count-aggregation pushdown below joins
-    ext.injectOptimizerRule(session => graft.plans.EagerCountAggregation(session))
+    ext.injectOptimizerRule(_ => new graft.plans.EagerCountAggregation)
     // tiny inputs run as one task (after EnsureRequirements, inside AQE)
     ext.injectQueryStagePrepRule(_ => graft.plans.OneTaskPlan)
   }
 }
 
 object GraftExtensions {
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Sets [[CodegenCacheKey]] to 4096 in `props` unless it is already set. */
+  private[graft] def defaultCodegenCache(props: scala.collection.mutable.Map[String, String]): Unit =
+    props.getOrElseUpdate(CodegenCacheKey, "4096")
+
   private val minhashBuilder: Seq[Expression] => Expression = { args =>
     require(args.length == 1, "minhash_signature(hashes: array<bigint>) takes one argument")
     MinHashSignature(args.head, MinHashDefaults.params.map(_._1), MinHashDefaults.params.map(_._2), MinHashDefaults.P)

@@ -68,7 +68,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * Injected by [[graft.functions.GraftExtensions]]; Spark's
  * `spark.sql.optimizer.excludedRules` turns it off by class name.
  */
-case class RedundantDistinctRule(spark: SparkSession) extends Rule[LogicalPlan] {
+class RedundantDistinctRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (plan.isStreaming) plan

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -42,8 +41,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
  * shuffle per aggregation tree (SURVEY §4); this rule keeps that
  * contract while moving the shuffle to where the data is narrow.
  */
-case class EagerCountAggregation(session: SparkSession)
-    extends Rule[LogicalPlan] with PredicateHelper {
+class EagerCountAggregation extends Rule[LogicalPlan] with PredicateHelper {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDown { case agg: Aggregate => rewrite(agg).getOrElse(agg) }

@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, First}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
@@ -50,7 +49,7 @@ import org.apache.spark.sql.types.StructType
  * Injected by [[graft.functions.GraftExtensions]]; Spark's
  * `spark.sql.optimizer.excludedRules` turns it off by class name.
  */
-case class FirstStructPruningRule(spark: SparkSession) extends Rule[LogicalPlan] {
+class FirstStructPruningRule extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformUp {

@@ -143,7 +143,7 @@ class DistinctKeysSpec extends SparkSpec {
       import spark.implicits._
       val mem = MemoryStream[(Long, String)]
       val dd = mem.toDF().toDF("id", "v").dropDuplicates("id")
-      val rule = graft.plans.RedundantDistinctRule(spark)
+      val rule = new graft.plans.RedundantDistinctRule
       val analyzed = dd.queryExecution.analyzed
       assert(analyzed.isStreaming)
       assert(rule(analyzed) eq analyzed)

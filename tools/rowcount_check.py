@@ -39,7 +39,7 @@ else:
     if "[success]" not in out:
         print(out[-4000:]); print(r.stderr[-2000:]); sys.exit(1)
 
-# [rowcount] <name> <rows> <seconds> <jobs>, or [rowcount] <name> ERROR <message>
+# [rowcount] <name> <rows> <seconds> <jobs> <compiles>, or [rowcount] <name> ERROR <message>
 spark_fields = {}
 for line in out.splitlines():
     if line.startswith("[rowcount] "):
@@ -95,7 +95,7 @@ for name in names:
     ok = int(s) == int(o)
     if not ok:
         fails.append(name)
-    secs = f" ({fields[1]} s)" if len(fields) > 1 else ""
-    print(f"{name}: {'ok' if ok else 'FAIL'} spark={s} oracle={o}{secs}")
+    cost = ", ".join(f"{v} {unit}" for v, unit in zip(fields[1:], ("s", "jobs", "compiles")))
+    print(f"{name}: {'ok' if ok else 'FAIL'} spark={s} oracle={o}" + (f" ({cost})" if cost else ""))
 print(f"\n{len(names) - len(fails)}/{len(names)} ok; fails: {fails}")
 sys.exit(1 if fails else 0)
