@@ -47,10 +47,24 @@ object MinHashDefaults {
  * `spark.*` system properties. Loaded through `spark.sql.extensions`,
  * the extension is created after the SparkContext exists: such a
  * deployment sets the key itself.
+ *
+ * The same way, it defaults Spark's `spark.buffer.pageSize` to a quarter
+ * of the JVM's G1 heap region. Spark sizes a page from the heap (64 MB
+ * for a 7 GB heap on 4 cores), and G1 allocates any array of half a
+ * region or more (2 MB of a 4 MB region) as a humongous object directly
+ * in the old generation. Every hash aggregate and sort then takes one
+ * such page per task, and Spark pools freed pages behind weak
+ * references: about 500 MB of pooled pages sit in the old generation
+ * until a concurrent mark clears them, and refilling the pool crosses
+ * G1's marking threshold again. On the 4-core / 7 GB-heap perfbench
+ * runs that loop ran a concurrent mark every 0.3 s for whole timed
+ * phases in some runs and not in others. Pages under half a region are
+ * ordinary young objects. Nothing is set when G1 is not the collector.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.defaultCodegenCache(sys.props)
+    GraftExtensions.defaultPageSize(sys.props, GraftExtensions.g1RegionBytes())
     GraftExtensions.functions.foreach(ext.injectFunction)
     // superkey-proven dedup removal — before the struct pruner so an
     // aggregate it eliminates is never also pruned
@@ -70,6 +84,22 @@ object GraftExtensions {
   /** Sets [[CodegenCacheKey]] to 4096 in `props` unless it is already set. */
   private[graft] def defaultCodegenCache(props: scala.collection.mutable.Map[String, String]): Unit =
     props.getOrElseUpdate(CodegenCacheKey, "4096")
+
+  val PageSizeKey = "spark.buffer.pageSize"
+
+  /** Sets [[PageSizeKey]] to a quarter of `regionBytes` (the G1 heap
+    * region) in `props` unless it is already set; 0 sets nothing. */
+  private[graft] def defaultPageSize(props: scala.collection.mutable.Map[String, String],
+      regionBytes: Long): Unit =
+    if (regionBytes > 0) props.getOrElseUpdate(PageSizeKey, s"${regionBytes / 4}b")
+
+  /** This JVM's G1 heap region size in bytes, or 0 when G1 is not the collector. */
+  private[graft] def g1RegionBytes(): Long = {
+    val vm = java.lang.management.ManagementFactory
+      .getPlatformMXBean(classOf[com.sun.management.HotSpotDiagnosticMXBean])
+    if (vm.getVMOption("UseG1GC").getValue == "true") vm.getVMOption("G1HeapRegionSize").getValue.toLong
+    else 0L
+  }
 
   private val minhashBuilder: Seq[Expression] => Expression = { args =>
     require(args.length == 1, "minhash_signature(hashes: array<bigint>) takes one argument")

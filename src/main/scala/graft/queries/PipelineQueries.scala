@@ -311,8 +311,7 @@ object PipelineQueries {
     Q("s07_stream_foreachbatch_upsert",
       // streaming write path: per-batch MERGE of key aggregates into a
       // versioned state table via foreachBatch (the insert/upsert sink)
-      (s, dir) => StreamAgg.foreachBatchUpsert(s, dir,
-        java.nio.file.Files.createTempDirectory("graft_upsert").toString),
+      (s, dir) => StreamAgg.foreachBatchUpsert(s, dir),
       Some("""SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS cnt
              |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)),
 

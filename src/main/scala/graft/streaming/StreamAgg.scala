@@ -15,11 +15,18 @@ import org.apache.spark.sql.streaming.Trigger
  * batch path, so batch and streaming results are interchangeable; a
  * production deployment swaps the file source for Kafka and `complete`
  * mode for watermark+append with the same plan.
+ *
+ * Every replay takes one path ([[replay]]): a `foreachBatch` parquet sink
+ * in one scratch dir ([[withScratch]]) that is deleted when the call
+ * returns or throws. A replay writes nothing to the session conf, so its
+ * state partitions follow the session's `spark.sql.shuffle.partitions`
+ * and a query planned on another thread meanwhile sees the session as
+ * its owner set it.
  */
 object StreamAgg {
 
   /** Scratch root for a replay's TEMP checkpoint + sink output. These
-    * live exactly as long as the replay call (deleted in its finally), so
+    * live exactly as long as the replay call (see [[withScratch]]), so
     * checkpoint durability buys nothing — yet the WAL/commit/state-delta
     * writes behind it are a measured ~90-270 ms per micro-batch plus
     * 0.3-0.9 s per no-data finalization batch of pure filesystem traffic
@@ -38,102 +45,75 @@ object StreamAgg {
       if (master.startsWith("local") && shmWritable) Some(java.nio.file.Paths.get("/dev/shm"))
       else None)
 
-  private def scratchBase(spark: SparkSession, prefix: String): java.nio.file.Path = {
+  /** The one lifecycle of replay scratch: a fresh dir under
+    * [[scratchRoot]] is handed to `body` and deleted when `body` returns
+    * or throws, so a failed replay leaves nothing behind. */
+  private def withScratch[T](spark: SparkSession, prefix: String)(body: java.nio.file.Path => T): T = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val root = scratchRoot(spark.sparkContext.master,
       spark.conf.getOption("spark.graft.stream.scratchRoot"),
       java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm))
-    root match {
+    val base = root match {
       case Some(r) => java.nio.file.Files.createTempDirectory(r, "graft_replay_" + prefix)
       case None => java.nio.file.Files.createTempDirectory("graft_replay_" + prefix)
+    }
+    try body(base)
+    finally {
+      val st = java.nio.file.Files.walk(base)
+      try st.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally st.close()
     }
   }
 
   /** The shared replay harness: run `df` to completion with
-    * Trigger.AvailableNow (8 state partitions), then return the result
-    * through `order`. ONE definition of the sink boilerplate — a harness
-    * fix lands in every streaming query at once.
+    * Trigger.AvailableNow, then return the result through `order`. ONE
+    * definition of the sink — a harness fix lands in every streaming
+    * query at once.
     *
-    * Append-mode replays sink to PARQUET and read the files back: a
-    * memory sink holds the entire result as a driver-side LocalRelation,
-    * which is a collect() in disguise — at sf1 the re-parallelization
-    * shipped 7.5 MB tasks (the result rode inside every task closure),
-    * and at production scale it would OOM the driver. The parquet
-    * round-trip keeps rows executor-side end to end, exactly how a
-    * production job lands a stream into a table. Complete-mode replays
-    * (already-reduced aggregates, a few dozen rows) keep the memory sink
-    * — the parquet sink does not support complete mode. The result is
-    * localCheckpoint()ed so the scratch files can be deleted eagerly;
-    * the temp view/dir cleanup runs in a finally so a failed replay
-    * leaks nothing into the shared session. */
-  private[graft] def replayToMemory(spark: SparkSession, df: DataFrame, prefix: String,
+    * Each micro-batch lands in a parquet table through `foreachBatch`
+    * (appended in append mode, overwritten whole in complete mode) and
+    * the result is read back from it, so rows stay executor-side end to
+    * end, as a production job lands a stream into a table. A complete-
+    * mode table is read as one partition: `order` sorts it in place
+    * instead of shuffling one file per state partition. The table exists
+    * before the stream starts, so a replay that runs no batch reads no
+    * rows. The result is localCheckpoint()ed so the scratch can be
+    * deleted on return. State partitions are the session's shuffle
+    * partitions: the replay writes nothing to the shared session conf. */
+  private[graft] def replay(spark: SparkSession, df: DataFrame, prefix: String,
       outputMode: String)(order: DataFrame => DataFrame): DataFrame =
-    if (outputMode == "append") {
-      val base = scratchBase(spark, prefix)
-      try {
-        withStatePartitions(spark, 8) {
-          val q = df.writeStream
-            .format("parquet")
-            .option("path", s"$base/out")
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode("append")
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        order(spark.read.schema(df.schema).parquet(s"$base/out")).localCheckpoint()
-      } finally {
-        val st = java.nio.file.Files.walk(base)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally st.close()
-      }
-    } else {
-      val name = prefix + java.util.UUID.randomUUID().toString.replace("-", "")
-      // complete-mode replays keep the memory sink (already-reduced
-      // aggregates); the checkpoint is still explicit so it lands on the
-      // scratch root above instead of Spark's implicit tmpdir default
-      val base = scratchBase(spark, prefix)
-      try {
-        withStatePartitions(spark, 8) {
-          val q = df.writeStream
-            .format("memory").queryName(name)
-            .option("checkpointLocation", s"$base/ckpt")
-            .outputMode(outputMode)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        order(spark.table(name)).localCheckpoint()
-      } finally {
-        spark.catalog.dropTempView(name)
-        val st = java.nio.file.Files.walk(base)
-        try st.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => java.nio.file.Files.deleteIfExists(p))
-        finally st.close()
-      }
+    withScratch(spark, prefix) { base =>
+      val out = base.resolve("out")
+      java.nio.file.Files.createDirectory(out)
+      val mode = if (outputMode == "complete") "overwrite" else "append"
+      df.writeStream
+        .option("checkpointLocation", s"$base/ckpt")
+        .outputMode(outputMode)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) => batch.write.mode(mode).parquet(out.toString) }
+        .start()
+        .awaitTermination()
+      val written = spark.read.schema(df.schema).parquet(out.toString)
+      order(if (outputMode == "complete") written.coalesce(1) else written).localCheckpoint()
     }
 
-  /** Run a synchronous streaming query with a reduced state-partition
-    * count: each shuffle partition becomes a state-store directory with
-    * per-batch commit files, so 32 partitions of near-empty state are
-    * pure filesystem overhead for these bounded replays. The session
-    * conf is restored afterwards (batch queries keep their own setting);
-    * a live deployment sizes this to its key cardinality instead. */
-  private def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
+  /** The staging dir of a replay source, `graft_stream_<digest>` under the
+    * JVM temp dir: `key` is hashed with SHA-256 (a String.hashCode
+    * collision between two data dirs would silently aggregate the wrong
+    * dataset). */
+  private def stageDir(key: String): java.nio.file.Path = {
+    val digest = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(key.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_" + digest)
   }
 
   /** A parquet table staged as a streaming source directory (the file
     * stream source wants a flat directory of data files): a scratch
-    * symlink dir keyed by a strong digest of the absolute source path (a
-    * String.hashCode collision between two data dirs would silently
-    * aggregate the wrong dataset). The source is either one parquet FILE
-    * (the driver's testdata layout) or a DIRECTORY of part files (any
-    * Spark-written table, e.g. DataGen's sf1); each data file gets its
+    * symlink dir keyed by the absolute source path ([[stageDir]]). The
+    * source is either one parquet FILE (the driver's testdata layout) or
+    * a DIRECTORY of part files (any Spark-written table, e.g. DataGen's
+    * sf1); each data file gets its
     * own link — the file stream source does not recurse through a
     * directory symlink, which would silently replay zero rows. Stale
     * links are recreated.
@@ -148,10 +128,7 @@ object StreamAgg {
     import scala.jdk.CollectionConverters._
     val schema = spark.read.parquet(path).schema
     val target = java.nio.file.Paths.get(path).toAbsolutePath
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(target.toString.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-    val streamDir = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_stream_" + digest)
+    val streamDir = stageDir(target.toString)
     java.nio.file.Files.createDirectories(streamDir)
     // the data files to replay: the file itself, or the directory's
     // part files (metadata like _SUCCESS carries no rows and is skipped)
@@ -190,10 +167,8 @@ object StreamAgg {
   /** The events file staged as a streaming source, with `ts` conformed to
     * the catalog's declared TIMESTAMP type (graft.model.Conform — covers
     * int64-nanos, TIMESTAMP(NANOS) and NTZ writer generations alike). */
-  private def stagedEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def stagedEventsStream(spark: SparkSession, dir: String): DataFrame =
     graft.model.Conform("events", stagedFileStream(spark, s"$dir/events.parquet"))
-  }
 
   /** The MinHash signature index built INCREMENTALLY over a documents
     * stream (SURVEY §2.9 × the dedup pipeline): the exact stateless
@@ -208,7 +183,7 @@ object StreamAgg {
     val docsStream = stagedFileStream(spark, s"$dir/documents.parquet")
     val sig = graft.sources.TextIndex.streamSignatures(docsStream)
       .select(col("doc_id"), concat_ws(",", col("sig").cast("array<string>")).as("sig"))
-    replayToMemory(spark, sig, "stream_sig_", "append")(_.orderBy("doc_id"))
+    replay(spark, sig, "stream_sig_", "append")(_.orderBy("doc_id"))
   }
 
   /** The inverted search index maintained on a document stream
@@ -227,7 +202,7 @@ object StreamAgg {
       .select(col("doc_id"), col("toks"), explode(array_distinct(col("toks"))).as("tok"))
       .select(col("doc_id"), col("tok"),
         size(filter(col("toks"), t => t === col("tok"))).cast("bigint").as("tf"))
-    replayToMemory(spark, postings, "stream_inv_", "append")(_.orderBy("tok", "doc_id"))
+    replay(spark, postings, "stream_inv_", "append")(_.orderBy("tok", "doc_id"))
   }
 
   /** The exact-substring window-hash index maintained on a document
@@ -248,16 +223,9 @@ object StreamAgg {
           org.apache.spark.sql.GraftBridge.expression(col("toks")), W)).as("hs"))
       .select(col("doc_id"), posexplode(col("hs")))
       .select(col("doc_id"), (col("pos") + 1).as("wpos"), col("col").as("h"))
-    replayToMemory(spark, w, "stream_win_", "append")(_.orderBy("doc_id", "wpos"))
+    replay(spark, w, "stream_win_", "append")(_.orderBy("doc_id", "wpos"))
   }
 
-  /** The BM25 norms table (doc_id, dl — d35's length-normalization
-    * input) maintained on a document stream: one stateless per-row
-    * expression per arriving document, completing the family contract —
-    * every stored search/dedup artifact (signatures s08, postings s11,
-    * windows s12, norms s13) has a streaming maintenance path proven
-    * row-equal to its batch build. Scoring stays batch-side over the
-    * accumulated table, exactly as banding reads the signature table. */
   /** The e12 JL sketch table maintained on an embeddings stream: the
     * IDENTICAL per-row projection the stored artifact is built with
     * ([[graft.sources.AnnIndex.jlProjection]] — factored, not
@@ -270,7 +238,7 @@ object StreamAgg {
     val embStream = graft.model.Conform("embeddings",
       stagedFileStream(spark, s"$dir/embeddings.parquet"))
     val sketch = graft.sources.AnnIndex.jlProjection(embStream)
-    replayToMemory(spark, sketch, "stream_jl_", "append")(_.orderBy("vec_id"))
+    replay(spark, sketch, "stream_jl_", "append")(_.orderBy("vec_id"))
   }
 
   /** The PQ code table (e08's stored compressed index) maintained on an
@@ -290,7 +258,7 @@ object StreamAgg {
     val cb = graft.sources.AnnIndex.collectedCodebooks(spark, dir)
     val codes = embStream.select(
       col("vec_id") +: graft.sources.AnnIndex.pqEncodeColumns(cb): _*)
-    replayToMemory(spark, codes, "stream_pq_", "append")(_.orderBy("vec_id"))
+    replay(spark, codes, "stream_pq_", "append")(_.orderBy("vec_id"))
   }
 
   /** The COMBINED IVF-PQ index (e14's probe target) maintained on an
@@ -311,7 +279,7 @@ object StreamAgg {
     val rows = embStream.select(
       (col("vec_id") +: graft.sources.AnnIndex.pqEncodeColumns(cb)) :+
         graft.sources.AnnIndex.srpCode(nb).as("code"): _*)
-    replayToMemory(spark, rows, "stream_ivfpq_", "append")(_.orderBy("vec_id"))
+    replay(spark, rows, "stream_ivfpq_", "append")(_.orderBy("vec_id"))
   }
 
   /** The stored dedup index serving a STREAM PROBE (s15): d27's
@@ -339,7 +307,7 @@ object StreamAgg {
     val hits = graft.sources.TextIndex.streamBands(delta)
       .join(graft.sources.TextIndex.corpusMemberTable(spark, dir), Seq("band", "bkey"))
       .select(col("doc_id").as("batch_id"), col("corpus_id"), col("band"))
-    replayToMemory(spark, hits, "stream_probe_", "append")(
+    replay(spark, hits, "stream_probe_", "append")(
       _.orderBy("batch_id", "corpus_id", "band"))
   }
 
@@ -379,7 +347,7 @@ object StreamAgg {
       .select(col("q_id"), col("vec_id"),
         (AnnIndex.dotNative("embedding", "qvec") / (col("norm") * col("qnorm"))).as("cosine"))
       .where(col("cosine") >= graft.sources.AnnIndex.NearDupCosine)
-    replayToMemory(spark, hits, "stream_annprobe_", "append")(_.orderBy("q_id", "vec_id"))
+    replay(spark, hits, "stream_annprobe_", "append")(_.orderBy("q_id", "vec_id"))
   }
 
   /** The stored-artifact SIDE-INPUTS of the streaming queries above,
@@ -408,13 +376,31 @@ object StreamAgg {
       graft.sources.AnnIndex.nbitsOf(spark, dir)
       graft.sources.AnnIndex.codedVectors(spark, dir); () }))
 
+  /** The BM25 norms table (doc_id, dl — d35's length-normalization
+    * input) maintained on a document stream: one stateless per-row
+    * expression per arriving document, completing the family contract —
+    * every stored search/dedup artifact (signatures s08, postings s11,
+    * windows s12, norms s13) has a streaming maintenance path proven
+    * row-equal to its batch build. Scoring stays batch-side over the
+    * accumulated table, exactly as banding reads the signature table. */
   def normsIndexStream(spark: SparkSession, dir: String): DataFrame = {
     val docsStream = stagedFileStream(spark, s"$dir/documents.parquet")
     val norms = docsStream
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("bigint").as("dl"))
-    replayToMemory(spark, norms, "stream_norms_", "append")(_.orderBy("doc_id"))
+    replay(spark, norms, "stream_norms_", "append")(_.orderBy("doc_id"))
   }
+
+  /** The s09 plan shape on an arbitrary events stream — seam shared by
+    * the oracle replay and the state-bound spec (StreamingSpec drives it
+    * through a MemoryStream across many micro-batches and asserts
+    * `stateOperators.numRowsTotal` plateaus: eviction observed, not
+    * assumed). */
+  private[graft] def dedupWithinWatermarkPlan(ev: DataFrame): DataFrame = ev
+    .withWatermark("ts", "1 day")
+    .select(col("user_id"), col("event_type"), col("ts"))
+    .dropDuplicatesWithinWatermark("user_id", "event_type")
+    .select(col("user_id"), col("event_type"))
 
   /** Streaming dedup via the DEDICATED bounded-state operator,
     * `dropDuplicatesWithinWatermark`: unlike [[streamWindowedDistinct]]
@@ -430,20 +416,9 @@ object StreamAgg {
     * delay after its first sighting would legitimately be re-emitted
     * after state expiry, and the global-DISTINCT oracle would no longer
     * apply. */
-  /** The s09 plan shape on an arbitrary events stream — seam shared by
-    * the oracle replay and the state-bound spec (StreamingSpec drives it
-    * through a MemoryStream across many micro-batches and asserts
-    * `stateOperators.numRowsTotal` plateaus: eviction observed, not
-    * assumed). */
-  private[graft] def dedupWithinWatermarkPlan(ev: DataFrame): DataFrame = ev
-    .withWatermark("ts", "1 day")
-    .select(col("user_id"), col("event_type"), col("ts"))
-    .dropDuplicatesWithinWatermark("user_id", "event_type")
-    .select(col("user_id"), col("event_type"))
-
   def streamDedupWithinWatermark(spark: SparkSession, dir: String): DataFrame = {
     val dd = dedupWithinWatermarkPlan(stagedEventsStream(spark, dir))
-    replayToMemory(spark, dd, "stream_ddww_", "append")(_.orderBy("user_id", "event_type"))
+    replay(spark, dd, "stream_ddww_", "append")(_.orderBy("user_id", "event_type"))
   }
 
   /** The s01 plan shape on an arbitrary events stream (seam shared by the
@@ -457,10 +432,10 @@ object StreamAgg {
           sum(graft.functions.DuckDecimalCast.duckDecimal6(col("value")))).as("val_sum"))
       .select(unix_millis(col("w.start")).as("bucket_ms"), col("cnt"), col("val_sum"))
 
-  /** Daily count+sum buckets over a parquet events stream, processed with
-    * Trigger.AvailableNow into an in-memory table (batch-equivalent run). */
+  /** Daily count+sum buckets over a parquet events stream, replayed in
+    * complete mode with Trigger.AvailableNow (batch-equivalent run). */
   def dailyBuckets(spark: SparkSession, dir: String): DataFrame =
-    replayToMemory(spark, dailyBucketsPlan(stagedEventsStream(spark, dir)),
+    replay(spark, dailyBucketsPlan(stagedEventsStream(spark, dir)),
       "stream_daily_", "complete")(_.orderBy("bucket_ms"))
 
   /** Streaming exact deduplication: the distinct (user_id, event_type)
@@ -474,16 +449,9 @@ object StreamAgg {
     val ev = stagedEventsStream(spark, dir)
     val distinctPairs = ev.select(col("user_id"), col("event_type"))
       .dropDuplicates("user_id", "event_type")
-    replayToMemory(spark, distinctPairs, "stream_dedup_", "append")(_.orderBy("user_id", "event_type"))
+    replay(spark, distinctPairs, "stream_dedup_", "append")(_.orderBy("user_id", "event_type"))
   }
 
-  /** Streaming dedup with BOUNDED state: distinct (user_id, event_type,
-    * day-window) under a 1-day watermark. Unlike [[streamDistinctPairs]]
-    * (whose state grows with the number of distinct keys forever), the
-    * dedup key includes the event-time window, so state for windows older
-    * than the watermark is evicted — the shape that survives an unbounded
-    * stream. Only key columns are emitted (first-sight append), so the
-    * output SET equals `SELECT DISTINCT user_id, event_type, day`. */
   /** The s04 plan shape on an arbitrary events stream (state-bound spec
     * seam, see [[dedupWithinWatermarkPlan]]). */
   private[graft] def windowedDistinctPlan(ev: DataFrame): DataFrame = ev
@@ -492,9 +460,16 @@ object StreamAgg {
     .dropDuplicates("user_id", "event_type", "w")
     .select(col("user_id"), col("event_type"), unix_millis(col("w.start")).as("day_ms"))
 
+  /** Streaming dedup with BOUNDED state: distinct (user_id, event_type,
+    * day-window) under a 1-day watermark. Unlike [[streamDistinctPairs]]
+    * (whose state grows with the number of distinct keys forever), the
+    * dedup key includes the event-time window, so state for windows older
+    * than the watermark is evicted — the shape that survives an unbounded
+    * stream. Only key columns are emitted (first-sight append), so the
+    * output SET equals `SELECT DISTINCT user_id, event_type, day`. */
   def streamWindowedDistinct(spark: SparkSession, dir: String): DataFrame = {
     val dd = windowedDistinctPlan(stagedEventsStream(spark, dir))
-    replayToMemory(spark, dd, "stream_wdedup_", "append")(_.orderBy("user_id", "event_type", "day_ms"))
+    replay(spark, dd, "stream_wdedup_", "append")(_.orderBy("user_id", "event_type", "day_ms"))
   }
 
   /** Streaming upsert via foreachBatch (SURVEY §2.1 — the streaming
@@ -503,33 +478,28 @@ object StreamAgg {
     * re-aggregate, write version N+1). Versioned directories instead of
     * in-place overwrite: a parquet table cannot be atomically overwritten
     * while being read, and versions double as the commit log — the same
-    * shape a lakehouse MERGE INTO performs transactionally. Returns the
-    * final state version as a DataFrame. */
-  def foreachBatchUpsert(spark: SparkSession, dir: String, stateRoot: String): DataFrame = {
+    * shape a lakehouse MERGE INTO performs transactionally. The state
+    * chain lives in the replay's scratch dir ([[withScratch]]), deleted
+    * with it. Returns the final state version as a DataFrame. */
+  def foreachBatchUpsert(spark: SparkSession, dir: String): DataFrame = {
     val ev = stagedEventsStream(spark, dir)
       .select(col("user_id"), col("event_type"), col("value"))
-    def versionPath(v: Long) = s"$stateRoot/v$v"
-    // the state chain is a production shape, so its bookkeeping (applied-
-    // batch markers, final cleanup) goes through the Hadoop FileSystem of
-    // the state root — a remote stateRoot (HDFS/S3A) works unchanged
-    val rootPath = new org.apache.hadoop.fs.Path(stateRoot)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var version = 0L
-    // seed: empty state (version 0)
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "user_id BIGINT, event_type STRING, cnt BIGINT"))
-      .write.mode("overwrite").parquet(versionPath(0))
-    val name = "stream_upsert_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    // explicit scratch checkpoint (see scratchBase) instead of Spark's
-    // implicit tmpdir temp checkpoint; the versioned state chain itself
-    // stays on the caller's stateRoot (the production-shaped piece)
-    val ckptBase = scratchBase(spark, "upsert_")
-    try withStatePartitions(spark, 8) {
-      val q = ev.writeStream
-        .queryName(name)
-        .option("checkpointLocation", s"$ckptBase/ckpt")
+    withScratch(spark, "upsert_") { base =>
+      def versionPath(v: Long) = s"$base/state/v$v"
+      // the state chain is a production shape, so its applied-batch
+      // markers go through the Hadoop FileSystem API, as they would on
+      // a remote (HDFS/S3A) state table
+      val rootPath = new org.apache.hadoop.fs.Path(s"$base/state")
+      val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      var version = 0L
+      // seed: empty state (version 0)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        org.apache.spark.sql.types.StructType.fromDDL(
+          "user_id BIGINT, event_type STRING, cnt BIGINT"))
+        .write.mode("overwrite").parquet(versionPath(0))
+      ev.writeStream
+        .option("checkpointLocation", s"$base/ckpt")
         .outputMode("append")
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -551,19 +521,13 @@ object StreamAgg {
           ()
         }
         .start()
-      q.awaitTermination()
-    } finally {
-      val st = java.nio.file.Files.walk(ckptBase)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => java.nio.file.Files.deleteIfExists(p))
-      finally st.close()
+        .awaitTermination()
+      // materialize the final state (localCheckpoint is eager) before the
+      // scratch goes; the sort stays lazily on top of the checkpointed
+      // blocks
+      spark.read.parquet(versionPath(version)).localCheckpoint()
+        .orderBy("user_id", "event_type")
     }
-    // materialize the final state (localCheckpoint is eager), then clean
-    // up the scratch version chain; the sort stays lazily on top of the
-    // checkpointed blocks
-    val result = spark.read.parquet(versionPath(version)).localCheckpoint()
-    fs.delete(rootPath, true)
-    result.orderBy("user_id", "event_type")
   }
 
   /** Stream-static join: events stream enriched against the (batch)
@@ -577,7 +541,20 @@ object StreamAgg {
       .select(col("c_custkey"), col("c_mktsegment"))
     val joined = ev.join(broadcast(cust), col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("c_mktsegment"))
-    replayToMemory(spark, joined, "stream_sj_", "append")(_.orderBy("event_id"))
+    replay(spark, joined, "stream_sj_", "append")(_.orderBy("event_id"))
+  }
+
+  /** The s06 plan shape over two event streams (state-bound spec seam,
+    * see [[dedupWithinWatermarkPlan]]). */
+  private[graft] def intervalSelfJoinPlan(s1: DataFrame, s2: DataFrame): DataFrame = {
+    val e1 = s1.withWatermark("ts", "1 hour")
+      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
+    val e2 = s2.withWatermark("ts", "1 hour")
+      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
+    e1.join(e2,
+      col("a_user") === col("b_user") && col("a_id") < col("b_id") &&
+        col("b_ts") >= col("a_ts") && col("b_ts") <= col("a_ts") + expr("INTERVAL 5 MINUTES"))
+      .select(col("a_id"), col("b_id"))
   }
 
   /** Stream-stream time-interval self-join: pairs of events by the same
@@ -599,23 +576,10 @@ object StreamAgg {
     * folds it straight back into the join condition. The bench harness
     * raises that one logger to ERROR so the driver-read stderr tail stays
     * meaningful. */
-  /** The s06 plan shape over two event streams (state-bound spec seam,
-    * see [[dedupWithinWatermarkPlan]]). */
-  private[graft] def intervalSelfJoinPlan(s1: DataFrame, s2: DataFrame): DataFrame = {
-    val e1 = s1.withWatermark("ts", "1 hour")
-      .select(col("event_id").as("a_id"), col("user_id").as("a_user"), col("ts").as("a_ts"))
-    val e2 = s2.withWatermark("ts", "1 hour")
-      .select(col("event_id").as("b_id"), col("user_id").as("b_user"), col("ts").as("b_ts"))
-    e1.join(e2,
-      col("a_user") === col("b_user") && col("a_id") < col("b_id") &&
-        col("b_ts") >= col("a_ts") && col("b_ts") <= col("a_ts") + expr("INTERVAL 5 MINUTES"))
-      .select(col("a_id"), col("b_id"))
-  }
-
   def streamIntervalSelfJoin(spark: SparkSession, dir: String): DataFrame = {
     val joined = intervalSelfJoinPlan(
       stagedEventsStream(spark, dir), stagedEventsStream(spark, dir))
-    replayToMemory(spark, joined, "stream_ssj_", "append")(_.orderBy("a_id", "b_id"))
+    replay(spark, joined, "stream_ssj_", "append")(_.orderBy("a_id", "b_id"))
   }
 
   // ------------------------------------------------------ custom state (s10)
@@ -703,7 +667,7 @@ object StreamAgg {
 
   def streamSessionize(spark: SparkSession, dir: String): DataFrame = {
     val sessions = sessionizePlan(spark, stagedEventsStream(spark, dir))
-    replayToMemory(spark, sessions, "stream_sess_", "append")(_.orderBy("user_id", "start_ms"))
+    replay(spark, sessions, "stream_sess_", "append")(_.orderBy("user_id", "start_ms"))
   }
 
   /** Watermarked append-mode variant (the unbounded-stream shape): 1-hour
@@ -723,18 +687,14 @@ object StreamAgg {
     * (max event time − 2 h) are emitted. State is bounded by the
     * watermark — exactly what a live Kafka deployment of this plan does. */
   def hourlyWatermarked(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
     val ev0 = graft.model.Conform("events", spark.read.parquet(path))
     // stage-dir key includes the source file's size and mtime so a
     // regenerated input at the same path invalidates the cached split
     val target = java.nio.file.Paths.get(path).toAbsolutePath
     val attrs = java.nio.file.Files.readAttributes(target, classOf[java.nio.file.attribute.BasicFileAttributes])
-    val stamp = s"wm:$target:${attrs.size}:${attrs.lastModifiedTime.toMillis}"
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(stamp.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-    val stageDir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_" + digest)
-    if (!java.nio.file.Files.exists(stageDir.resolve("_done"))) {
+    val split = stageDir(s"wm:$target:${attrs.size}:${attrs.lastModifiedTime.toMillis}")
+    if (!java.nio.file.Files.exists(split.resolve("_done"))) {
       // deterministic two-way split at the midpoint of the time range —
       // the min/max scan runs ONLY when staging; a cached split (any
       // later run on the same source bytes, same session or not) pays
@@ -743,15 +703,15 @@ object StreamAgg {
         .collect().head.toSeq.map(_.asInstanceOf[Long]).toArray
       val mid = lo + (hi - lo) / 2
       ev0.where(unix_micros(col("ts")) <= mid).coalesce(1)
-        .write.mode("overwrite").parquet(stageDir.resolve("p1").toString)
+        .write.mode("overwrite").parquet(split.resolve("p1").toString)
       ev0.where(unix_micros(col("ts")) > mid).coalesce(1)
-        .write.mode("overwrite").parquet(stageDir.resolve("p2").toString)
+        .write.mode("overwrite").parquet(split.resolve("p2").toString)
       // FileStreamSource orders files by modification time — pin p1's files
       // strictly before p2's instead of relying on write order, which a
       // coarse-mtime filesystem could tie (ties would replay p2 first and
       // drop the early windows as late data).
       def pinMtime(sub: String, millis: Long): Unit = {
-        val d = stageDir.resolve(sub)
+        val d = split.resolve(sub)
         val st = java.nio.file.Files.list(d)
         try st.forEach(f =>
           java.nio.file.Files.setLastModifiedTime(
@@ -761,14 +721,14 @@ object StreamAgg {
       val t0 = System.currentTimeMillis()
       pinMtime("p1", t0 - 120000)
       pinMtime("p2", t0 - 60000)
-      java.nio.file.Files.createFile(stageDir.resolve("_done"))
+      java.nio.file.Files.createFile(split.resolve("_done"))
     }
-    val schema = spark.read.parquet(stageDir.resolve("p1").toString).schema
+    val schema = spark.read.parquet(split.resolve("p1").toString).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1)
-      .parquet(stageDir.toString + "/p*")
+      .parquet(split.toString + "/p*")
     val agg = hourlyAppend(spark, stream)
       .select(unix_millis(col("bucket")).as("bucket_ms"), col("cnt"))
-    replayToMemory(spark, agg, "stream_hourly_", "append")(_.orderBy("bucket_ms"))
+    replay(spark, agg, "stream_hourly_", "append")(_.orderBy("bucket_ms"))
   }
 }

@@ -102,7 +102,7 @@ class ConformSpec extends SparkSpec {
         val path = writeEncoding(dir, e)
         val schema = spark.read.parquet(path).schema
         val stream = Conform("events", spark.readStream.schema(schema).parquet(path))
-        graft.streaming.StreamAgg.replayToMemory(
+        graft.streaming.StreamAgg.replay(
           spark, graft.streaming.StreamAgg.dailyBucketsPlan(stream),
           s"conform_${e}_", "complete")(_.orderBy("bucket_ms"))
           .collect().map(_.toString).toSeq

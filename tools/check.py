@@ -184,6 +184,13 @@ for name, sql in sorted(oracle.items()):
                 print(merged.head(5))
     else:
         print(f"{name}: ok ({len(s)} rows)")
-reg_note = f" (registered: {len(registered)})" if registered else ""
-print(f"\n{len(oracle) - len(fails)}/{len(oracle)} ok{reg_note}; fails: {fails}")
+if only:
+    # a filtered run counts only the queries it checked
+    checked = [n for n in oracle if n in only]
+    total = len(registered) if registered else len(oracle)
+    print(f"\n{len(checked) - len(fails)}/{len(checked)} ok "
+          f"(filtered: {len(checked)} of {total} registered); fails: {fails}")
+else:
+    reg_note = f" (registered: {len(registered)})" if registered else ""
+    print(f"\n{len(oracle) - len(fails)}/{len(oracle)} ok{reg_note}; fails: {fails}")
 sys.exit(1 if fails else 0)
