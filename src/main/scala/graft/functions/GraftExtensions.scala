@@ -60,11 +60,41 @@ object MinHashDefaults {
  * runs that loop ran a concurrent mark every 0.3 s for whole timed
  * phases in some runs and not in others. Pages under half a region are
  * ordinary young objects. Nothing is set when G1 is not the collector.
+ *
+ * Two more defaults, set the same way, take a stream replay's fixed
+ * JVM costs away:
+ *  - `spark.sql.artifact.isolation.enabled` is false. Every stream runs
+ *    in a clone of its session, Spark 4.1 gives the clone a new session
+ *    UUID, and with isolation on the executor gives each UUID a fresh
+ *    class loader. `CodeGenerator`'s cache is keyed by (class loader,
+ *    code), so every replay recompiled classes byte-identical to cached
+ *    ones and then ran them un-JITted: s01 compiled 12 classes on its
+ *    second call, s05 5, s13 2; with the default, 0. graft adds no
+ *    session artifacts (jars, files, REPL classes); a Spark Connect
+ *    deployment that needs per-session jars sets the key itself.
+ *  - The `file:` scheme is bound to [[graft.util.ForkFreeLocalFileSystem]]
+ *    (`spark.hadoop.fs.file.impl`) and [[graft.util.ForkFreeLocalFs]]
+ *    (`spark.hadoop.fs.AbstractFileSystem.file.impl`, which FileContext,
+ *    and so Spark's streaming checkpoint manager, goes through). Without
+ *    Hadoop's native library every local mkdirs, create, chmod and
+ *    FileContext rename forks a `chmod` or `readlink` process (about 3 ms
+ *    per mkdirs, 6 ms per create, 20 ms per rename at a 2 GB live heap),
+ *    paid by each checkpoint log entry, state delta, sink part file and
+ *    artifact write.
+ * On a 4-core box at sf0.1 (`graft.RowCount`, calls 4–5 of 5), s01 took
+ * 0.87–1.00 s per call with neither default and 0.49–0.55 s with both,
+ * s05 0.62–0.68 → 0.42–0.50 s and s13 0.36–0.40 → 0.20–0.26 s; each
+ * default alone took off part of it.
+ *
+ * A deployment that loads graft through `spark.sql.extensions` sets
+ * these keys itself too, for the reason above.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.defaultCodegenCache(sys.props)
     GraftExtensions.defaultPageSize(sys.props, GraftExtensions.g1RegionBytes())
+    GraftExtensions.defaultSharedClassLoader(sys.props)
+    GraftExtensions.defaultLocalFs(sys.props)
     GraftExtensions.functions.foreach(ext.injectFunction)
     // superkey-proven dedup removal — before the struct pruner so an
     // aggregate it eliminates is never also pruned
@@ -92,6 +122,22 @@ object GraftExtensions {
   private[graft] def defaultPageSize(props: scala.collection.mutable.Map[String, String],
       regionBytes: Long): Unit =
     if (regionBytes > 0) props.getOrElseUpdate(PageSizeKey, s"${regionBytes / 4}b")
+
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /** Sets [[ArtifactIsolationKey]] to false in `props` unless it is already set. */
+  private[graft] def defaultSharedClassLoader(props: scala.collection.mutable.Map[String, String]): Unit =
+    props.getOrElseUpdate(ArtifactIsolationKey, "false")
+
+  val LocalFsKey = "spark.hadoop.fs.file.impl"
+  val LocalAbstractFsKey = "spark.hadoop.fs.AbstractFileSystem.file.impl"
+
+  /** Binds the `file:` scheme to [[graft.util.ForkFreeLocalFileSystem]]
+    * and [[graft.util.ForkFreeLocalFs]] in `props`, each unless already set. */
+  private[graft] def defaultLocalFs(props: scala.collection.mutable.Map[String, String]): Unit = {
+    props.getOrElseUpdate(LocalFsKey, classOf[graft.util.ForkFreeLocalFileSystem].getName)
+    props.getOrElseUpdate(LocalAbstractFsKey, classOf[graft.util.ForkFreeLocalFs].getName)
+  }
 
   /** This JVM's G1 heap region size in bytes, or 0 when G1 is not the collector. */
   private[graft] def g1RegionBytes(): Long = {

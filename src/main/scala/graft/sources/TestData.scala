@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import graft.traversal.{EdgeTable, FkEdge, Graph, VertexTable}
 
 /**
@@ -93,6 +94,17 @@ object TestData {
 
   private val graphCache = new graft.util.SessionCache[Graph]
 
+  private val fileSchemas = new graft.util.SessionCache[StructType]
+
+  /** Table `name`'s schema as its parquet files store it (before
+    * [[graft.model.Conform]]): the catalog's one read of the table at
+    * load or, in a session that has not loaded `dir`, one read kept for
+    * the session. A stream over the table's files declares it instead of
+    * inferring it, which runs a Spark job every time; unlike a catalog
+    * load, it writes nothing to the session conf. */
+  def fileSchema(spark: SparkSession, dir: String, name: String): StructType =
+    fileSchemas.getOrElseUpdate(spark, s"$dir/$name")(table(spark, dir, name).schema)
+
   /** Cached per (session, dir): avoids re-reading parquet footers for every
     * query construction. */
   def graph(spark: SparkSession, dir: String): Graph =
@@ -136,6 +148,7 @@ object TestData {
     sizeShufflePartitions(spark, dir)
     val vs = vertexTables.map { case (name, id) =>
       val df0 = table(spark, dir, name)
+      fileSchemas.getOrElseUpdate(spark, s"$dir/$name")(df0.schema)
       // declare the natural unique keys to the optimizer
       // (RedundantDistinctRule) — every table except lineitem, whose
       // identity is the COMPUTED `_rowid` below (a projection, not a

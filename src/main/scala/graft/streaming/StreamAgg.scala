@@ -108,9 +108,12 @@ object StreamAgg {
     java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), "graft_stream_" + digest)
   }
 
-  /** A parquet table staged as a streaming source directory (the file
-    * stream source wants a flat directory of data files): a scratch
+  /** Table `table` of `dir` staged as a streaming source directory (the
+    * file stream source wants a flat directory of data files): a scratch
     * symlink dir keyed by the absolute source path ([[stageDir]]). The
+    * stream declares the table's file schema
+    * ([[graft.sources.TestData.fileSchema]]), so a replay runs no
+    * schema-inference job. The
     * source is either one parquet FILE (the driver's testdata layout) or
     * a DIRECTORY of part files (any Spark-written table, e.g. DataGen's
     * sf1); each data file gets its
@@ -124,10 +127,10 @@ object StreamAgg {
     * object-store path and never touches this. (The production-shaped
     * pieces — s07's state chain, the migration store, the ANN index —
     * all go through the Hadoop FileSystem API.) */
-  private def stagedFileStream(spark: SparkSession, path: String): DataFrame = {
+  private def stagedFileStream(spark: SparkSession, dir: String, table: String): DataFrame = {
     import scala.jdk.CollectionConverters._
-    val schema = spark.read.parquet(path).schema
-    val target = java.nio.file.Paths.get(path).toAbsolutePath
+    val schema = graft.sources.TestData.fileSchema(spark, dir, table)
+    val target = java.nio.file.Paths.get(s"$dir/$table.parquet").toAbsolutePath
     val streamDir = stageDir(target.toString)
     java.nio.file.Files.createDirectories(streamDir)
     // the data files to replay: the file itself, or the directory's
@@ -168,7 +171,7 @@ object StreamAgg {
     * the catalog's declared TIMESTAMP type (graft.model.Conform — covers
     * int64-nanos, TIMESTAMP(NANOS) and NTZ writer generations alike). */
   private def stagedEventsStream(spark: SparkSession, dir: String): DataFrame =
-    graft.model.Conform("events", stagedFileStream(spark, s"$dir/events.parquet"))
+    graft.model.Conform("events", stagedFileStream(spark, dir, "events"))
 
   /** The MinHash signature index built INCREMENTALLY over a documents
     * stream (SURVEY §2.9 × the dedup pipeline): the exact stateless
@@ -180,7 +183,7 @@ object StreamAgg {
     * candidate joins then read the signature table batch-side
     * (stream-static, as d09 does). */
   def minhashIndexStream(spark: SparkSession, dir: String): DataFrame = {
-    val docsStream = stagedFileStream(spark, s"$dir/documents.parquet")
+    val docsStream = stagedFileStream(spark, dir, "documents")
     val sig = graft.sources.TextIndex.streamSignatures(docsStream)
       .select(col("doc_id"), concat_ws(",", col("sig").cast("array<string>")).as("sig"))
     replay(spark, sig, "stream_sig_", "append")(_.orderBy("doc_id"))
@@ -196,7 +199,7 @@ object StreamAgg {
     * the published artifact batch-side. Same oracle family as d31: the
     * DuckDB side recomputes postings from raw text. */
   def postingIndexStream(spark: SparkSession, dir: String): DataFrame = {
-    val docsStream = stagedFileStream(spark, s"$dir/documents.parquet")
+    val docsStream = stagedFileStream(spark, dir, "documents")
     val postings = docsStream
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), col("toks"), explode(array_distinct(col("toks"))).as("tok"))
@@ -214,7 +217,7 @@ object StreamAgg {
     * exactly as banding reads the signature table. */
   def windowIndexStream(spark: SparkSession, dir: String): DataFrame = {
     val W = graft.queries.SearchQueries.SubstrW
-    val docsStream = stagedFileStream(spark, s"$dir/documents.parquet")
+    val docsStream = stagedFileStream(spark, dir, "documents")
     val w = docsStream
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .where(size(col("toks")) >= W)
@@ -236,7 +239,7 @@ object StreamAgg {
     * Ranking stays batch-side over the accumulated table. */
   def jlSketchStream(spark: SparkSession, dir: String): DataFrame = {
     val embStream = graft.model.Conform("embeddings",
-      stagedFileStream(spark, s"$dir/embeddings.parquet"))
+      stagedFileStream(spark, dir, "embeddings"))
     val sketch = graft.sources.AnnIndex.jlProjection(embStream)
     replay(spark, sketch, "stream_jl_", "append")(_.orderBy("vec_id"))
   }
@@ -254,7 +257,7 @@ object StreamAgg {
     * table, exactly as e08 reads the published artifact. */
   def pqCodeStream(spark: SparkSession, dir: String): DataFrame = {
     val embStream = graft.model.Conform("embeddings",
-      stagedFileStream(spark, s"$dir/embeddings.parquet"))
+      stagedFileStream(spark, dir, "embeddings"))
     val cb = graft.sources.AnnIndex.collectedCodebooks(spark, dir)
     val codes = embStream.select(
       col("vec_id") +: graft.sources.AnnIndex.pqEncodeColumns(cb): _*)
@@ -273,7 +276,7 @@ object StreamAgg {
     * artifact unchanged. */
   def ivfPqStream(spark: SparkSession, dir: String): DataFrame = {
     val embStream = graft.model.Conform("embeddings",
-      stagedFileStream(spark, s"$dir/embeddings.parquet"))
+      stagedFileStream(spark, dir, "embeddings"))
     val cb = graft.sources.AnnIndex.collectedCodebooks(spark, dir)
     val nb = graft.sources.AnnIndex.nbitsOf(spark, dir)
     val rows = embStream.select(
@@ -302,7 +305,7 @@ object StreamAgg {
     * Completes the lifecycle picture: indexes are MAINTAINED by streams
     * (s08/s11-s14) and now also SERVE streams. */
   def dedupProbeStream(spark: SparkSession, dir: String): DataFrame = {
-    val docsStream = stagedFileStream(spark, s"$dir/documents.parquet")
+    val docsStream = stagedFileStream(spark, dir, "documents")
     val delta = docsStream.where(pmod(col("doc_id"), lit(10)) === 0)
     val hits = graft.sources.TextIndex.streamBands(delta)
       .join(graft.sources.TextIndex.corpusMemberTable(spark, dir), Seq("band", "bkey"))
@@ -333,7 +336,7 @@ object StreamAgg {
     import graft.sources.AnnIndex
     val nb = AnnIndex.nbitsOf(spark, dir)
     val embStream = graft.model.Conform("embeddings",
-      stagedFileStream(spark, s"$dir/embeddings.parquet"))
+      stagedFileStream(spark, dir, "embeddings"))
     val queries = AnnIndex.codeVectors(
         embStream.where(pmod(col("vec_id"), lit(100)) === 0), nb)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvec"),
@@ -384,7 +387,7 @@ object StreamAgg {
     * row-equal to its batch build. Scoring stays batch-side over the
     * accumulated table, exactly as banding reads the signature table. */
   def normsIndexStream(spark: SparkSession, dir: String): DataFrame = {
-    val docsStream = stagedFileStream(spark, s"$dir/documents.parquet")
+    val docsStream = stagedFileStream(spark, dir, "documents")
     val norms = docsStream
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("bigint").as("dl"))
@@ -688,7 +691,10 @@ object StreamAgg {
     * watermark — exactly what a live Kafka deployment of this plan does. */
   def hourlyWatermarked(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val ev0 = graft.model.Conform("events", spark.read.parquet(path))
+    // read with the catalog's schema (no inference job); the split is
+    // written from this frame, so the stream declares its schema too
+    val ev0 = graft.model.Conform("events",
+      spark.read.schema(graft.sources.TestData.fileSchema(spark, dir, "events")).parquet(path))
     // stage-dir key includes the source file's size and mtime so a
     // regenerated input at the same path invalidates the cached split
     val target = java.nio.file.Paths.get(path).toAbsolutePath
@@ -723,8 +729,7 @@ object StreamAgg {
       pinMtime("p2", t0 - 60000)
       java.nio.file.Files.createFile(split.resolve("_done"))
     }
-    val schema = spark.read.parquet(split.resolve("p1").toString).schema
-    val stream = spark.readStream.schema(schema)
+    val stream = spark.readStream.schema(ev0.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(split.toString + "/p*")
     val agg = hourlyAppend(spark, stream)

@@ -37,6 +37,25 @@ class CodegenCacheSpec extends SparkSpec {
     assert(second < first * 0.05, s"first pass compiled $first classes, second pass $second")
   }
 
+  it("a stream replay served a second time compiles nothing") {
+    // every stream runs in a clone of the session: with Spark's per-session
+    // artifact isolation on, each clone's tasks load under a new class loader
+    // and recompile classes the cache holds for another loader
+    assert(spark.conf.get(GraftExtensions.ArtifactIsolationKey) == "false")
+    val seconds = Seq("s01_stream_daily_buckets", "s13_stream_norms_index").map { name =>
+      def call(): Long = {
+        val c0 = RowCount.codegenCompiles()
+        SparkEntry.queries(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        RowCount.codegenCompiles() - c0
+      }
+      val first = call()
+      val second = call()
+      info(s"$name compiles: first call $first, second call $second")
+      name -> second
+    }
+    assert(seconds.forall(_._2 == 0), s"second-call compiles: $seconds")
+  }
+
   it("the default leaves a value the caller set") {
     val set = mutable.Map(key -> "64")
     GraftExtensions.defaultCodegenCache(set)
