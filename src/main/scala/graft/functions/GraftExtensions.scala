@@ -30,7 +30,7 @@ object MinHashDefaults {
  *    [[graft.plans.FirstStructPruningRule]] and
  *    [[graft.plans.EagerCountAggregation]] (Spark's
  *    `spark.sql.optimizer.excludedRules` turns any of them off by class
- *    name; the opt-in [[graft.plans.MetadataCountRule]] is not injected);
+ *    name);
  *  - the AQE query-stage preparation rule [[graft.plans.OneTaskPlan]]:
  *    a plan whose scans are all single-split runs as one task.
  *

@@ -202,22 +202,7 @@ object AnnIndex {
     // stored index built at a different width (for one derivation the
     // value is digest-stable).
     val nb = nbitsOf(s, dir)
-    val sweeps = () => {
-      // the nb-suffixed family name replaced the bare-digest one when the
-      // quantizer width became part of the index identity — age out
-      // artifacts stranded under the old names (digest-only: 16 hex
-      // chars where the current names carry the decimal nb first; no
-      // other family in the root starts with graft_ivf_idx_)
-      ArtifactStore.sweepLegacyNames(s, "graft_ivf_idx_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
-      // the ivfidx→ivfidx2 TAG bump (pre-repartition small-file layouts)
-      // kept the prefix and changed the digest, so the stranded old-tag
-      // index of THIS source sits under a name this release can compute
-      // exactly — delete it after mere pointer idleness instead of
-      // letting a full-size index double the root's disk for the 7-day
-      // orphan horizon
-      ArtifactStore.sweepSupersededFamily(s, s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx")}")
-    }
-    ArtifactStore.reader(s, s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}", sweeps) { path =>
+    ArtifactStore.reader(s, s"graft_ivf_idx_${nb}_${embDigest(s, dir, "ivfidx2")}") { path =>
       // repartition BY the partition column before the partitioned
       // write: without it every write task emits one file into every
       // code directory it holds rows for — tasks × 2^nbits tiny files
@@ -409,11 +394,7 @@ object AnnIndex {
   /** e13's stored OLD-corpus coded index (see the e13 entry for the
     * lifecycle story): coded at the frozen width, partitioned by code. */
   private[graft] def annOldIndex(s: SparkSession, dir: String, nbOld: Int): DataFrame =
-    // annold→annold2 tag bump: see partitionedIndex — reclaim the
-    // computable old-tag family without waiting the orphan horizon
-    ArtifactStore.reader(s, s"graft_annold_${nbOld}_${embDigest(s, dir, "annold2")}",
-        () => ArtifactStore.sweepSupersededFamily(s,
-            s"graft_annold_${nbOld}_${embDigest(s, dir, "annold")}")) { path =>
+    ArtifactStore.reader(s, s"graft_annold_${nbOld}_${embDigest(s, dir, "annold2")}") { path =>
       codeVectors(emb(s, dir).where(pmod(col("vec_id"), lit(10)) =!= 0), nbOld)
         .repartition(col("code")) // one file per code dir, see partitionedIndex
         .write.mode("overwrite").partitionBy("code").parquet(path)
@@ -423,10 +404,7 @@ object AnnIndex {
     * computed from the delta vectors only (the frozen-quantizer
     * add()-path; delta-proportional build cost). */
   private[graft] def annRolledIndex(s: SparkSession, dir: String, nbOld: Int): DataFrame =
-    // annroll→annroll2 tag bump: see partitionedIndex
-    ArtifactStore.reader(s, s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll2")}",
-        () => ArtifactStore.sweepSupersededFamily(s,
-            s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll")}")) { path =>
+    ArtifactStore.reader(s, s"graft_annroll_${nbOld}_${embDigest(s, dir, "annroll2")}") { path =>
       // the artifact's partition column reads back as the narrowest
       // inferred type — normalize to the coder's LONG before union
       annOldIndex(s, dir, nbOld)

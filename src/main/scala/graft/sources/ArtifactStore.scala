@@ -29,11 +29,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * delete+rename, whose window a reader survives by rebuilding.
  *
  * Competing builds of one digest produce equivalent content (same source
- * bytes), so WHICHEVER pointer commit lands is valid; unreferenced
- * versions and crashed committers' tmp files age out once older than the
- * stale horizon. Any unreadable pointer — missing, torn (no newline
- * terminator), or naming a dir without Spark's _SUCCESS marker — reads
- * as "no live artifact" and self-heals via a rebuild.
+ * bytes), so WHICHEVER pointer commit lands is valid. Any unreadable
+ * pointer — missing, torn (no newline terminator), or naming a dir
+ * without Spark's _SUCCESS marker — reads as "no live artifact" and
+ * self-heals via a rebuild.
+ *
+ * Cleanup has one rule, run by every [[getOrBuild]]: unreferenced
+ * versions of the same name and crashed committers' tmp pointers age
+ * out after the stale horizon, and sibling digests of the same family
+ * (same digest-free prefix) age out after [[OrphanMs]] of pointer
+ * idleness. A family whose prefix no current name shares is never
+ * swept; a root holding such names is cleaned by removing it.
  */
 object ArtifactStore {
   import org.apache.hadoop.fs.Path
@@ -94,8 +100,7 @@ object ArtifactStore {
 
   /** Null-safe globStatus: some Hadoop FS implementations return null
     * (rather than an empty array) when the glob matches nothing — a bare
-    * .foreach would NPE and escape the IOException-only catches around
-    * the sweep paths. ONE guard for every glob site in this object. */
+    * .foreach would NPE. ONE guard for every glob site in this object. */
   private def glob(fs: org.apache.hadoop.fs.FileSystem, pattern: Path)
       : Seq[org.apache.hadoop.fs.FileStatus] =
     Option(fs.globStatus(pattern)).map(_.toSeq).getOrElse(Seq.empty)
@@ -122,8 +127,8 @@ object ArtifactStore {
     * same-digest orphan version ages out after `spark.graft.artifact
     * .staleMs` (10 min), and a DEAD DIGEST — source data regenerated, so
     * its pointer is never resolved again — ages out with its versions
-    * after `spark.graft.artifact.orphanMs` (7 days), so the root stays
-    * bounded across data regenerations without a manual sweep. */
+    * after [[OrphanMs]] (7 days), so the root stays bounded across data
+    * regenerations without a manual sweep. */
   // Default root is a PER-USER subdirectory of tmpdir, created with
   // owner-only permissions: the artifact trust model is "whoever can
   // write the root can poison the index" (the digest covers path+
@@ -132,112 +137,10 @@ object ArtifactStore {
   // dir that correctness-bearing dedup artifacts would serve. Shared
   // multi-tenant deployments point spark.graft.artifactDir at an ACL'd
   // lake path.
-  // (Artifacts written by releases that defaulted to the BARE tmpdir are
-  // outside this root and not swept — a shared dir is not ours to clean;
-  // remove them with the documented `rm -rf /tmp/graft_*`.)
   private[graft] def resolvedRoot(s: SparkSession): Path =
     new Path(s.conf.get("spark.graft.artifactDir",
       "file:" + System.getProperty("java.io.tmpdir") +
         "/graft-" + System.getProperty("user.name", "anon")))
-
-  /** Collect artifacts stranded under names a PREVIOUS release used (a
-    * family rename changes the digest-free prefix, so the regular sibling
-    * sweep in [[getOrBuild]] never globs the old names again). Deletes
-    * root entries whose full name matches `legacyRegex` and whose mtime
-    * is past the orphan horizon — call it from the renamed family's
-    * builder with a regex that CANNOT match the current names. */
-  def sweepLegacyNames(s: SparkSession, legacyRegex: String): Unit = {
-    val root = resolvedRoot(s)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val orphanMs = s.conf.get("spark.graft.artifact.orphanMs", "604800000").toLong
-    val now = System.currentTimeMillis()
-    val re = legacyRegex.r
-    val matched = fs.listStatus(root)
-      .filter(st => re.pattern.matcher(st.getPath.getName).matches())
-    // a mixed-version deployment may still SERVE the legacy names: an
-    // old-release binary's resolves touch only its pointer, so a version
-    // dir's mtime alone doesn't prove idleness. A family with a FRESH
-    // pointer is live — skip it entirely (same pointer-idleness rule as
-    // the sibling orphan sweep in getOrBuild).
-    val freshFamilies = matched.collect {
-      case st if st.getPath.getName.endsWith(".ptr") &&
-        now - st.getModificationTime <= orphanMs =>
-        st.getPath.getName.stripSuffix(".ptr")
-    }.toSet
-    matched.foreach { st =>
-      val name = st.getPath.getName
-      val family = name.replaceAll("(\\.ptr(\\.tmp\\..*)?|_v_.*)$", "")
-      if (!freshFamilies.contains(family) && now - st.getModificationTime > orphanMs)
-        fs.delete(st.getPath, true)
-    }
-  }
-
-  /** Delete one EXACT family (`<baseName>.ptr` + its versions + tmp
-    * pointers) that this release knows is superseded — a digest-TAG bump
-    * keeps the family prefix but changes the digest, so the stranded
-    * old-tag family sits under the same prefix as live siblings and the
-    * generic prefix sweep rightly waits the full 7-day orphan horizon
-    * before touching it (a different digest usually means a different
-    * LIVE source). When the caller can COMPUTE the dead name (old tag +
-    * current source ⇒ exact superseded digest), certainty replaces the
-    * horizon: delete after pointer idleness of
-    * `spark.graft.artifact.supersededMs` (default 24 h). The horizon is
-    * SESSION-lifetime-scale, not the 10-min stale horizon, because a
-    * still-running old-release session touches the pointer only ONCE
-    * (its [[reader]] stays open for the session's lifetime) —
-    * pointer idleness proves no NEW resolves, not no live readers. A
-    * day bounds the post-upgrade disk duplication at ~1/7th of the
-    * orphan horizon while covering typical session lifetimes; a root
-    * shared with longer-lived old binaries raises the conf to its max
-    * session lifetime. */
-  def sweepSupersededFamily(s: SparkSession, baseName: String): Unit = {
-    val (fs, pfs, root) = rootFs(s)
-    try {
-      if (!fs.exists(root)) return
-      val idleMs = s.conf.get("spark.graft.artifact.supersededMs", "86400000").toLong
-      val now = System.currentTimeMillis()
-      val ptr = new Path(root, s"$baseName.ptr")
-      // any stat failure other than "gone" conservatively reads as live
-      val ptrIdle =
-        try !pfs.exists(ptr) || now - pfs.getFileStatus(ptr).getModificationTime > idleMs
-        catch {
-          case _: java.io.FileNotFoundException => true
-          case _: java.io.IOException => false
-        }
-      if (!ptrIdle) return
-      // second usage signal: the POINTED-TO version dir's mtime (getOrBuild
-      // touches both on every resolve, and an operator can `touch` the dir
-      // to shield a known long-lived old-binary session). Idleness of the
-      // pointer alone proves no new resolves; requiring the live dir idle
-      // too means any independent freshness on the data dir also vetoes.
-      // OPS NOTE (shared roots): an old-binary session resolves ONCE and
-      // holds its reader for the session lifetime, so set
-      // spark.graft.artifact.supersededMs ≥ the max session lifetime on
-      // roots shared with older binaries — idleness cannot observe open
-      // readers, only resolves.
-      val liveDirIdle =
-        try {
-          readLive(fs, pfs, root, ptr) match {
-            case Some(dir) => now - fs.getFileStatus(dir).getModificationTime > idleMs
-            case None => true // no readable live dir — nothing a reader could hold via the pointer
-          }
-        } catch {
-          case _: java.io.FileNotFoundException => true
-          case _: java.io.IOException => false
-        }
-      if (!liveDirIdle) return
-      if (pfs.exists(ptr)) pfs.delete(ptr, false)
-      glob(fs, new Path(root, s"${baseName}_v_*")).foreach { vst =>
-        // version-dir idleness too: a self-served pointerless staging tree
-        // (forward-dated mtime) must survive its grace window
-        if (now - vst.getModificationTime > idleMs) fs.delete(vst.getPath, true)
-      }
-      glob(pfs, new Path(root, s"$baseName.ptr.tmp.*")).foreach { tst =>
-        if (now - tst.getModificationTime > idleMs) pfs.delete(tst.getPath, false)
-      }
-    } catch { case _: java.io.IOException => () }
-  }
 
   /** (data fs, pointer fs, root) for an artifact root — the pointer fs is
     * the RAW filesystem when the root is checksummed (see the protocol
@@ -302,11 +205,10 @@ object ArtifactStore {
 
   /** The session's reader of the stored artifact `baseName` — the ONE
     * place a resolved artifact is remembered. The first call per
-    * (session, qualified resolved root, `baseName`) runs `beforeResolve`
-    * (a family's pre-resolve sweeps) and then [[getOrBuild]]; later calls
-    * return the same DataFrame. Readers stay open for the session's
-    * lifetime on purpose: each is a bare parquet plan pinning zero
-    * executor memory, and re-resolving one costs ~0.14 s of pointer/
+    * (session, qualified resolved root, `baseName`) runs [[getOrBuild]];
+    * later calls return the same DataFrame. Readers stay open for the
+    * session's lifetime on purpose: each is a bare parquet plan pinning
+    * zero executor memory, and re-resolving one costs ~0.14 s of pointer/
     * footer/GC-sweep I/O (measured on d27's re-run slot, r13). The key is
     * the artifact's identity (source digest and derived widths are in
     * `baseName`), so regenerated source data or a re-pointed root
@@ -314,9 +216,7 @@ object ArtifactStore {
     * (and, under [[resolveOnly]], probed) BEFORE the memo lookup, so the
     * warm- and seam-coverage gates see hits too. A holder that failed
     * resolves again on the next call. */
-  def reader(s: SparkSession, baseName: String,
-             beforeResolve: () => Unit = () => ())
-            (write: String => Unit): DataFrame = {
+  def reader(s: SparkSession, baseName: String)(write: String => Unit): DataFrame = {
     publishedNames.add(baseName)
     recordTouch(baseName)
     if (resolveOnlyTL.get) probedNames.add(baseName)
@@ -329,10 +229,15 @@ object ArtifactStore {
         if (!resolveOnlyTL.get) write
         else if (isLive(s, baseName)) _ => throw new NotLive(baseName)
         else throw new NotLive(baseName)
-      beforeResolve()
       getOrBuild(s, baseName)(build)
     }
   }
+
+  /** How long a sibling digest's pointer must go unused before the
+    * dead-digest sweep in [[getOrBuild]] collects it: generous, because a
+    * pointer for a different-but-live source (another SF's corpus) must
+    * survive, and its own resolves keep touching it. */
+  private final val OrphanMs = 7L * 24 * 60 * 60 * 1000
 
   /** Resolve-or-build without memoizing — every call re-reads the
     * pointer and runs the GC sweeps. Query code goes through [[reader]]. */
@@ -452,11 +357,7 @@ object ArtifactStore {
     // its new size/mtime yields a new digest and the old digest's pointer
     // + versions are never resolved again — without this they accumulate
     // forever. Sweep SIBLING digests of this artifact family (same
-    // digest-free prefix) whose pointer hasn't been USED for the orphan
-    // horizon (default 7 days — generous because a pointer for a
-    // different-but-live source dir, e.g. another SF's corpus, must
-    // survive; its own resolves keep touching it).
-    val orphanMs = s.conf.get("spark.graft.artifact.orphanMs", "604800000").toLong
+    // digest-free prefix) whose pointer hasn't been USED for OrphanMs.
     val prefix = baseName.replaceAll("_[0-9a-f]{16}$", "")
     if (prefix != baseName) {
       val now = System.currentTimeMillis()
@@ -472,8 +373,8 @@ object ArtifactStore {
         // collected out from under its long-lived cached reader. A
         // pointer that vanished since the listing (another GC won) stays
         // "dead"; any other stat failure conservatively reads as live.
-        val dead = now - pst.getModificationTime > orphanMs && {
-          try now - pfs.getFileStatus(pst.getPath).getModificationTime > orphanMs
+        val dead = now - pst.getModificationTime > OrphanMs && {
+          try now - pfs.getFileStatus(pst.getPath).getModificationTime > OrphanMs
           catch {
             case _: java.io.FileNotFoundException => true
             case _: java.io.IOException => false
@@ -502,7 +403,7 @@ object ArtifactStore {
         if (!livePointees.contains(vname) &&
             vname != target.getName &&
             !protectedFamilies.exists(f => vname.startsWith(s"${f}_v_")) &&
-            now - vst.getModificationTime > orphanMs)
+            now - vst.getModificationTime > OrphanMs)
           fs.delete(vst.getPath, true)
       }
     }

@@ -495,11 +495,14 @@ object StreamAgg {
       val rootPath = new org.apache.hadoop.fs.Path(s"$base/state")
       val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
       var version = 0L
+      // every version holds exactly these types (the union with the
+      // BIGINT seed widens user_id, cnt is cast), so each read declares
+      // the schema instead of running an inference job
+      val stateSchema = org.apache.spark.sql.types.StructType.fromDDL(
+        "user_id BIGINT, event_type STRING, cnt BIGINT")
+      def readVersion(v: Long) = spark.read.schema(stateSchema).parquet(versionPath(v))
       // seed: empty state (version 0)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "user_id BIGINT, event_type STRING, cnt BIGINT"))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
         .write.mode("overwrite").parquet(versionPath(0))
       ev.writeStream
         .option("checkpointLocation", s"$base/ckpt")
@@ -513,7 +516,7 @@ object StreamAgg {
           if (!fs.exists(marker)) {
             val incoming = batch.groupBy(col("user_id"), col("event_type"))
               .agg(count(lit(1)).as("cnt"))
-            val merged = spark.read.parquet(versionPath(version))
+            val merged = readVersion(version)
               .unionByName(incoming)
               .groupBy(col("user_id"), col("event_type"))
               .agg(sum(col("cnt")).cast("bigint").as("cnt"))
@@ -528,7 +531,7 @@ object StreamAgg {
       // materialize the final state (localCheckpoint is eager) before the
       // scratch goes; the sort stays lazily on top of the checkpointed
       // blocks
-      spark.read.parquet(versionPath(version)).localCheckpoint()
+      readVersion(version).localCheckpoint()
         .orderBy("user_id", "event_type")
     }
   }
@@ -540,7 +543,8 @@ object StreamAgg {
     * batch, picking up slowly-changing updates for free. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = stagedEventsStream(spark, dir)
-    val cust = spark.read.parquet(s"$dir/customer.parquet")
+    val cust = spark.read.schema(graft.sources.TestData.fileSchema(spark, dir, "customer"))
+      .parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
     val joined = ev.join(broadcast(cust), col("user_id") === col("c_custkey"))
       .select(col("event_id"), col("c_mktsegment"))

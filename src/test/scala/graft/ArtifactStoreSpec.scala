@@ -161,7 +161,6 @@ class ArtifactStoreSpec extends SparkSpec {
         val deadV = new java.io.File(root).listFiles()
           .filter(f => f.isDirectory && f.getName.startsWith(s"${dead}_v_"))
         (deadPtr +: deadV.toSeq).foreach(f => assert(f.setLastModified(1000L)))
-        s.conf.set("spark.graft.artifact.orphanMs", "60000")
         // any same-family resolve runs the sweep
         assert(ArtifactStore.getOrBuild(s, live)(writeRange(s, 7)).count() == 7)
         assert(!deadPtr.exists(), "dead digest's pointer not collected")
@@ -211,90 +210,11 @@ class ArtifactStoreSpec extends SparkSpec {
         val ptr = new java.io.File(root, s"$live.ptr")
         val ptrBytes = java.nio.file.Files.readAllBytes(ptr.toPath)
         assert(ptr.delete())
-        s.conf.set("spark.graft.artifact.orphanMs", "60000")
         assert(ArtifactStore.getOrBuild(s, other)(writeRange(s, 6)).count() == 6)
         assert(liveV.forall(_.exists()),
           "sweep collected a recently-used version during its pointer's commit window")
         java.nio.file.Files.write(ptr.toPath, ptrBytes)
         assert(ArtifactStore.getOrBuild(s, live)(writeRange(s, 4)).count() == 4)
-      }
-    }
-
-    it("sweepLegacyNames ages out a renamed family's old names and nothing else") {
-      withScratchDir("graft_as_legacy") { root =>
-        val s = session(root)
-        val current = "ren_9_" + "f" * 16
-        ArtifactStore.getOrBuild(s, current)(writeRange(s, 5))
-        // plant a legacy-named pointer + version dir (digest-only form)
-        val legacyBase = "ren_" + "a" * 16
-        val legacyV = new java.io.File(root, s"${legacyBase}_v_deadbeef")
-        assert(legacyV.mkdir())
-        val legacyPtr = new java.io.File(root, s"$legacyBase.ptr")
-        java.nio.file.Files.write(legacyPtr.toPath, s"${legacyBase}_v_deadbeef\n".getBytes)
-        Seq(legacyV, legacyPtr).foreach(f => assert(f.setLastModified(1000L)))
-        s.conf.set("spark.graft.artifact.orphanMs", "60000")
-        ArtifactStore.sweepLegacyNames(s, "ren_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
-        assert(!legacyPtr.exists() && !legacyV.exists(), "legacy names not collected")
-        // the current family (nb-prefixed) does not match the regex
-        assert(new java.io.File(root, s"$current.ptr").exists())
-        assert(ArtifactStore.getOrBuild(s, current)(writeRange(s, 5)).count() == 5)
-      }
-    }
-
-    it("sweepLegacyNames spares a legacy family an old-release process still serves (fresh pointer)") {
-      withScratchDir("graft_as_legacy2") { root =>
-        val s = session(root)
-        // old-release usage pattern: resolves touch only the POINTER, the
-        // version dir's mtime stays at build time — a fresh pointer must
-        // protect the whole family
-        val servedBase = "rn2_" + "b" * 16
-        val servedV = new java.io.File(root, s"${servedBase}_v_cafe0001")
-        assert(servedV.mkdir())
-        val servedPtr = new java.io.File(root, s"$servedBase.ptr")
-        java.nio.file.Files.write(servedPtr.toPath, s"${servedBase}_v_cafe0001\n".getBytes)
-        assert(servedV.setLastModified(1000L)) // dir old; pointer fresh
-        s.conf.set("spark.graft.artifact.orphanMs", "60000")
-        ArtifactStore.sweepLegacyNames(s, "rn2_[0-9a-f]{16}(\\.ptr(\\.tmp\\..*)?|_v_.*)")
-        assert(servedV.exists() && servedPtr.exists(),
-          "sweep collected a family whose pointer is still being used")
-      }
-    }
-
-    it("sweepSupersededFamily deletes an idle old-tag family in minutes, sparing same-prefix siblings") {
-      // the tag-bump case: old tag + current source ⇒ a computable dead
-      // digest under the SAME prefix as live siblings — certainty replaces
-      // the 7-day orphan horizon, guarded only by short pointer idleness
-      withScratchDir("graft_as_supers") { root =>
-        val s = session(root)
-        val dead = "sup_7_" + "a" * 16
-        val sibling = "sup_7_" + "b" * 16
-        ArtifactStore.getOrBuild(s, dead)(writeRange(s, 5))
-        ArtifactStore.getOrBuild(s, sibling)(writeRange(s, 6))
-        val deadPtr = new java.io.File(root, s"$dead.ptr")
-        val deadV = new java.io.File(root).listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith(s"${dead}_v_"))
-        (deadPtr +: deadV.toSeq).foreach(f => assert(f.setLastModified(1000L)))
-        s.conf.set("spark.graft.artifact.supersededMs", "60000")
-        ArtifactStore.sweepSupersededFamily(s, dead)
-        assert(!deadPtr.exists(), "superseded pointer not collected")
-        assert(deadV.forall(!_.exists()), "superseded versions not collected")
-        // the live same-prefix sibling is untouched (exact-name sweep)
-        assert(new java.io.File(root, s"$sibling.ptr").exists())
-        assert(ArtifactStore.getOrBuild(s, sibling)(writeRange(s, 6)).count() == 6)
-      }
-    }
-
-    it("sweepSupersededFamily spares a family an old-release binary still resolves (fresh pointer)") {
-      withScratchDir("graft_as_supers2") { root =>
-        val s = session(root)
-        val served = "sup_8_" + "c" * 16
-        ArtifactStore.getOrBuild(s, served)(writeRange(s, 4))
-        // pointer mtime is now-fresh (just resolved) — mixed-version guard
-        s.conf.set("spark.graft.artifact.supersededMs", "60000")
-        ArtifactStore.sweepSupersededFamily(s, served)
-        assert(new java.io.File(root, s"$served.ptr").exists(),
-          "sweep collected a family whose pointer is still being used")
-        assert(ArtifactStore.getOrBuild(s, served)(writeRange(s, 4)).count() == 4)
       }
     }
 

@@ -118,6 +118,30 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch)
   }
 
+  it("s05 and s07 declare their batch-side parquet schemas: no inference job") {
+    // a bare spark.read.parquet runs a schema-inference job on every call:
+    // a job outside any SQL execution whose stages are named for the
+    // reading line (a parquet write runs inside one). Declared reads run
+    // none. A job started inside foreachBatch is named for the stream's
+    // `start` line instead, so this sees the reads on the calling thread.
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.sql.execution.id") == null)
+          e.stageInfos.foreach(st => sites.add(st.name))
+    }
+    val sfDir = "/root/testdata/sf0.001"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(StreamAgg.streamStaticJoin(spark, sfDir).collect().nonEmpty)
+      assert(StreamAgg.foreachBatchUpsert(spark, sfDir).collect().nonEmpty)
+      org.apache.spark.sql.GraftBridge.drainListeners(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val inferred = sites.asScala.filter(_.startsWith("parquet at StreamAgg.scala:"))
+    assert(inferred.isEmpty, s"schema-inference jobs: ${inferred.mkString(", ")}")
+  }
+
   /** Drive a plan through a MemoryStream for `chunks` micro-batches of
     * time-advancing events and return each non-empty batch's total state
     * rows (`StreamingQueryProgress.stateOperators.numRowsTotal` summed
